@@ -533,10 +533,11 @@ object Bench {
          |with host weather; a pure-CPU 32-thread spin scales 35x on this
          |box, so the ceiling is not the engine. On a real N vs 4N EXECUTOR
          |cluster each executor brings its own memory bus + local disks +
-         |kernel — the regime the >=0.8 target describes. The engine adds
-         |no serial stage per batch: dedup is a hash aggregation with
-         |map-side combine, the delta write is bucket-partitioned, commits
-         |are O(#files) driver metadata.
+         |kernel — the regime the >=0.8 target describes. The only serial
+         |part of a batch is its read when the batch is a single split; a
+         |trigger of several files reads in parallel. The batch crosses one
+         |bucket exchange, the dedup window and the delta write share its
+         |sort, commits are O(#files) driver metadata.
          |
          |Standalone-cluster control (run 2026-08-16 during round 1, via a
          |real spark standalone master + taskset-pinned worker JVMs on this

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.lake.{CommitInfo, FileEntry, LakeTable, Manifest, SchemaEntry, SchemaReconciler}
 import graft.model.Schemas._
 
@@ -13,9 +13,10 @@ import graft.model.Schemas._
   * table. Two physical strategies, both LSN-gated and replay-idempotent:
   *
   *  - **MergeOnRead** (default, write-optimized — the 10^10-events/day
-  *    path): dedup the batch by max LSN, append it as per-bucket DELTA
-  *    files, commit. O(batch) work per micro-batch, no join against the
-  *    table. Readers resolve per-key max LSN across base+deltas;
+  *    path): route the raw batch by bucket in ONE exchange, dedup it by
+  *    max LSN in a window whose sort is also the writer's sort, append it
+  *    as per-bucket DELTA files, commit. O(batch) work per micro-batch, no
+  *    join against the table. Readers resolve per-key max LSN across base+deltas;
   *    [[Compactor]] folds deltas back into base files when they pile up
   *    (amortized O(bucket)).
   *  - **CopyOnWrite** (read-optimized): full-outer join the deduped batch
@@ -47,44 +48,24 @@ object CdcMerge {
       affectedBuckets: Int, wallMs: Long, effEpoch: Long = -1L)
 
   /** Keep the latest change per key within the batch:
-    * `row_number() over (partition by key order by lsn desc) = 1`.
-    * Duplicate deliveries of the same (key, lsn) collapse to one row.
+    * `row_number() over (partition by key order by lsn desc, op desc) = 1`.
+    * Duplicate deliveries of the same (key, lsn) collapse to one row. The
+    * `op desc` tie-break makes two ops at one (key, lsn) — possible from
+    * the SQL MERGE surface, which accepts arbitrary sources — resolve the
+    * same way on every replay and under both modes.
+    *
+    * `by` is the window's partition: the key columns, optionally with
+    * columns that are functions of the key (merge-on-read adds its routing
+    * columns so that the exchange that routed the batch already satisfies
+    * the window). Its order is the window sort's order.
     */
-  def dedupMaxLsn(batch: DataFrame): DataFrame = {
-    val w = Window.partitionBy(KEY_COLS.map(col): _*)
+  def dedupMaxLsn(batch: DataFrame, by: Seq[String] = KEY_COLS): DataFrame = {
+    require(KEY_COLS.forall(by.contains), s"dedup partition $by lacks a key column")
+    val w = Window.partitionBy(by.map(col): _*)
       .orderBy(col("lsn").desc, col("op").desc)
     batch.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")
-  }
-
-  /** Same max-LSN-per-key semantics as [[dedupMaxLsn]], but as a hash
-    * aggregation (`max_by(struct(*), struct(lsn, op))`): partial
-    * aggregation combines duplicate keys map-side BEFORE the shuffle, so
-    * the exchange carries only surviving rows — the hot-path choice for
-    * merge-on-read. The ordering key is (lsn, op), matching the window
-    * form's `lsn desc, op desc` tie-break EXACTLY: the synthetic WAL only
-    * ever ties on identical duplicate deliveries, but the SQL MERGE
-    * surface accepts arbitrary sources — two ops at one (key, lsn) must
-    * resolve identically under MOR and CoW, and identically across
-    * replays, or reconvergence breaks.
-    */
-  def dedupMaxLsnAgg(batch: DataFrame): DataFrame = {
-    val all = struct(batch.columns.map(col).toIndexedSeq: _*)
-    batch.groupBy(KEY_COLS.map(col): _*)
-      .agg(max_by(all, struct(col("lsn"), col("op"))).as("__r"))
-      .select(col("__r.*"))
-  }
-
-  private val trace = sys.env.contains("GRAFT_TRACE")
-  @inline private def traced[T](label: String)(f: => T): T = {
-    if (!trace) f
-    else {
-      val t = System.nanoTime()
-      val r = f
-      System.err.println(f"[merge-trace] $label: ${(System.nanoTime() - t) / 1e9}%.2fs")
-      r
-    }
   }
 
   def apply(table: LakeTable, batch: DataFrame, epoch: Long,
@@ -126,17 +107,16 @@ object CdcMerge {
         (m.schemas :+ SchemaEntry(id, newUser.toDDL), id)
       } else (m.schemas, m.currentSchemaId)
 
-    // ---- dedup + align to physical shape ----
-    val deduped = mode match {
-      case MergeOnRead => dedupMaxLsnAgg(batch) // map-side partial combine
-      case CopyOnWrite => dedupMaxLsn(batch)    // the canonical window form
-    }
+    // ---- deduped rows → physical shape ----
+    // merge-on-read passes a `target` that keeps its routed `bucket`
+    // column: a recomputed one would be a new attribute, and the plan
+    // would sort again for the writer
     val physTarget = physical(newUser)
-    val asPhysical = LakeTable.alignTo(
+    def toPhysical(deduped: DataFrame, target: StructType): DataFrame = LakeTable.alignTo(
       deduped
         .withColumn(LSN_COL, col("lsn"))
         .withColumn(DELETED_COL, col("op") === "D"),
-      physTarget)
+      target)
 
     // Unique per attempt: a second writer racing on the same effEpoch (e.g.
     // streaming writer + SQL MERGE on one table) must not share — and
@@ -150,40 +130,56 @@ object CdcMerge {
 
     val (newFiles, carried, affected) = mode match {
       case MergeOnRead =>
-        // O(batch): write deduped rows as per-bucket DELTA files.
-        // ADAPTIVE salting: one writer task per bucket keeps file count at
-        // ~1 file/bucket/batch, but a bucket holding a hot conversation
-        // (Zipf head) would straggle — so buckets whose PREVIOUS batch
+        // O(batch): write deduped rows as per-bucket DELTA files, with ONE
+        // exchange. The RAW batch is routed by bucket; the max-LSN window
+        // runs after that exchange, partitioned by (bucket, key[, salt]) so
+        // the routing already satisfies it, and its sort (bucket, key, …)
+        // is also the writer's sort: one Exchange, one Sort. No map-side
+        // combine: at one WAL file per trigger a batch is one Parquet row
+        // group, so one split, and a combine would run on ONE task (~0.9 s
+        // of a 1.2 s stage at 256k events, 4 cores). At 4 files per trigger
+        // it would run on 4, yet shuffling raw rows still applied batches
+        // ~20% faster there (BenchProbe, 4 cores). Writer tasks number the
+        // session's shuffle parallelism, not the buckets: each task costs
+        // ~34 ms fixed, against ~140 KB of output per bucket at 32 buckets.
+        // A cold bucket hashes to exactly one task, so it still gets one
+        // delta file per batch.
+        // ADAPTIVE salting: a bucket holding a hot conversation (Zipf head)
+        // would straggle in its one task — so buckets whose PREVIOUS batch
         // share exceeded 2x fair share are split across `saltBuckets`
-        // tasks on hash(turn_idx). Detection is free: per-bucket row
-        // counts of the last delta epoch live in the manifest (one-batch
-        // lag is fine for steady streams, and avoids a counting job +
-        // full-batch persist).
+        // routing keys on hash(turn_idx), each adding saltBuckets-1 writer
+        // tasks. Detection is free: per-bucket row counts of the last delta
+        // epoch live in the manifest (one-batch lag is fine for steady
+        // streams, and avoids a counting job + full-batch persist).
         val lastDeltas = m.files.filter(f =>
           f.kind == FileEntry.DELTA && f.epoch == m.lastEpoch)
         val counts = lastDeltas.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum).toMap
         val fair = math.max(1L, counts.values.sum / math.max(1, m.numBuckets))
-        val hot = counts.filter(_._2 > 2 * fair).keys.toSeq
-        val saltExpr =
-          if (hot.isEmpty || saltBuckets <= 1) lit(0L)
-          else when(col("bucket").isin(hot: _*),
-            pmod(xxhash64(col("turn_idx")), lit(saltBuckets.toLong))).otherwise(lit(0L))
-        val nParts = math.max(spark.sessionState.conf.numShufflePartitions,
-          math.min(m.numBuckets + hot.size * (saltBuckets - 1), 4096))
-        // sort within writer tasks: tight per-file (conv_id) ranges for
+        val hot = if (saltBuckets <= 1) Nil else counts.filter(_._2 > 2 * fair).keys.toSeq
+        val keyed = batch.withColumn("bucket", table.bucketExpr(m.numBuckets))
+        // No hot bucket → route by bucket alone: a literal-0 salt would be
+        // folded out of the window partition, which the routing would then
+        // no longer satisfy (a second exchange).
+        val (routed, route) =
+          if (hot.isEmpty) (keyed, Seq("bucket"))
+          else (keyed.withColumn("_salt", when(col("bucket").isin(hot: _*),
+            pmod(xxhash64(col("turn_idx")), lit(saltBuckets.toLong))).otherwise(lit(0L))),
+            Seq("bucket", "_salt"))
+        val nParts = math.min(
+          spark.sessionState.conf.numShufflePartitions + hot.size * (saltBuckets - 1), 4096)
+        val deduped = dedupMaxLsn(routed.repartition(nParts, route.map(col): _*),
+          ("bucket" +: KEY_COLS) ++ route.tail)
+        // sorted within writer tasks (the window's order already, so no
+        // extra Sort is planned): tight per-file conv_id ranges for
         // file-level pruning + better parquet encoding
-        val salted = asPhysical
-          .withColumn("bucket", table.bucketExpr(m.numBuckets))
-          .repartition(nParts, col("bucket"), saltExpr)
+        toPhysical(deduped, physTarget.add("bucket", IntegerType))
           .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-        traced("delta-write")(
-          salted.write.mode("overwrite").partitionBy("bucket").parquet(staging.toString))
-        val files = traced("adopt-staged")(
-          adoptStaged(table, spark, staging, effEpoch, schemaId2, FileEntry.DELTA, physTarget))
+          .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
+        val files = adoptStaged(table, spark, staging, effEpoch, schemaId2, FileEntry.DELTA, physTarget)
         (files, m.files, files.map(_.bucket).toSet)
 
       case CopyOnWrite =>
-        val bucketed = asPhysical
+        val bucketed = toPhysical(dedupMaxLsn(batch), physTarget)
           .withColumn("bucket", table.bucketExpr(m.numBuckets))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val aff0 = bucketed.select("bucket").distinct().collect().map(_.getInt(0)).toSet

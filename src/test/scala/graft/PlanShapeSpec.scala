@@ -1,14 +1,22 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.merge.CdcMerge
 
 /** Physical-plan-shape assertions for the headline paths — the plans must
   * stay the ones you'd want at 100 TB, not just produce correct rows:
   * filters reach the parquet scan, projections prune the read schema,
-  * small joins broadcast, and the merge-on-read dedup combines map-side.
+  * small joins broadcast, and the merge-on-read apply shuffles once.
   */
 class PlanShapeSpec extends SparkSpec {
+
+  private object Aqe extends AdaptiveSparkPlanHelper
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -35,20 +43,54 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("SortMergeJoin"), "small-dim join must not sort-merge")
   }
 
-  test("merge-on-read dedup aggregates map-side before the exchange") {
-    import spark.implicits._
-    val batch = (0 until 1000).map(i =>
-      ("c" + (i % 50), i % 20, "U", i.toLong, "role", "text", "tool",
-        new java.sql.Timestamp(i.toLong)))
-      .toDF("conv_id", "turn_idx", "op", "lsn", "role", "text", "tool", "ts")
-      .repartition(4)
-    val deduped = CdcMerge.dedupMaxLsnAgg(batch)
-    deduped.collect()
-    val plan = deduped.queryExecution.executedPlan.toString
-    // partial max_by before the shuffle, final after — map-side combine
-    assert("HashAggregate.*partial_max_by".r.findFirstIn(plan).isDefined ||
-      plan.contains("partial_max_by"), plan.take(3000))
-    assert(plan.contains("Exchange hashpartitioning(conv_id"), plan.take(3000))
+  /** The physical plan of the one parquet write `apply` runs, as a
+    * `QueryExecutionListener` sees it (listener events arrive off-thread).
+    */
+  private def writePlanOf(apply: => Unit): SparkPlan = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (Aqe.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          seen.put(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      apply
+      val plan = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(plan != null, "no write plan reached the listener")
+      plan
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("merge-on-read apply shuffles the raw batch once and dedups after the exchange") {
+    val dir = tmpDir("planshape-mor")
+    try {
+      val t = graft.lake.LakeTable.create(spark, s"$dir/t",
+        graft.model.Schemas.transcript, numBuckets = 8)
+      val ts = new java.sql.Timestamp(1700000000000L)
+      // one conversation takes ~60% of the events, so the first batch's
+      // per-bucket stats flag its bucket as hot for the second batch
+      def batch(lsnBase: Long) = spark.range(4000).select(
+        lit("U").as("op"), (col("id") + lsnBase).as("lsn"),
+        when(col("id") % 10 < 6, "conv-hot")
+          .otherwise(concat(lit("conv"), pmod(col("id"), lit(40)))).as("conv_id"),
+        pmod(col("id"), lit(1500)).cast("int").as("turn_idx"),
+        lit("user").as("role"), lit("x").as("text"),
+        lit(null).cast("string").as("tool"), lit(ts).as("ts"))
+      for ((epoch, salted) <- Seq(0L -> false, 1L -> true)) {
+        val plan = writePlanOf(CdcMerge.apply(t, batch(epoch * 100000), epoch, saltBuckets = 4))
+        val exchanges = Aqe.collect(plan) { case e: ShuffleExchangeLike => e }
+        val aggs = Aqe.collect(plan) { case a: BaseAggregateExec => a }
+        val sorts = Aqe.collect(plan) { case s: SortExec => s }
+        val shown = s"epoch $epoch:\n${plan.treeString.take(4000)}"
+        assert(exchanges.size == 1, s"expected exactly one exchange, $shown")
+        assert(aggs.isEmpty, s"dedup must not aggregate, $shown")
+        assert(sorts.size == 1, s"the window's sort must serve the writer, $shown")
+        assert(exchanges.head.outputPartitioning.toString.contains("_salt") == salted,
+          s"salted routing expected only once a bucket is hot, $shown")
+      }
+    } finally rmrf(dir)
   }
 
   test("snapshot of an all-BASE table has no shuffle at all") {

@@ -71,9 +71,15 @@ class ResilienceSpec extends SparkSpec {
   }
 
   test("adaptive salting splits a hot conversation's bucket across writers") {
+    // 32 buckets: fewer writer tasks (the session's 4 shuffle partitions)
+    // than buckets, so each task writes several buckets
+    for (numBuckets <- Seq(4, 32)) saltingSplitsHotBucket(numBuckets)
+  }
+
+  private def saltingSplitsHotBucket(numBuckets: Int): Unit = {
     val dir = tmpDir("hot")
     try {
-      val table = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets = 4)
+      val table = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets)
       val ts = new java.sql.Timestamp(1700000000000L)
       // one conversation takes ~60% of all events
       def batchDf(lsnBase: Long) = spark.range(10000).select(
@@ -87,17 +93,21 @@ class ResilienceSpec extends SparkSpec {
       // batch 0: no prior stats -> no salting
       CdcMerge.apply(table, batchDf(0), 0L, saltBuckets = 4)
       val hotBucket = spark.range(1).select(
-        pmod(xxhash64(lit("conv-hot")), lit(4L)).cast("int")).collect()(0).getInt(0)
-      val files0 = table.manifest.files.filter(f => f.epoch == 0 && f.bucket == hotBucket)
-      assert(files0.size == 1, s"first batch should be unsalted: $files0")
+        pmod(xxhash64(lit("conv-hot")), lit(numBuckets.toLong)).cast("int")).collect()(0).getInt(0)
+      def filesPerBucket(epoch: Long) = table.manifest.files.filter(_.epoch == epoch)
+        .groupBy(_.bucket).view.mapValues(_.size).toMap
+      val files0 = filesPerBucket(0)
+      assert(files0.values.forall(_ == 1),
+        s"[$numBuckets buckets] first batch should be unsalted, one file per bucket: $files0")
       // batch 1: previous-batch stats flag the hot bucket -> salted writers
       CdcMerge.apply(table, batchDf(1000000), 1L, saltBuckets = 4)
-      val files1 = table.manifest.files.filter(f => f.epoch == 1 && f.bucket == hotBucket)
-      assert(files1.size > 1, s"hot bucket should split across salted writers: $files1")
+      val files1 = filesPerBucket(1)
+      assert(files1(hotBucket) > 1,
+        s"[$numBuckets buckets] hot bucket should split across salted writers: $files1")
       // cold buckets stay single-file
-      val cold1 = table.manifest.files.filter(f => f.epoch == 1 && f.bucket != hotBucket)
-        .groupBy(_.bucket).view.mapValues(_.size)
-      assert(cold1.values.forall(_ == 1), s"cold buckets salted unnecessarily: $cold1")
+      val cold1 = files1 - hotBucket
+      assert(cold1.nonEmpty && cold1.values.forall(_ == 1),
+        s"[$numBuckets buckets] cold buckets salted unnecessarily: $cold1")
     } finally rmrf(dir)
   }
 }
