@@ -98,10 +98,10 @@ final class BucketStore private (val root: Path, spark: SparkSession,
   /** Append a change batch: rows carry the user columns plus a `_deleted`
     * boolean (true = tombstone for that key; payload columns may be null).
     * O(batch) write as DELTA files; the `watermark` commits atomically
-    * with the rows. Caller contract (same as the in-memory stores): at
-    * most one LIVE row per resolve key per append — violations would tie
-    * in the resolve and corrupt state nondeterministically, so refuse
-    * upstream (see IncrementalDedup.requireUniqueKeys).
+    * with the rows. Caller contract: at most one LIVE row per resolve key
+    * per append — violations would tie in the resolve and corrupt state
+    * nondeterministically, so refuse upstream (see
+    * IncrementalDedup.requireUniqueKeys).
     */
   def append(batch: DataFrame, watermark: Long): Unit = pathLock(root).synchronized {
     val m = manifest

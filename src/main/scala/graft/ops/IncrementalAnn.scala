@@ -4,26 +4,20 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import SimilarityOps.cosine
 
-/** Incremental ANN index maintenance — IVF under CDC ingest. [[SimilarityOps.ivfTopK]]
-  * trains, assigns, and probes in one call: right for a static corpus,
-  * O(corpus) per batch under a change stream. The incremental design
-  * splits the index into
+/** IVF quantizer and reference search of incremental ANN maintenance.
+  * [[SimilarityOps.ivfTopK]] trains, assigns, and probes in one call:
+  * right for a static corpus, O(corpus) per batch under a change stream.
+  * The incremental design splits the index into
   *
   *  - a TRAINED QUANTIZER ([[IvfIndex]]): nlist centroids, trained once
-  *    (bounded driver sample + optional corpus-wide refinement) and
-  *    reused across batches — centroids enter every plan as literals;
-  *  - an ASSIGNED STORE (id, cell, vec): per refresh only the CHANGED
-  *    vectors are assigned (one broadcast-argmin pass over O(batch)
-  *    rows), carried rows are untouched;
-  *  - SEARCH: the same nprobe cell equi-join as the batch operator,
-  *    against the maintained store.
-  *
-  * Centroid drift: as the corpus shifts, cells go stale. [[imbalance]]
-  * reports max-cell share over fair share from the store's cell counts
-  * (a metadata aggregation — never reads vectors); when it passes the
-  * caller's threshold, retrain with [[train]] and re-assign once. That
-  * amortizes the only O(corpus) step over many batches, the same
-  * trade the MOR compactor makes for reads.
+  *    ([[train]]: bounded driver sample + optional corpus-wide refinement)
+  *    and reused across batches — centroids enter every plan as literals;
+  *  - an ASSIGNED STORE (id, cell, vec), maintained by [[LakeAnnStore]]:
+  *    per refresh only the CHANGED vectors are assigned, and drift is
+  *    answered by a retrain plus one re-assignment;
+  *  - SEARCH: the same nprobe cell equi-join as the batch operator.
+  *    [[search]] runs it over any (id, cell, vec) frame — the reference
+  *    that the store's cell-pruned search must equal.
   */
 object IncrementalAnn {
 
@@ -112,43 +106,10 @@ object IncrementalAnn {
     IvfIndex(centroids, nprobe)
   }
 
-  /** Empty assigned store: (id string, cell int, vec array<float>). */
-  def emptyStore(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("id", StringType), StructField("cell", IntegerType),
-        StructField("vec", ArrayType(FloatType)))))
-  }
-
-  /** One refresh: assign ONLY the changed vectors (upserts — changed ids'
-    * previous rows are replaced), carry the rest untouched. Eagerly
-    * localCheckpoint'ed: a refresh loop's plan stays flat and old store
-    * generations release when the caller drops them.
-    */
-  def refresh(index: IvfIndex, store: DataFrame, changed: DataFrame,
-              vecCol: String, idCol: String): DataFrame = {
-    val fresh = changed.select(col(idCol).cast("string").as("id"), col(vecCol).as("vec"))
-      .withColumn("cell", index.assignExpr(col("vec")))
-      .select("id", "cell", "vec")
-      .localCheckpoint(true)
-    // same contract as IncrementalDedup: one row per id or the carry
-    // anti-join + union silently leaves duplicate store rows forever
-    val dup = fresh.groupBy("id").count().filter(col("count") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"IncrementalAnn.refresh: change batch has multiple rows for id " +
-      s"'${if (dup.isEmpty) "" else dup(0).get(0)}' — resolve latest-per-key first")
-    val carried = store.join(fresh.select("id"), Seq("id"), "left_anti")
-    carried.unionByName(fresh).localCheckpoint(true)
-  }
-
-  /** Remove deleted ids from the store. */
-  def remove(store: DataFrame, deletedKeys: DataFrame, idCol: String): DataFrame =
-    store.join(deletedKeys.select(col(idCol).cast("string").as("id")), Seq("id"), "left_anti")
-      .localCheckpoint(true)
-
-  /** Top-k search against the maintained store — identical plan shape to
-    * the batch operator's probe phase: explode nprobe cells per query,
-    * equi-join on cell, exact cosine re-rank inside the candidate set.
+  /** Top-k search over an assigned (id, cell, vec) store — identical plan
+    * shape to the batch operator's probe phase: explode nprobe cells per
+    * query, equi-join on cell, exact cosine re-rank inside the candidate
+    * set.
     */
   def search(index: IvfIndex, store: DataFrame, queries: DataFrame,
              queryVec: String, queryId: String, k: Int): DataFrame = {
@@ -178,16 +139,6 @@ object IncrementalAnn {
     graft.lake.Manifest.writeAtomic(java.nio.file.Paths.get(path), doc)
   }
 
-  /** Persist / reload an assignment store — same mechanism as the dedup
-    * store ([[graft.lake.StoreIO]]), exposed here so ANN callers stay in
-    * this module.
-    */
-  def saveStore(store: DataFrame, dir: String): Unit =
-    graft.lake.StoreIO.save(store, dir)
-
-  def loadStore(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    graft.lake.StoreIO.load(spark, dir)
-
   def loadIndex(path: String): IvfIndex = {
     implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
     val json = org.json4s.jackson.JsonMethods.parse(
@@ -195,16 +146,5 @@ object IncrementalAnn {
     IvfIndex(
       (json \ "centroids").extract[List[List[Double]]].map(_.toArray).toArray,
       (json \ "nprobe").extract[Int])
-  }
-
-  /** Retrain signal: largest cell's share of the store over the fair
-    * share (1 = perfectly balanced, nlist = everything in one cell). A
-    * metadata aggregation over (cell, count) — never reads vectors.
-    */
-  def imbalance(index: IvfIndex, store: DataFrame): Double = {
-    val counts = store.groupBy("cell").count().collect()
-    val total = counts.map(_.getLong(1)).sum
-    if (total == 0) 1.0
-    else counts.map(_.getLong(1)).max.toDouble * index.nlist / total
   }
 }

@@ -3,29 +3,27 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Incremental near-duplicate maintenance — the 100 TB shape of dedup
-  * under CDC ingest. The batch operators in [[DedupOps]] recompute the
-  * whole corpus per run; under a change stream that is O(corpus) work per
-  * batch and unusable at 10^10 documents. The scalable design maintains a
-  * MINHASH SIGNATURE STORE keyed by document:
+/** MinHash building blocks of incremental near-duplicate maintenance —
+  * the CDC-scale shape of dedup. The batch operators in [[DedupOps]]
+  * recompute the whole corpus per run; under a change stream that is
+  * O(corpus) work per batch. [[LakeDedupStore]] instead maintains a
+  * MINHASH SIGNATURE STORE keyed by document, built from these pieces:
   *
   *  - per refresh, signatures are computed ONLY for the changed documents
-  *    (O(batch) shingling/hashing — the expensive leg);
+  *    ([[signatureOf]], O(batch) shingling/hashing — the expensive leg);
   *  - fresh near-dup pairs are the banded LSH equi-join of the NEW
-  *    signatures against the full store (narrow (band, bucket) shuffle
-  *    rows, candidate volume governed by the S-curve exactly as in the
-  *    batch operator — never an all-pairs join);
-  *  - pair similarity is ESTIMATED from the stored signatures (matching
-  *    component fraction — the standard unbiased MinHash estimator of
-  *    Jaccard), so old documents' texts are never re-read: the store is
-  *    self-contained, k longs per document.
+  *    signatures against the stored ones (candidate volume governed by
+  *    the S-curve exactly as in the batch operator — never all-pairs);
+  *  - pair similarity is ESTIMATED from the signatures
+  *    ([[estimatedJaccard]], the standard unbiased MinHash estimator), so
+  *    old documents' texts are never re-read.
   *
-  * Pairs are emitted when their LATER member arrives (bucket sharing is
-  * symmetric and signature-static, so every qualifying pair is emitted
-  * exactly once across the stream — same-batch pairs canonicalized). On a
-  * document UPDATE the new signature replaces the old and the document's
-  * pairs are re-emitted against the current corpus; the consumer holds
-  * "latest pairs per key" exactly like the CDC table holds latest rows.
+  * Pairs are emitted when their LATER member arrives; on a document
+  * UPDATE the document's pairs are re-emitted against the current corpus,
+  * so the consumer holds "latest pairs per key" exactly like the CDC
+  * table holds latest rows. [[pairsOf]] is the from-scratch reference:
+  * the same banded self-join and estimator over a whole corpus, which the
+  * maintained pair state must equal at every version.
   *
   * Reference analogue: none (owid-etl has no streaming dedup); this
   * composes the repo's changelog-follower IVM pattern
@@ -34,25 +32,11 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalDedup {
 
-  /** Empty signature store (schema: key string, sig array<bigint>,
-    * bands array<struct<band int, bucket int>>). The banded bucket ids
-    * are PRECOMPUTED at signature time: carried rows' buckets never
-    * change, so a refresh must not re-slice and re-hash the whole store
-    * to rebuild them (that would put O(corpus · bands) hashing on every
-    * small batch).
-    */
-  def emptyStore(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    val bandT = ArrayType(StructType(Seq(
-      StructField("band", IntegerType), StructField("bucket", IntegerType))))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("key", StringType), StructField("sig", ArrayType(LongType)),
-        StructField("bands", bandT))))
-  }
-
   /** Signatures of `df`'s documents: (key, sig, bands) with
     * k = bands·rowsPerBand components (same permutation family as the
     * batch operator, so batch and incremental results are bit-comparable).
+    * The banded bucket ids are PRECOMPUTED here and stored with the
+    * signature, so a refresh never re-slices and re-hashes stored rows.
     */
   def signatureOf(df: DataFrame, textCol: String, keyCol: String,
                   bands: Int, rowsPerBand: Int, shingleN: Int = 3): DataFrame =
@@ -69,82 +53,38 @@ object IncrementalDedup {
     aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, m) => acc + m).cast("double") / lit(k.toDouble)
 
-  /** Explode the PRECOMPUTED banded buckets — no hashing here; carried
-    * rows re-enter the candidate join from stored (band, bucket) ids.
+  /** All near-dup pairs of a whole corpus: the banded LSH self-join of
+    * `docs`' signatures, deduplicated, with the signature estimate of
+    * Jaccard. Returns (key_a, key_b, est_jaccard >= minJaccard),
+    * key_a < key_b. O(corpus) — the from-scratch reference for the
+    * incrementally maintained pair state of [[LakeDedupStore]].
     */
-  private def banded(sigs: DataFrame): DataFrame =
-    sigs.select(col("key"), col("sig"), explode(col("bands")).as("bb"))
-      .select(col("key"), col("sig"), col("bb.band"), col("bb.bucket"))
-
-  /** One refresh. `store` is the previous signature view; `changedDocs`
-    * the batch's upserted documents (latest text per key). Returns
-    * (updatedStore, freshPairs):
-    *  - updatedStore: changed keys' signatures replaced, others carried —
-    *    eagerly localCheckpoint'ed so a refresh loop's plan does not grow
-    *    per batch and earlier generations' blocks are released when the
-    *    caller drops its reference (same contract as IncrementalAgg);
-    *  - freshPairs: (key_a, key_b, est_jaccard >= minJaccard) with at
-    *    least one side in this batch; key_a < key_b.
-    * Work per refresh: shingle O(batch docs); join carries O(batch·bands)
-    * probe rows against the store's banded form.
-    */
-  def refresh(store: DataFrame, changedDocs: DataFrame, textCol: String,
-              keyCol: String, bands: Int = 8, rowsPerBand: Int = 4,
-              minJaccard: Double = 0.7, shingleN: Int = 3): (DataFrame, DataFrame) = {
+  def pairsOf(docs: DataFrame, textCol: String, keyCol: String,
+              bands: Int = 8, rowsPerBand: Int = 4,
+              minJaccard: Double = 0.7, shingleN: Int = 3): DataFrame = {
     val k = bands * rowsPerBand
-    // O(batch): the only text-reading, shingle-hashing leg; checkpointed so
-    // the three consumers below (carry anti-join, probe side, store union)
-    // compute it once
-    val newSigs = signatureOf(changedDocs, textCol, keyCol, bands, rowsPerBand, shingleN)
+    val sigs = signatureOf(docs, textCol, keyCol, bands, rowsPerBand, shingleN)
       .localCheckpoint(true)
-    requireUniqueKeys(newSigs, "IncrementalDedup.refresh")
-    val carried = store.join(newSigs.select("key"), Seq("key"), "left_anti")
-    val updated = carried.unionByName(newSigs).localCheckpoint(true)
-    // probe NEW against ALL (carried + new): every pair with a changed
-    // member sharing any band bucket, deduped, similarity from signatures
-    val l = banded(newSigs)
-      .select(col("band"), col("bucket"), col("key").as("key_l"), col("sig").as("sig_l"))
-    val r = banded(updated)
-      .select(col("band"), col("bucket"), col("key").as("key_r"), col("sig").as("sig_r"))
-    val pairs = l.join(r, Seq("band", "bucket"))
-      .filter(col("key_l") =!= col("key_r"))
-      .select(least(col("key_l"), col("key_r")).as("key_a"),
-        greatest(col("key_l"), col("key_r")).as("key_b"),
+    requireUniqueKeys(sigs, "IncrementalDedup.pairsOf")
+    val banded = sigs.select(col("key"), col("sig"), explode(col("bands")).as("bb"))
+      .select(col("key"), col("sig"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+    val l = banded.select(col("band"), col("bucket"), col("key").as("key_l"), col("sig").as("sig_l"))
+    val r = banded.select(col("band"), col("bucket"), col("key").as("key_r"), col("sig").as("sig_r"))
+    l.join(r, Seq("band", "bucket"))
+      .filter(col("key_l") < col("key_r"))
+      .select(col("key_l").as("key_a"), col("key_r").as("key_b"),
         estimatedJaccard(col("sig_l"), col("sig_r"), k).as("est_jaccard"))
       .dropDuplicates("key_a", "key_b")
       .filter(col("est_jaccard") >= minJaccard)
-    (updated, pairs)
   }
-
-  /** Remove deleted documents from the store (tombstones in the change
-    * feed): their pairs die with them on the consumer side. Checkpointed
-    * like [[refresh]]'s output — a tombstone-heavy stream calling remove
-    * repeatedly with no intervening refresh must not grow the plan one
-    * anti-join per batch.
-    */
-  def remove(store: DataFrame, deletedKeys: DataFrame, keyCol: String): DataFrame =
-    store.join(deletedKeys.select(col(keyCol).cast("string").as("key")),
-      Seq("key"), "left_anti")
-      .localCheckpoint(true)
-
-  /** Persist / reload the store ([[graft.lake.StoreIO]] — crash-swept
-    * directory swap): the restart path that avoids
-    * [[graft.stream.DedupMaintenance.resume]]'s O(corpus) signature
-    * rebuild. Checkpoint alongside the version AND LSH parameters it
-    * reflects (the maintenance marker records them).
-    */
-  def saveStore(store: DataFrame, dir: String): Unit =
-    graft.lake.StoreIO.save(store, dir)
-
-  def loadStore(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    graft.lake.StoreIO.load(spark, dir)
 
   /** A change batch must carry ONE row per key (latest wins upstream — a
     * raw CDC batch with several LSNs per key has not been resolved yet).
     * Silently accepting duplicates would permanently corrupt the store:
-    * the carry anti-join drops the key's old row but the union inserts
-    * every duplicate, so store size drifts and pair emission
-    * double-counts. One aggregation over O(batch) rows; fails loudly.
+    * each duplicate appends its own band rows, but the key index keeps
+    * only one signature to route later tombstones by, so the others
+    * linger as candidates that never die and pair emission double-counts.
+    * One aggregation over O(batch) rows; fails loudly.
     */
   private[ops] def requireUniqueKeys(batch: DataFrame, who: String): Unit = {
     val dup = batch.groupBy("key").count().filter(col("count") > 1).limit(1).collect()

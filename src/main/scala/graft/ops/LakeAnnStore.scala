@@ -7,11 +7,11 @@ import org.apache.spark.sql.types._
 import graft.lake.BucketStore
 import IncrementalAnn.IvfIndex
 
-/** Lake-backed IVF assignment store — the 10^10-vector backend for
-  * [[IncrementalAnn]] (same round-4 graduation as [[LakeDedupStore]]:
-  * the assigned store must not live in executor storage memory, refresh
-  * must append O(batch), and search must prune to the probed cells via
-  * the manifest instead of scanning the full store).
+/** Lake-backed IVF assignment store — the one backend of incremental ANN
+  * maintenance, over [[IncrementalAnn]]'s quantizer. Like
+  * [[LakeDedupStore]], the assigned store lives on disk, refresh appends
+  * O(batch), and search prunes to the probed cells via the manifest
+  * instead of scanning the full store.
   *
   * Two [[graft.lake.BucketStore]]s:
   *

@@ -6,12 +6,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.lake.BucketStore
 
-/** Lake-backed MinHash signature store — the 10^10-document backend for
-  * [[IncrementalDedup]] (round-3 scale gap: the in-memory store rewrites
-  * the whole corpus's signatures into block-manager storage per refresh
-  * and the banded probe scans the full store; at true scale the store is
-  * corpus-sized and must live on disk, refreshed by APPENDS and probed
-  * through PARTITION PRUNING).
+/** Lake-backed MinHash signature store — the one backend of incremental
+  * near-dup maintenance, built from [[IncrementalDedup]]'s signature and
+  * estimator. At scale the store is corpus-sized, so it lives on disk,
+  * is refreshed by APPENDS and is probed through PARTITION PRUNING.
   *
   * Two [[graft.lake.BucketStore]]s:
   *
@@ -99,8 +97,8 @@ final class LakeDedupStore private (val spark: SparkSession, root: String,
     val keyRows = newSigs.withColumn(BucketStore.DELETED_COL, lit(false))
     // candidates: bucket-pruned read of PRE-append state, minus every
     // touched key's old rows (update replacement / deletion), plus the
-    // batch itself (same-batch pairs). Identical candidate set to the
-    // in-memory refresh's (carried + new).
+    // batch itself (same-batch pairs): every post-refresh signature that
+    // shares a (band, bucket) with the batch.
     val probe = banded(newSigs)
     val pruned = bandStore.read(Some(bandStore.pidsOf(probe.select("band", "bucket"))))
       .join(touchedKeys, Seq("key"), "left_anti")

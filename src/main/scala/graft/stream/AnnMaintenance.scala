@@ -59,8 +59,8 @@ object AnnMaintenance {
     // shares the dedup loop's live registry: one maintenance loop per
     // (table, pin), refused while the previous thread lives. EVERYTHING
     // effectful — store creation, quantizer training, the bootstrap
-    // commit, the pin — sits after the check, so a refused start is a
-    // pure no-op (two racing starts must not both bootstrap).
+    // commit, the follower's pin — sits after the check, so a refused
+    // start is a pure no-op (two racing starts must not both bootstrap).
     DedupMaintenance.registerLive(table, pinName, liveKey => {
     val existing = java.nio.file.Files.exists(
       java.nio.file.Paths.get(storeDir, "index.json"))
@@ -93,7 +93,6 @@ object AnnMaintenance {
     val processedRef = new AtomicLong(from)
     val retrainsRef = new AtomicLong(0L)
     val windows = new AtomicLong(0L)
-    table.pin(pinName, from)
     val follower = ChangelogFollower.follow(table, from, pollMs,
       pinName = Some(pinName)) { (changes, toVersion) =>
       val latest = DedupMaintenance.windowLatest(changes, "id")

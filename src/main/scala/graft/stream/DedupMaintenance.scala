@@ -4,41 +4,27 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.lake.LakeTable
 import graft.model.Schemas
-import graft.ops.IncrementalDedup
 
 /** Live near-duplicate maintenance over a lake table's change feed — the
-  * engine-level wiring of [[ChangelogFollower]] × [[IncrementalDedup]]:
-  * every committed version window is consumed as (tombstones → store
-  * removal, upserts → latest-per-key resolve → signature refresh), and
-  * the freshly emitted pairs are appended to a parquet log partitioned by
-  * the window's end version (so a downstream consumer can itself read
-  * the pair log incrementally, by version).
+  * engine-level wiring of [[ChangelogFollower]] × [[graft.ops.LakeDedupStore]]:
+  * every committed version window is consumed as (latest-per-key resolve
+  * → tombstones and upserts → one store refresh), and the freshly emitted
+  * pairs are appended to a parquet log partitioned by the window's end
+  * version (so a downstream consumer can itself read the pair log
+  * incrementally, by version).
   *
   * Work per window is O(changed turns) on the expensive legs (see
-  * IncrementalDedup); the follower holds a durable [[LakeTable.pin]] so
-  * vacuum never reclaims an unconsumed window, and the pin also marks
-  * where to resume after a restart (`table.pins(pinName)`).
+  * LakeDedupStore); the follower holds a durable [[LakeTable.pin]] so
+  * vacuum never reclaims an unconsumed window. The store's own watermark
+  * is the one resume point after a restart.
   */
 object DedupMaintenance {
 
-  final class Handle private[DedupMaintenance] (
-      follower: ChangelogFollower.Handle,
-      storeRef: java.util.concurrent.atomic.AtomicReference[DataFrame],
-      processedRef: java.util.concurrent.atomic.AtomicLong,
-      liveKey: String) extends AutoCloseable {
-    /** The current signature store view (checkpointed; safe to query). */
-    def store: DataFrame = storeRef.get()
-    /** Last fully processed table version. */
-    def processedVersion: Long = processedRef.get()
-    def failure: Option[Throwable] = follower.failure
-    override def close(): Unit =
-      try follower.close() finally DedupMaintenance.releaseLive(liveKey)
-  }
-
-  /** One live maintenance loop per (table root, pin): a second start/resume
+  /** One live maintenance loop per (table root, pin): a second start
     * while the previous follower thread is alive would interleave windows
-    * into one pair log and move one pin in both directions. start/resume
-    * refuse while the previous loop's thread lives (close() first).
+    * into one pair log and move one pin in both directions. startLake
+    * (dedup and ANN) refuses while the previous loop's thread lives
+    * (close() first).
     */
   private val live = scala.collection.mutable.Map.empty[String, () => Boolean]
 
@@ -47,14 +33,14 @@ object DedupMaintenance {
     val key = table.root.toAbsolutePath.normalize.toString + "#" + pinName
     live.get(key).foreach(alive => require(!alive(),
       s"a maintenance loop for pin '$pinName' on ${table.root} is still live — " +
-      "close() it before starting/resuming another"))
+      "close() it before starting another"))
     val (h, probe) = mk(key)
     live(key) = probe
     h
   }
 
   /** Deregister ONLY if the registered loop provably died — a close() that
-    * threw with its thread still alive must keep blocking resume(), and a
+    * threw with its thread still alive must keep blocking a restart, and a
     * stale handle's late close() must not evict a newer live registration.
     */
   private[stream] def releaseLive(key: String): Unit = live.synchronized {
@@ -65,7 +51,7 @@ object DedupMaintenance {
 
   /** Per-key latest rows of a changelog window, keyed by the concatenated
     * primary key — THE ONE window-resolve shared by every maintenance
-    * consumer (both dedup modes and the ANN loop), so the pick can never
+    * consumer (the dedup and ANN loops), so the pick can never
     * drift between them. Resolution order is [[LakeTable.resolveOrder]]
     * (lsn, non-delete, payload-hash) — identical to the MOR read path even
     * on contract-violating duplicate-LSN input. Eagerly checkpointed: each
@@ -79,107 +65,6 @@ object DedupMaintenance {
       .filter(col("__rn") === 1).drop("__rn")
       .withColumn(keyName, concat_ws("#", Schemas.KEY_COLS.map(col): _*))
       .localCheckpoint(true)
-  }
-
-  /** Store-checkpoint marker: the version the persisted store reflects
-    * PLUS the LSH parameters it was built with — resuming with different
-    * parameters against a stored signature set would silently miss every
-    * cross-generation candidate, so a mismatch falls back to the rebuild.
-    */
-  final case class CkptMarker(version: Long, bands: Int, rowsPerBand: Int,
-                              shingleN: Int)
-  private implicit val markerFormats: org.json4s.Formats = org.json4s.DefaultFormats
-
-  private def writeMarker(dir: String, m: CkptMarker): Unit =
-    graft.lake.Manifest.writeAtomic(java.nio.file.Paths.get(dir + ".version"),
-      org.json4s.jackson.Serialization.write(m))
-
-  private def readMarker(dir: String): Option[CkptMarker] = {
-    val p = java.nio.file.Paths.get(dir + ".version")
-    if (!java.nio.file.Files.exists(p)) None
-    else scala.util.Try { // torn/garbled marker → no checkpoint, not a crash
-      org.json4s.jackson.Serialization.read[CkptMarker](
-        new String(java.nio.file.Files.readAllBytes(p)))
-    }.toOption
-  }
-
-  /** Start maintenance. `pairsDir`: parquet pair log root (one
-    * `to_version=N` partition per consumed window). `fromVersion`: last
-    * version already reflected in `initialStore` (0 + empty store for a
-    * fresh start; `table.pins(pinName)` + a rebuilt store to resume).
-    *
-    * `storeCheckpointDir`: when set, the store is persisted there every
-    * `checkpointEvery` windows (parquet + a typed `.version` marker
-    * naming the version AND LSH parameters it reflects) — [[resume]]
-    * then reloads it instead of paying the O(corpus) snapshot rebuild.
-    * The marker is written AFTER the store: a crash between the two
-    * leaves a store newer than its marker, so resume replays slightly
-    * more changelog (at-least-once, consistent with the pair-log
-    * contract), never less. With checkpointing on, the durable pin is
-    * held at the LAST CHECKPOINT's version, not the last window's —
-    * vacuum must retain the whole (checkpoint, current] replay window,
-    * which is exactly what resume will re-read.
-    */
-  @deprecated("in-memory store + marker-file resume is superseded by startLake: " +
-    "the lake-backed store holds O(batch) refreshes, partition-pruned probes and " +
-    "its own atomic watermark (one resume protocol, no side-channel markers)", "round-5")
-  def start(table: LakeTable, textColumn: String, pairsDir: String,
-            fromVersion: Long = 0L,
-            initialStore: Option[DataFrame] = None,
-            bands: Int = 8, rowsPerBand: Int = 4, minJaccard: Double = 0.7,
-            pollMs: Long = 200L, pinName: String = "dedup-maintenance",
-            storeCheckpointDir: Option[String] = None,
-            checkpointEvery: Int = 8,
-            touchesDir: Option[String] = None): Handle = {
-    val spark = table.snapshot().sparkSession
-    val storeRef = new java.util.concurrent.atomic.AtomicReference[DataFrame](
-      initialStore.getOrElse(IncrementalDedup.emptyStore(spark)))
-    val processedRef = new AtomicLong(fromVersion)
-    val windowsSinceCkpt = new AtomicLong(0L)
-    // checkpointing ON → the pin anchors at the last CHECKPOINT (managed
-    // here, advanced only when a checkpoint lands) so vacuum keeps the
-    // full replay window; OFF → the follower advances it per window
-    val followerPin = if (storeCheckpointDir.isEmpty) Some(pinName) else None
-    registerLive(table, pinName, liveKey => {
-    // pin only AFTER the singleton check: a REFUSED start must be a pure
-    // no-op — moving the live loop's pin first would shrink the very
-    // replay window that loop's checkpoint depends on
-    if (storeCheckpointDir.nonEmpty) table.pin(pinName, fromVersion)
-    val follower = ChangelogFollower.follow(table, fromVersion, pollMs,
-      pinName = followerPin) { (changes, toVersion) =>
-      // resolve latest-per-key INSIDE the window (a window can span
-      // several epochs of the same key) — the shared windowLatest
-      val latest = windowLatest(changes, "key")
-      val deleted = latest.filter(col(Schemas.DELETED_COL)).select("key")
-      val upserts = latest.filter(!col(Schemas.DELETED_COL))
-        .select(col("key"), col(textColumn).as("text"))
-      touchesDir.foreach(appendTouches(latest, _, toVersion))
-      // skip the store-wide anti-join + checkpoint on tombstone-free
-      // windows (the append-mostly common case) — remove() rewrites the
-      // whole store eagerly, so it must run only when there IS a delete
-      var store = storeRef.get()
-      if (deleted.head(1).nonEmpty)
-        store = IncrementalDedup.remove(store, deleted, "key")
-      if (upserts.head(1).nonEmpty) {
-        val (s2, pairs) = IncrementalDedup.refresh(store, upserts, "text", "key",
-          bands, rowsPerBand, minJaccard)
-        store = s2
-        pairs.withColumn("to_version", lit(toVersion))
-          .write.mode("append").partitionBy("to_version").parquet(pairsDir)
-      }
-      storeRef.set(store)
-      processedRef.set(toVersion)
-      storeCheckpointDir.foreach { dir =>
-        if (windowsSinceCkpt.incrementAndGet() >= checkpointEvery) {
-          IncrementalDedup.saveStore(store, dir)
-          writeMarker(dir, CkptMarker(toVersion, bands, rowsPerBand, shingleN = 3))
-          table.pin(pinName, toVersion) // retention now protects (toVersion, ∞)
-          windowsSinceCkpt.set(0L)
-        }
-      }
-    }
-    (new Handle(follower, storeRef, processedRef, liveKey), () => follower.isAlive)
-    })
   }
 
   /** Append per-key touch records (key, deleted, to_version) for a
@@ -251,7 +136,7 @@ object DedupMaintenance {
     * legitimate re-emission after a document UPDATE (same pair, new
     * est_jaccard, later to_version) resolves to the NEWEST pair — the
     * "consumer holds latest pairs per key" contract of
-    * [[graft.ops.IncrementalDedup]]; an arbitrary dropDuplicates pick
+    * [[graft.ops.LakeDedupStore]]; an arbitrary dropDuplicates pick
     * would nondeterministically hand back the stale similarity.
     */
   def pairsBetween(spark: org.apache.spark.sql.SparkSession, pairsDir: String,
@@ -276,15 +161,6 @@ object DedupMaintenance {
           col("__p.to_version").as("to_version"))
     else raw
   }
-
-  // ---- lake-backed mode -------------------------------------------
-  // The round-4 store backend: signatures live in a bucket-partitioned
-  // [[graft.ops.LakeDedupStore]] on disk — refreshes APPEND O(batch)
-  // rows (no carry-rewrite), the banded probe prunes to touched
-  // partitions, and the store itself carries the resume watermark, so a
-  // restart needs neither an O(corpus) snapshot rebuild nor side-channel
-  // checkpoint markers. This is the mode that survives a corpus that
-  // does not fit executor storage memory.
 
   final class LakeHandle private[DedupMaintenance] (
       follower: ChangelogFollower.Handle,
@@ -339,7 +215,6 @@ object DedupMaintenance {
         plan.commit(v)
         from = v
       }
-      table.pin(pinName, from)
       val processedRef = new AtomicLong(from)
       val windows = new AtomicLong(0L)
       val follower = ChangelogFollower.follow(table, from, pollMs,
@@ -361,61 +236,5 @@ object DedupMaintenance {
       }
       (new LakeHandle(follower, store, processedRef, liveKey), () => follower.isAlive)
     })
-  }
-
-  /** Resume after a restart: the durable pin says which version the pair
-    * log fully reflects; the signature store is REBUILT from the live
-    * snapshot AS OF that version (one O(corpus) signature pass — a
-    * restart-time cost, not a per-window one; the pin guarantees the
-    * manifest is still readable) and following continues from there.
-    *
-    * Delivery contract: AT-LEAST-ONCE with exact duplicates, never gaps.
-    * The pin advances only AFTER a window's pairs are durably appended,
-    * so a crash between the append and the advance makes the replay
-    * re-derive that window's pairs (possibly under the wider replay
-    * window's to_version). The duplicate rows are exact copies of pairs
-    * already in the log — `pairsBetween`'s default dedupe collapses
-    * them; a true exactly-once pair log would need the append and the
-    * pin in one atomic commit (the lake-table-backed store of NOTES
-    * round-4 item 6 gets this for free).
-    */
-  @deprecated("see start: startLake resumes from the store's own watermark", "round-5")
-  def resume(table: LakeTable, textColumn: String, pairsDir: String,
-             bands: Int = 8, rowsPerBand: Int = 4, minJaccard: Double = 0.7,
-             pollMs: Long = 200L, pinName: String = "dedup-maintenance",
-             storeCheckpointDir: Option[String] = None,
-             checkpointEvery: Int = 8): Handle = {
-    val pinned = table.pins.getOrElse(pinName,
-      throw new IllegalStateException(
-        s"no pin '$pinName' on ${table.root} — nothing to resume; use start()"))
-    val spark = table.snapshot().sparkSession
-    // a persisted store checkpoint beats the O(corpus) snapshot rebuild:
-    // load it and replay the changelog from ITS version (<= the pin's;
-    // replayed windows re-append exact duplicate pairs — the documented
-    // at-least-once contract, collapsed by pairsBetween's dedupe)
-    val fromCkpt = storeCheckpointDir.flatMap { dir =>
-      readMarker(dir).flatMap { m =>
-        // the checkpoint must (a) match this run's LSH parameters — a
-        // store signed under different slicing silently misses every
-        // cross-generation candidate — and (b) still anchor a readable
-        // manifest; otherwise fall back to the snapshot rebuild
-        val paramsOk = m.bands == bands && m.rowsPerBand == rowsPerBand && m.shingleN == 3
-        if (paramsOk && scala.util.Try(table.manifestAt(m.version)).isSuccess)
-          graft.lake.StoreIO.loadOpt(spark, dir)
-            .map(df => (df.localCheckpoint(true), m.version))
-        else None
-      }
-    }
-    val (store, fromVersion) = fromCkpt.getOrElse {
-      val asOf = table.snapshotAt(pinned)
-        .withColumn("key", concat_ws("#", Schemas.KEY_COLS.map(col): _*))
-        .select(col("key"), col(textColumn).as("text"))
-      (IncrementalDedup.signatureOf(asOf, "text", "key", bands, rowsPerBand)
-        .localCheckpoint(true), pinned)
-    }
-    start(table, textColumn, pairsDir, fromVersion = fromVersion,
-      initialStore = Some(store), bands = bands, rowsPerBand = rowsPerBand,
-      minJaccard = minJaccard, pollMs = pollMs, pinName = pinName,
-      storeCheckpointDir = storeCheckpointDir, checkpointEvery = checkpointEvery)
   }
 }

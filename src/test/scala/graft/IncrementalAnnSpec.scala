@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.IncrementalAnn
+import graft.ops.{IncrementalAnn, LakeAnnStore}
 
-/** Incrementally maintained IVF index: per-batch assignment of changed
-  * vectors only, search equal to the batch operator over the same corpus,
-  * retrain signal from cell imbalance.
+/** Incrementally maintained IVF index on the lake-backed store: per-batch
+  * assignment of changed vectors only, search equal to the reference
+  * search over a batch assignment of the same corpus, retrain signal from
+  * cell imbalance.
   */
 class IncrementalAnnSpec extends SparkSpec {
   import spark.implicits._
@@ -24,6 +25,20 @@ class IncrementalAnnSpec extends SparkSpec {
     rows.map { case (id, v) => (id, v.toSeq) }.toDF("doc_id", "emb")
       .select(col("doc_id"), col("emb").cast("array<float>").as("emb"))
 
+  /** The store's refresh input: (id, vec). */
+  private def idVec(rows: Seq[(String, Array[Float])]): DataFrame =
+    corpusDf(rows).select(col("doc_id").as("id"), col("emb").as("vec"))
+
+  /** Batch assignment of a whole corpus: the reference (id, cell, vec). */
+  private def assigned(index: IncrementalAnn.IvfIndex,
+                       rows: Seq[(String, Array[Float])]): DataFrame =
+    idVec(rows).withColumn("cell", index.assignExpr(col("vec")))
+
+  private def cells(df: DataFrame): Map[String, Int] =
+    df.select("id", "cell").collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+
+  private val noIds = Seq.empty[String].toDF("id")
+
   test("incremental refreshes reach the same search results as one batch assignment over the full corpus") {
     val batch1 = (0 until 40).map(i => (f"a$i%03d", vec(i % 4, i)))
     val batch2 = (0 until 20).map(i => (f"b$i%03d", vec(i % 4, 100 + i)))
@@ -33,23 +48,25 @@ class IncrementalAnnSpec extends SparkSpec {
     // one index trained on the full corpus, shared by both paths
     val index = IncrementalAnn.train(corpusDf(all), "emb", "doc_id",
       nlist = 4, nprobe = 2, trainSample = 64)
-    // incremental: two refreshes
-    var store = IncrementalAnn.emptyStore(spark)
-    store = IncrementalAnn.refresh(index, store, corpusDf(batch1), "emb", "doc_id")
-    store = IncrementalAnn.refresh(index, store, corpusDf(batch2), "emb", "doc_id")
-    assert(store.count() == all.size)
-    // batch: assign everything at once
-    val storeBatch = IncrementalAnn.refresh(index, IncrementalAnn.emptyStore(spark),
-      corpusDf(all), "emb", "doc_id")
+    val dir = tmpDir("annincr")
+    try {
+      // incremental: two refreshes
+      val store = LakeAnnStore.create(spark, s"$dir/s", index, numPids = 8)
+      store.refresh(idVec(batch1), noIds, 1L)
+      store.refresh(idVec(batch2), noIds, 2L)
+      assert(store.snapshot().count() == all.size)
 
-    def results(s: DataFrame) =
-      IncrementalAnn.search(index, s, corpusDf(queries), "emb", "doc_id", k = 5)
-        .collect().map(r => (r.getString(0), r.getString(1), r.getInt(3))).toSet
-    assert(results(store) == results(storeBatch))
-    // sanity: each query's top hit is from its own cluster
-    val top = IncrementalAnn.search(index, store, corpusDf(queries), "emb", "doc_id", k = 1)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(top.size == 3)
+      def results(df: DataFrame) =
+        df.collect().map(r => (r.getString(0), r.getString(1), r.getInt(3))).toSet
+      // batch: assign everything at once, search with the reference
+      val want = results(IncrementalAnn.search(index, assigned(index, all),
+        corpusDf(queries), "emb", "doc_id", k = 5))
+      assert(results(store.search(corpusDf(queries), "emb", "doc_id", k = 5)) == want)
+      // sanity: each query gets a top hit
+      val top = store.search(corpusDf(queries), "emb", "doc_id", k = 1)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(top.size == 3)
+    } finally rmrf(dir)
   }
 
   test("property: random upsert/delete streams keep the store equal to batch assignment of the surviving corpus") {
@@ -72,24 +89,22 @@ class IncrementalAnnSpec extends SparkSpec {
     (0 until 4).foreach { caseId =>
       val stream = Gen.listOfN(4, batchGen)
         .pureApply(Gen.Parameters.default, Seed(2000L + caseId))
-      var corpus = Map.empty[String, Array[Float]]
-      var store = IncrementalAnn.emptyStore(spark)
-      stream.foreach { case (ups, dels) =>
-        val upserts = ups.filterNot { case (k, _) => dels.contains(k) }
-        corpus = corpus -- dels ++ upserts
-        store = IncrementalAnn.remove(store, dels.toDF("doc_id"), "doc_id")
-        if (upserts.nonEmpty)
-          store = IncrementalAnn.refresh(index, store, corpusDf(upserts), "emb", "doc_id")
-        // store == batch assignment of the surviving corpus, row for row
-        val got = store.select("id", "cell").collect()
-          .map(r => r.getString(0) -> r.getInt(1)).toMap
-        val want =
-          if (corpus.isEmpty) Map.empty[String, Int]
-          else IncrementalAnn.refresh(index, IncrementalAnn.emptyStore(spark),
-            corpusDf(corpus.toSeq), "emb", "doc_id")
-            .select("id", "cell").collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-        assert(got == want, s"case $caseId diverged: ${got.size} vs ${want.size}")
-      }
+      val dir = tmpDir("annprop")
+      try {
+        val store = LakeAnnStore.create(spark, s"$dir/s", index, numPids = 4)
+        var corpus = Map.empty[String, Array[Float]]
+        stream.zipWithIndex.foreach { case ((ups, dels), i) =>
+          val upserts = ups.filterNot { case (k, _) => dels.contains(k) }
+          corpus = corpus -- dels ++ upserts
+          store.refresh(idVec(upserts), dels.toDF("id"), i + 1L)
+          // store == batch assignment of the surviving corpus, row for row
+          val got = cells(store.snapshot())
+          val want =
+            if (corpus.isEmpty) Map.empty[String, Int]
+            else cells(assigned(index, corpus.toSeq))
+          assert(got == want, s"case $caseId diverged: ${got.size} vs ${want.size}")
+        }
+      } finally rmrf(dir)
     }
   }
 
@@ -103,26 +118,27 @@ class IncrementalAnnSpec extends SparkSpec {
       val loaded = IncrementalAnn.loadIndex(s"$dir/index.json")
       assert(loaded.nprobe == index.nprobe)
       assert(loaded.centroids.map(_.toSeq).toSeq == index.centroids.map(_.toSeq).toSeq)
-      val store = IncrementalAnn.refresh(index, IncrementalAnn.emptyStore(spark),
-        corpusDf(corpus), "emb", "doc_id")
-      IncrementalAnn.saveStore(store, s"$dir/store")
-      val restored = IncrementalAnn.loadStore(spark, s"$dir/store")
-      assert(restored.count() == 40)
-      // a refresh against the RESTORED store with the RELOADED index
-      // behaves exactly like the live pair
-      val next = IncrementalAnn.refresh(loaded, restored,
-        corpusDf(Seq(("pnew", vec(2, 777)))), "emb", "doc_id")
-      assert(next.count() == 41)
+      val store = LakeAnnStore.create(spark, s"$dir/s", index, numPids = 8)
+      store.refresh(idVec(corpus), noIds, 1L)
+      val cellsBefore = cells(store.snapshot())
+      // a cold reload: same quantizer, same assignments, same watermark —
+      // nothing retrained or re-assigned
+      val restored = LakeAnnStore.load(spark, s"$dir/s")
+      assert(restored.watermark == 1L)
+      assert(restored.index.centroids.map(_.toSeq).toSeq == index.centroids.map(_.toSeq).toSeq)
+      assert(cells(restored.snapshot()) == cellsBefore)
+      // a refresh against the RESTORED store behaves exactly like a batch
+      // assignment of the grown corpus
+      val grown = corpus :+ ("pnew" -> vec(2, 777))
+      restored.refresh(idVec(Seq("pnew" -> vec(2, 777))), noIds, 2L)
+      assert(restored.snapshot().count() == 41)
       val q = corpusDf(Seq(("q", vec(2, 888))))
-      val live = IncrementalAnn.search(index,
-        IncrementalAnn.refresh(index, store, corpusDf(Seq(("pnew", vec(2, 777)))), "emb", "doc_id"),
-        q, "emb", "doc_id", 3).collect().map(r => (r.getString(1), r.getInt(3))).toSet
-      val fromDisk = IncrementalAnn.search(loaded, next, q, "emb", "doc_id", 3)
+      val want = IncrementalAnn.search(loaded, assigned(loaded, grown), q, "emb", "doc_id", 3)
         .collect().map(r => (r.getString(1), r.getInt(3))).toSet
-      assert(live == fromDisk)
-      // saveStore over an existing dir replaces it atomically-enough
-      IncrementalAnn.saveStore(next, s"$dir/store")
-      assert(IncrementalAnn.loadStore(spark, s"$dir/store").count() == 41)
+      val fromDisk = restored.search(q, "emb", "doc_id", 3)
+        .collect().map(r => (r.getString(1), r.getInt(3))).toSet
+      assert(want == fromDisk)
+      assert(LakeAnnStore.load(spark, s"$dir/s").snapshot().count() == 41)
     } finally rmrf(dir)
   }
 
@@ -130,34 +146,34 @@ class IncrementalAnnSpec extends SparkSpec {
     val balanced = (0 until 40).map(i => (f"d$i%03d", vec(i % 4, i)))
     val index = IncrementalAnn.train(corpusDf(balanced), "emb", "doc_id",
       nlist = 4, nprobe = 2, trainSample = 64)
-    var store = IncrementalAnn.refresh(index, IncrementalAnn.emptyStore(spark),
-      corpusDf(balanced), "emb", "doc_id")
-    assert(IncrementalAnn.imbalance(index, store) <= 2.0) // roughly balanced
+    val dir = tmpDir("anndrift")
+    try {
+      val store = LakeAnnStore.create(spark, s"$dir/s", index, numPids = 8)
+      store.refresh(idVec(balanced), noIds, 1L)
+      assert(store.imbalance() <= 2.0) // roughly balanced
 
-    // UPDATE: move d000 into cluster 1 — its stored cell must change
-    val oldCell = store.filter(col("id") === "d000").select("cell").collect()(0).getInt(0)
-    store = IncrementalAnn.refresh(index, store, corpusDf(Seq(("d000", vec(1, 555)))),
-      "emb", "doc_id")
-    assert(store.count() == 40) // replaced, not duplicated
-    val newCell = store.filter(col("id") === "d000").select("cell").collect()(0).getInt(0)
-    assert(newCell != oldCell)
+      // UPDATE: move d000 into cluster 1 — its stored cell must change
+      val oldCell = cells(store.snapshot())("d000")
+      store.refresh(idVec(Seq(("d000", vec(1, 555)))), noIds, 2L)
+      assert(store.snapshot().count() == 40) // replaced, not duplicated
+      assert(cells(store.snapshot())("d000") != oldCell)
 
-    // DELETE
-    store = IncrementalAnn.remove(store, Seq("d001").toDF("doc_id"), "doc_id")
-    assert(store.count() == 39)
-    assert(store.filter(col("id") === "d001").count() == 0)
+      // DELETE
+      store.refresh(idVec(Nil), Seq("d001").toDF("id"), 3L)
+      assert(store.snapshot().count() == 39)
+      assert(!cells(store.snapshot()).contains("d001"))
 
-    // DRIFT: a flood of new vectors all in one cluster skews the store;
-    // imbalance flags it, retrain + one re-assignment restores balance
-    val flood = (0 until 120).map(i => (f"f$i%03d", vec(0, 7000 + i)))
-    store = IncrementalAnn.refresh(index, store, corpusDf(flood), "emb", "doc_id")
-    assert(IncrementalAnn.imbalance(index, store) > 2.0, "drift not flagged")
-    val currentCorpus = store.select(col("id").as("doc_id"), col("vec").as("emb"))
-    val index2 = IncrementalAnn.train(currentCorpus, "emb", "doc_id",
-      nlist = 4, nprobe = 2, trainSample = 256)
-    val store2 = IncrementalAnn.refresh(index2, IncrementalAnn.emptyStore(spark),
-      currentCorpus, "emb", "doc_id")
-    assert(IncrementalAnn.imbalance(index2, store2) <
-      IncrementalAnn.imbalance(index, store), "retrain did not improve balance")
+      // DRIFT: a flood of new vectors all in one cluster skews the store;
+      // imbalance flags it, retrain + one re-assignment restores balance
+      val flood = (0 until 120).map(i => (f"f$i%03d", vec(0, 7000 + i)))
+      store.refresh(idVec(flood), noIds, 4L)
+      val drifted = store.imbalance()
+      assert(drifted > 2.0, "drift not flagged")
+      val index2 = IncrementalAnn.train(store.snapshot(), "vec", "id",
+        nlist = 4, nprobe = 2, trainSample = 256)
+      store.reassign(index2)
+      assert(store.snapshot().count() == 159)
+      assert(store.imbalance() < drifted, "retrain did not improve balance")
+    } finally rmrf(dir)
   }
 }

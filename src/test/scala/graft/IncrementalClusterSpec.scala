@@ -32,8 +32,7 @@ class IncrementalClusterSpec extends SparkSpec {
   private def batchClusters(corpus: Map[String, String]): Map[String, String] = {
     if (corpus.isEmpty) return Map.empty
     val cdf = corpus.toSeq.toDF("key", "text")
-    val (_, pairs) = IncrementalDedup.refresh(
-      IncrementalDedup.emptyStore(spark), cdf, "text", "key", 8, 4, minJ)
+    val pairs = IncrementalDedup.pairsOf(cdf, "text", "key", 8, 4, minJ)
     GraphOps.clusterAssignments(cdf.select("key"), "key", pairs)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
   }
@@ -47,9 +46,9 @@ class IncrementalClusterSpec extends SparkSpec {
         val deadline = System.currentTimeMillis() + ms
         while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
       }
-      val h = DedupMaintenance.start(table, "text", s"$dir/pairs",
-        fromVersion = table.currentVersion, minJaccard = minJ, pollMs = 30L,
-        pinName = "clust-maint", touchesDir = Some(s"$dir/touches"))
+      val h = DedupMaintenance.startLake(table, "text", s"$dir/pairs", s"$dir/store",
+        minJaccard = minJ, pollMs = 30L, pinName = "clust-maint", numPids = 8,
+        touchesDir = Some(s"$dir/touches"))
       try {
         var corpus = Map.empty[String, String]
         def checkAt(v: Long): Unit = {
@@ -109,8 +108,7 @@ class IncrementalClusterSpec extends SparkSpec {
           DedupMaintenance.clustersAt(spark, s"$dir/pairs", s"$dir/touches",
             table.currentVersion, minJ), splits)
           .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-        val (_, batchPairs) = IncrementalDedup.refresh(
-          IncrementalDedup.emptyStore(spark),
+        val batchPairs = IncrementalDedup.pairsOf(
           corpus.toSeq.toDF("key", "text"), "text", "key", 8, 4, minJ)
         val viaBatch = GraphOps.leakageSafeSplit(live, "key", batchPairs, splits)
           .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet

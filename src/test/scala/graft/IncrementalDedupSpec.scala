@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.IncrementalDedup
+import graft.ops.{IncrementalDedup, LakeAnnStore, LakeDedupStore}
 
-/** Incremental near-dup maintenance: after every refresh, the consumer's
-  * accumulated pair state must equal a from-scratch recompute over the
-  * current corpus with the same estimator — adds, updates (signature
-  * replacement + re-emission), and deletes included.
+/** Incremental near-dup maintenance on the lake-backed store: after every
+  * refresh, the consumer's accumulated pair state must equal a
+  * from-scratch recompute over the current corpus with the same estimator
+  * ([[IncrementalDedup.pairsOf]]) — adds, updates (signature replacement
+  * + re-emission), and deletes included. Also the live maintenance loop
+  * ([[graft.stream.DedupMaintenance.startLake]]) and its contracts.
   */
 class IncrementalDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -16,68 +18,24 @@ class IncrementalDedupSpec extends SparkSpec {
   private val rowsPerBand = 4
   private val minJ = 0.5
 
-  private def doc(id: String, text: String) = (id, text)
-
   /** From-scratch oracle: same banded candidates + signature estimator
     * over the whole current corpus.
     */
   private def fullRecompute(corpus: Map[String, String]): Set[(String, String)] = {
     if (corpus.isEmpty) return Set.empty
-    val df = corpus.toSeq.toDF("doc_id", "text")
-    val sigs = IncrementalDedup.signatureOf(df, "text", "doc_id", bands, rowsPerBand)
-    val (_, pairs) = IncrementalDedup.refresh(
-      IncrementalDedup.emptyStore(spark), df, "text", "doc_id",
-      bands, rowsPerBand, minJ)
-    // a single refresh over the full corpus IS the batch recompute
-    assert(sigs.count() == corpus.size)
-    pairs.select("key_a", "key_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
+    pairSet(IncrementalDedup.pairsOf(corpus.toSeq.toDF("key", "text"), "text", "key",
+      bands, rowsPerBand, minJ))
   }
 
-  test("refresh stream equals full recompute at every step; updates re-emit, deletes drop") {
-    val base = "the quick brown fox jumps over the lazy dog and runs far away today"
-    def twin(tag: String) = base + " " + tag // high-Jaccard variants
-    var corpus = Map.empty[String, String]
-    var store = IncrementalDedup.emptyStore(spark)
-    // consumer contract: latest pairs per key — drop pairs touching
-    // changed/deleted keys, then add the freshly emitted ones
-    var pairState = Set.empty[(String, String)]
+  private def pairSet(df: DataFrame): Set[(String, String)] =
+    df.select("key_a", "key_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
 
-    def applyBatch(upserts: Seq[(String, String)], deletes: Seq[String] = Nil): Unit = {
-      corpus = corpus -- deletes ++ upserts
-      store = IncrementalDedup.remove(store, deletes.toDF("doc_id"), "doc_id")
-      pairState = pairState.filterNot { case (a, b) =>
-        deletes.contains(a) || deletes.contains(b) ||
-          upserts.exists { case (k, _) => k == a || k == b } }
-      if (upserts.nonEmpty) {
-        val (s2, pairs) = IncrementalDedup.refresh(
-          store, upserts.toDF("doc_id", "text"), "text", "doc_id",
-          bands, rowsPerBand, minJ)
-        store = s2
-        pairState ++= pairs.select("key_a", "key_b").collect()
-          .map(r => (r.getString(0), r.getString(1)))
-      }
-      assert(store.count() == corpus.size)
-      assert(pairState == fullRecompute(corpus),
-        s"divergence after batch: corpus keys ${corpus.keys.toSeq.sorted}")
-    }
-
-    // batch 1: two twins + one unrelated
-    applyBatch(Seq(doc("a1", twin("alpha")), doc("a2", twin("beta")),
-      doc("z1", "completely different words about spark catalyst optimizer internals")))
-    assert(pairState.contains(("a1", "a2")))
-    // batch 2: a third twin arrives → pairs against BOTH earlier twins
-    applyBatch(Seq(doc("a3", twin("gamma"))))
-    assert(pairState.contains(("a1", "a3")) && pairState.contains(("a2", "a3")))
-    // batch 3: UPDATE a2 to unrelated text → its old pairs die, no new ones
-    applyBatch(Seq(doc("a2", "entirely new content mentioning parquet footers and manifests only")))
-    assert(!pairState.exists { case (a, b) => a == "a2" || b == "a2" })
-    // batch 4: DELETE a1 → remaining twins only
-    applyBatch(Seq.empty, deletes = Seq("a1"))
-    assert(!pairState.exists { case (a, b) => a == "a1" || b == "a1" })
-    // batch 5: a2 comes BACK as a twin → re-pairs with a3
-    applyBatch(Seq(doc("a2", twin("delta"))))
-    assert(pairState.contains(("a2", "a3")))
+  private def awaitTrue(cond: => Boolean, ms: Long = 60000): Unit = {
+    val deadline = System.currentTimeMillis() + ms
+    while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
   }
+
+  private def noKeys: DataFrame = Seq.empty[String].toDF("key")
 
   test("end-to-end: the lake table's own changelog drives incremental dedup of the live corpus") {
     import graft.lake.LakeTable
@@ -93,13 +51,13 @@ class IncrementalDedupSpec extends SparkSpec {
       def batchDf(rows: Seq[(String, Int, String, String, String, java.sql.Timestamp, String, Long)]) =
         rows.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "op", "lsn")
 
-      var store = IncrementalDedup.emptyStore(spark)
+      val store = LakeDedupStore.create(spark, s"$dir/s", bands, rowsPerBand, numPids = 8)
       var pairState = Set.empty[(String, String)]
       var lastVersion = table.currentVersion
 
       /** Consume (lastVersion, cur] from the table's OWN changelog: resolve
-        * latest-per-key inside the window, route deletes to remove() and
-        * upserts to refresh() — exactly a ChangelogFollower callback body.
+        * latest-per-key inside the window, route deletes and upserts into
+        * one store refresh — exactly a ChangelogFollower callback body.
         */
       def consume(): Unit = {
         val cur = table.currentVersion
@@ -113,23 +71,17 @@ class IncrementalDedupSpec extends SparkSpec {
           .localCheckpoint(true)
         val deleted = latest.filter(col(Schemas.DELETED_COL)).select("key")
         val upserts = latest.filter(!col(Schemas.DELETED_COL)).select("key", "text")
-        store = IncrementalDedup.remove(store, deleted, "key")
         val changedKeys = latest.select("key").collect().map(_.getString(0)).toSet
         pairState = pairState.filterNot { case (a, b) =>
           changedKeys.contains(a) || changedKeys.contains(b) }
-        if (upserts.head(1).nonEmpty) {
-          val (s2, pairs) = IncrementalDedup.refresh(store, upserts, "text", "key",
-            bands, rowsPerBand, minJ)
-          store = s2
-          pairState ++= pairs.select("key_a", "key_b").collect()
-            .map(r => (r.getString(0), r.getString(1)))
-        }
+        pairState ++= pairSet(store.refresh(upserts, deleted, cur, minJ))
         lastVersion = cur
         // invariant: pair state == full recompute over the LIVE snapshot
         val live = table.snapshot()
           .withColumn("key", concat_ws("#", col("conv_id"), col("turn_idx")))
           .select("key", "text").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        assert(store.count() == live.size)
+        assert(store.snapshot().count() == live.size)
+        assert(store.watermark == cur)
         assert(pairState == fullRecompute(live))
       }
 
@@ -178,27 +130,24 @@ class IncrementalDedupSpec extends SparkSpec {
     (0 until 6).foreach { caseId =>
       val stream = Gen.listOfN(4, batchGen)
         .pureApply(Gen.Parameters.default, Seed(1000L + caseId))
-      var corpus = Map.empty[String, String]
-      var store = IncrementalDedup.emptyStore(spark)
-      var pairState = Set.empty[(String, String)]
-      stream.foreach { case (ups, dels) =>
-        val upserts = ups.filterNot { case (k, _) => dels.contains(k) }
-        corpus = corpus -- dels ++ upserts
-        store = IncrementalDedup.remove(store, dels.toDF("doc_id"), "doc_id")
-        val changed = upserts.map(_._1).toSet ++ dels
-        pairState = pairState.filterNot { case (a, b) =>
-          changed.contains(a) || changed.contains(b) }
-        if (upserts.nonEmpty) {
-          val (s2, pairs) = IncrementalDedup.refresh(store,
-            upserts.toDF("doc_id", "text"), "text", "doc_id", bands, rowsPerBand, minJ)
-          store = s2
-          pairState ++= pairs.select("key_a", "key_b").collect()
-            .map(r => (r.getString(0), r.getString(1)))
+      val dir = tmpDir("dedupprop")
+      try {
+        val store = LakeDedupStore.create(spark, s"$dir/s", bands, rowsPerBand, numPids = 4)
+        var corpus = Map.empty[String, String]
+        var pairState = Set.empty[(String, String)]
+        stream.zipWithIndex.foreach { case ((ups, dels), i) =>
+          val upserts = ups.filterNot { case (k, _) => dels.contains(k) }
+          corpus = corpus -- dels ++ upserts
+          val changed = upserts.map(_._1).toSet ++ dels
+          pairState = pairState.filterNot { case (a, b) =>
+            changed.contains(a) || changed.contains(b) }
+          pairState ++= pairSet(store.refresh(upserts.toDF("key", "text"),
+            dels.toDF("key"), i + 1L, minJ))
+          assert(store.snapshot().count() == corpus.size, s"case $caseId: store size drift")
+          assert(pairState == fullRecompute(corpus),
+            s"case $caseId diverged; corpus=${corpus.keys.toSeq.sorted}")
         }
-        assert(store.count() == corpus.size, s"case $caseId: store size drift")
-        assert(pairState == fullRecompute(corpus),
-          s"case $caseId diverged; corpus=${corpus.keys.toSeq.sorted}")
-      }
+      } finally rmrf(dir)
     }
   }
 
@@ -215,94 +164,52 @@ class IncrementalDedupSpec extends SparkSpec {
           new java.sql.Timestamp(1700000000000L + lsn), "U", lsn)
       def df(rows: Seq[(String, Int, String, String, String, java.sql.Timestamp, String, Long)]) =
         rows.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "op", "lsn")
+      def start() = graft.stream.DedupMaintenance.startLake(table, "text", s"$dir/pairs",
+        s"$dir/store", minJaccard = 0.5, pollMs = 30L, numPids = 8)
 
-      val h = graft.stream.DedupMaintenance.start(table, "text", s"$dir/pairs",
-        fromVersion = table.currentVersion, minJaccard = 0.5, pollMs = 30L)
+      // an EMPTY table: the fresh store bootstraps from an empty snapshot
+      var v2 = -1L
+      val h = start()
       try {
+        assert(h.store.watermark == table.currentVersion)
         CdcMerge.apply(table, df(Seq(
           turn("c1", 1, base + " alpha"), turn("c2", 2, base + " beta"))), 0L)
         val v1 = table.currentVersion
-        // fresh deadline per wait phase: the shared host swings 2-3x, and
-        // one budget across phases makes the LAST wait the flaky one
-        def awaitTrue(cond: => Boolean, ms: Long = 60000): Unit = {
-          val deadline = System.currentTimeMillis() + ms
-          while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
-        }
         awaitTrue(h.processedVersion >= v1)
         assert(h.failure.isEmpty, h.failure.toString)
         assert(h.processedVersion == v1)
-        assert(h.store.count() == 2)
+        assert(h.store.snapshot().count() == 2)
         // second batch: a third twin → cross-batch pairs appear in the log
         CdcMerge.apply(table, df(Seq(turn("c3", 3, base + " gamma"))), 1L)
-        val v2 = table.currentVersion
+        v2 = table.currentVersion
         awaitTrue(h.processedVersion >= v2)
-        assert(h.store.count() == 3)
-        val all = spark.read.parquet(s"$dir/pairs")
-          .select("key_a", "key_b").collect()
-          .map(r => (r.getString(0), r.getString(1))).toSet
+        assert(h.store.snapshot().count() == 3)
+        val all = pairSet(spark.read.parquet(s"$dir/pairs"))
         assert(all == Set(("c1#0", "c2#0"), ("c1#0", "c3#0"), ("c2#0", "c3#0")), all)
         // incremental consumer read: only window 2's pairs
-        val w2 = graft.stream.DedupMaintenance.pairsBetween(spark, s"$dir/pairs", v1, v2)
-          .select("key_a", "key_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
+        val w2 = pairSet(graft.stream.DedupMaintenance.pairsBetween(spark, s"$dir/pairs", v1, v2))
         assert(w2 == Set(("c1#0", "c3#0"), ("c2#0", "c3#0")), w2)
-        // durable pin tracks consumption
+        // durable pin tracks consumption (written after the callback)
+        awaitTrue(table.pins("dedup-maintenance") == v2)
         assert(table.pins("dedup-maintenance") == v2)
+      } finally h.close()
 
-        // RESTART: close, write another batch while "down", resume from
-        // the pin (store rebuilt from the pinned snapshot), catch up
-        h.close()
-        CdcMerge.apply(table, df(Seq(turn("c4", 4, base + " delta"))), 2L)
-        val v3 = table.currentVersion
-        val h2 = graft.stream.DedupMaintenance.resume(table, "text", s"$dir/pairs",
-          minJaccard = 0.5, pollMs = 30L)
-        try {
-          awaitTrue(h2.processedVersion >= v3)
-          assert(h2.failure.isEmpty, h2.failure.toString)
-          assert(h2.store.count() == 4)
-          val afterResume = graft.stream.DedupMaintenance
-            .pairsBetween(spark, s"$dir/pairs", v2, v3)
-            .select("key_a", "key_b").collect()
-            .map(r => (r.getString(0), r.getString(1))).toSet
-          assert(afterResume == Set(("c1#0", "c4#0"), ("c2#0", "c4#0"), ("c3#0", "c4#0")),
-            afterResume)
-          assert(table.pins("dedup-maintenance") == v3)
-        } finally h2.close()
-
-        // SECOND RESTART via a STORE CHECKPOINT (no snapshot rebuild):
-        // run with checkpointEvery=1 so the next window persists the
-        // store, then resume from the persisted checkpoint
-        val h3 = graft.stream.DedupMaintenance.resume(table, "text", s"$dir/pairs",
-          minJaccard = 0.5, pollMs = 30L,
-          storeCheckpointDir = Some(s"$dir/storeckpt"), checkpointEvery = 1)
-        try {
-          CdcMerge.apply(table, df(Seq(turn("c5", 5, base + " epsilon"))), 3L)
-          val v4 = table.currentVersion
-          awaitTrue(h3.processedVersion >= v4)
-          awaitTrue(java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$dir/storeckpt.version")))
-        } finally h3.close()
-        val markerJson = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(s"$dir/storeckpt.version")))
-        val marker = """"version":(\d+)""".r.findFirstMatchIn(markerJson).get.group(1).toLong
-        assert(marker == table.currentVersion)
-        // with checkpointing on, the durable pin anchors at the checkpoint
-        assert(table.pins("dedup-maintenance") == marker)
-        CdcMerge.apply(table, df(Seq(turn("c6", 6, base + " zeta"))), 4L)
-        val v5 = table.currentVersion
-        val h4 = graft.stream.DedupMaintenance.resume(table, "text", s"$dir/pairs",
-          minJaccard = 0.5, pollMs = 30L,
-          storeCheckpointDir = Some(s"$dir/storeckpt"), checkpointEvery = 1)
-        try {
-          awaitTrue(h4.processedVersion >= v5)
-          assert(h4.failure.isEmpty, h4.failure.toString)
-          assert(h4.store.count() == 6)
-          val w5 = graft.stream.DedupMaintenance
-            .pairsBetween(spark, s"$dir/pairs", marker, v5)
-            .select("key_a", "key_b").collect()
-            .map(r => (r.getString(0), r.getString(1))).toSet
-          assert(w5.contains(("c1#0", "c6#0")), w5)
-        } finally h4.close()
-      } finally scala.util.Try(h.close()) // idempotent if already closed
+      // RESTART: write another batch while "down", restart from the
+      // store's watermark, catch up
+      CdcMerge.apply(table, df(Seq(turn("c4", 4, base + " delta"))), 2L)
+      val v3 = table.currentVersion
+      val h2 = start()
+      try {
+        awaitTrue(h2.processedVersion >= v3)
+        assert(h2.failure.isEmpty, h2.failure.toString)
+        assert(h2.store.snapshot().count() == 4)
+        val afterRestart = pairSet(graft.stream.DedupMaintenance
+          .pairsBetween(spark, s"$dir/pairs", v2, v3))
+        assert(afterRestart == Set(("c1#0", "c4#0"), ("c2#0", "c4#0"), ("c3#0", "c4#0")),
+          afterRestart)
+        awaitTrue(table.pins("dedup-maintenance") == v3)
+        assert(table.pins("dedup-maintenance") == v3)
+      } finally h2.close()
     } finally rmrf(dir)
   }
 
@@ -314,13 +221,9 @@ class IncrementalDedupSpec extends SparkSpec {
     try {
       val table = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets = 2)
       val base = "a reply that will appear in two conversations almost verbatim tonight"
-      val h = graft.stream.DedupMaintenance.start(table, "text", s"$dir/pairs",
-        fromVersion = table.currentVersion, minJaccard = 0.5, pollMs = 30L)
+      val h = graft.stream.DedupMaintenance.startLake(table, "text", s"$dir/pairs",
+        s"$dir/store", minJaccard = 0.5, pollMs = 30L, numPids = 8)
       try {
-        def awaitTrue(cond: => Boolean, ms: Long = 60000): Unit = {
-          val deadline = System.currentTimeMillis() + ms
-          while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
-        }
         // batch 1: original schema
         CdcMerge.apply(table, Seq(
           ("c1", 0, "assistant", base + " one", null.asInstanceOf[String],
@@ -336,10 +239,8 @@ class IncrementalDedupSpec extends SparkSpec {
         val v2 = table.currentVersion
         awaitTrue(h.processedVersion >= v2)
         assert(h.failure.isEmpty, h.failure.toString)
-        assert(h.store.count() == 2)
-        val pairs = spark.read.parquet(s"$dir/pairs")
-          .select("key_a", "key_b").collect()
-          .map(r => (r.getString(0), r.getString(1))).toSet
+        assert(h.store.snapshot().count() == 2)
+        val pairs = pairSet(spark.read.parquet(s"$dir/pairs"))
         assert(pairs == Set(("c1#0", "c2#0")), pairs)
         // the evolved column is live in the table
         assert(table.snapshot().columns.contains("model"))
@@ -368,65 +269,85 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("a second maintenance loop on a live pin is refused AS A PURE NO-OP (pin untouched); a closed one can be restarted") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types._
     import graft.lake.LakeTable
     import graft.merge.CdcMerge
     import graft.model.Schemas
+    import graft.stream.{AnnMaintenance, DedupMaintenance}
     val dir = tmpDir("dedupdouble")
     try {
-      val table = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets = 2)
-      val v0 = table.currentVersion
-      // checkpointing mode: the pin anchors at the last CHECKPOINT (v0
-      // here — checkpointEvery is huge), protecting the replay window
-      val h = graft.stream.DedupMaintenance.start(table, "text", s"$dir/pairs",
-        fromVersion = v0, pollMs = 30L,
-        storeCheckpointDir = Some(s"$dir/ckpt"), checkpointEvery = 1000)
+      val schema = StructType(Schemas.transcript.fields.toSeq :+
+        StructField("emb", ArrayType(FloatType)))
+      val table = LakeTable.create(spark, s"$dir/t", schema, numBuckets = 2)
+      val pin = "dedup-maintenance"
+      def startDedup() = DedupMaintenance.startLake(table, "text", s"$dir/pairs",
+        s"$dir/store", pollMs = 30L, numPids = 8)
+      def startAnn() = AnnMaintenance.startLake(table, "emb", s"$dir/ann",
+        pollMs = 30L, pinName = pin, numPids = 8)
+      def pairLog(): Set[String] = {
+        val p = java.nio.file.Paths.get(s"$dir/pairs")
+        if (!java.nio.file.Files.exists(p)) Set.empty
+        else {
+          val s = java.nio.file.Files.walk(p)
+          try s.iterator().asScala.map(_.toString).toSet finally s.close()
+        }
+      }
+      val h = startDedup()
       try {
         CdcMerge.apply(table, Seq(
           ("c1", 0, "assistant", "some text", null.asInstanceOf[String],
-            new java.sql.Timestamp(1L), "U", 1L))
-          .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "op", "lsn"), 0L)
+            new java.sql.Timestamp(1L), Seq.fill(8)(1.0f), "U", 1L))
+          .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "emb", "op", "lsn")
+          .withColumn("emb", col("emb").cast(ArrayType(FloatType))), 0L)
         val v1 = table.currentVersion
-        val e = intercept[IllegalArgumentException](
-          graft.stream.DedupMaintenance.start(table, "text", s"$dir/pairs",
-            fromVersion = v1, pollMs = 30L,
-            storeCheckpointDir = Some(s"$dir/ckpt"), checkpointEvery = 1000))
+        awaitTrue(h.processedVersion >= v1 && table.pins(pin) == v1)
+        assert(h.failure.isEmpty, h.failure.toString)
+        val logBefore = pairLog()
+        val wmBefore = LakeDedupStore.load(spark, s"$dir/store").watermark
+        assert(wmBefore == v1)
+        // the refused calls must not move the live loop's pin, its store
+        // watermark or its pair log — nor create an ANN store
+        val e = intercept[IllegalArgumentException](startDedup())
         assert(e.getMessage.contains("still live"), e.getMessage)
-        // the REFUSED call must not have advanced the live loop's pin —
-        // that would shrink the replay window its checkpoint depends on
-        assert(table.pins("dedup-maintenance") == v0,
-          s"refused start moved the pin to ${table.pins("dedup-maintenance")}")
+        // the ANN loop shares the registry: same table + pin is refused too
+        val e2 = intercept[IllegalArgumentException](startAnn())
+        assert(e2.getMessage.contains("still live"), e2.getMessage)
+        assert(table.pins(pin) == v1, s"refused start moved the pin to ${table.pins(pin)}")
+        assert(LakeDedupStore.load(spark, s"$dir/store").watermark == wmBefore)
+        assert(pairLog() == logBefore)
+        assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/ann")))
       } finally h.close()
-      // after a clean close the pin is free again
-      val h2 = graft.stream.DedupMaintenance.start(table, "text", s"$dir/pairs",
-        fromVersion = table.currentVersion, pollMs = 30L)
-      h2.close()
+      // after a clean close the pin is free again — for either loop
+      val h2 = startDedup()
+      try assert(h2.processedVersion == table.currentVersion) finally h2.close()
+      val h3 = startAnn()
+      try assert(h3.store.snapshot().count() == 1) finally h3.close()
     } finally rmrf(dir)
   }
 
   test("empty-batch refresh and empty-corpus search are content no-ops") {
-    val docs = Seq(("d1", "some text here"), ("d2", "other text there"))
-    val (store, _) = IncrementalDedup.refresh(IncrementalDedup.emptyStore(spark),
-      docs.toDF("doc_id", "text"), "text", "doc_id")
-    // empty change batch: store content unchanged, no pairs
-    val (s2, pairs) = IncrementalDedup.refresh(store,
-      Seq.empty[(String, String)].toDF("doc_id", "text"), "text", "doc_id")
-    assert(s2.count() == 2 && pairs.count() == 0)
-    // remove of nothing: unchanged
-    assert(IncrementalDedup.remove(s2, Seq.empty[String].toDF("doc_id"), "doc_id")
-      .count() == 2)
-    // ANN: search over an empty store returns no rows; k > corpus is fine
-    val idx = graft.ops.IncrementalAnn.IvfIndex(
-      Array(Array.fill(8)(1.0), Array.fill(8)(-1.0)), nprobe = 2)
-    val q = Seq(("q", Seq.fill(8)(1.0f))).toDF("doc_id", "emb")
-      .select(col("doc_id"), col("emb").cast("array<float>").as("emb"))
-    assert(graft.ops.IncrementalAnn.search(idx,
-      graft.ops.IncrementalAnn.emptyStore(spark), q, "emb", "doc_id", 5).count() == 0)
-    val one = graft.ops.IncrementalAnn.refresh(idx,
-      graft.ops.IncrementalAnn.emptyStore(spark),
-      Seq(("c1", Seq.fill(8)(1.0f))).toDF("doc_id", "emb")
-        .select(col("doc_id"), col("emb").cast("array<float>").as("emb")),
-      "emb", "doc_id")
-    assert(graft.ops.IncrementalAnn.search(idx, one, q, "emb", "doc_id", 5).count() == 1)
+    val dir = tmpDir("emptybatch")
+    try {
+      val store = LakeDedupStore.create(spark, s"$dir/d", bands, rowsPerBand, numPids = 4)
+      store.refresh(Seq(("d1", "some text here"), ("d2", "other text there")).toDF("key", "text"),
+        noKeys, 1L)
+      // empty change batch (no upserts, no deletes): store content
+      // unchanged, no pairs, only the watermark advances
+      val pairs = store.refresh(Seq.empty[(String, String)].toDF("key", "text"), noKeys, 2L)
+      assert(pairs.count() == 0 && store.snapshot().count() == 2 && store.watermark == 2L)
+      // ANN: search over an empty store returns no rows; k > corpus is fine
+      val idx = graft.ops.IncrementalAnn.IvfIndex(
+        Array(Array.fill(8)(1.0), Array.fill(8)(-1.0)), nprobe = 2)
+      val ann = LakeAnnStore.create(spark, s"$dir/a", idx, numPids = 4)
+      val q = Seq(("q", Seq.fill(8)(1.0f))).toDF("doc_id", "emb")
+        .select(col("doc_id"), col("emb").cast("array<float>").as("emb"))
+      assert(ann.search(q, "emb", "doc_id", 5).count() == 0)
+      ann.refresh(Seq(("c1", Seq.fill(8)(1.0f))).toDF("id", "vec")
+        .select(col("id"), col("vec").cast("array<float>").as("vec")),
+        Seq.empty[String].toDF("id"), 1L)
+      assert(ann.search(q, "emb", "doc_id", 5).count() == 1)
+    } finally rmrf(dir)
   }
 
   test("estimatedJaccard is the exact matching-component fraction") {
@@ -441,75 +362,55 @@ class IncrementalDedupSpec extends SparkSpec {
     got.foreach(r => assert(r.getDouble(0) == r.getDouble(1), r.toString))
   }
 
-  test("StoreIO crash paths: stranded .old generation is readable, stale siblings are swept on the next save") {
-    val dir = tmpDir("storeio")
-    try {
-      val a = Seq(("k1", 1), ("k2", 2)).toDF("key", "v")
-      val b = Seq(("k1", 1), ("k2", 2), ("k3", 3)).toDF("key", "v")
-      graft.lake.StoreIO.save(a, s"$dir/store")
-      assert(graft.lake.StoreIO.load(spark, s"$dir/store").count() == 2)
-      // simulate a crash BETWEEN the two moves: target moved away to
-      // .old-, replacement never landed
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(s"$dir/store"),
-        java.nio.file.Paths.get(s"$dir/store.old-deadbeef"))
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/store")))
-      assert(graft.lake.StoreIO.load(spark, s"$dir/store").count() == 2) // stranded gen readable
-      // a leftover tmp dir from a crashed write
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$dir/store.tmp-cafe0000"))
-      // next save sweeps both leftovers and installs the new generation
-      graft.lake.StoreIO.save(b, s"$dir/store")
-      assert(graft.lake.StoreIO.load(spark, s"$dir/store").count() == 3)
-      val leftovers = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      try {
-        val names = leftovers.iterator()
-        var bad = List.empty[String]
-        while (names.hasNext) {
-          val n = names.next().getFileName.toString
-          if (n.contains(".old-") || n.contains(".tmp-")) bad ::= n
-        }
-        assert(bad.isEmpty, s"crash leftovers not swept: $bad")
-      } finally leftovers.close()
-    } finally rmrf(dir)
-  }
-
   test("a change batch with several rows per key is refused loudly, not silently deduplicated into store corruption") {
-    val dup = Seq(("k1", "first version of the text"), ("k1", "second version of the text"))
-    val e = intercept[IllegalArgumentException](
-      IncrementalDedup.refresh(IncrementalDedup.emptyStore(spark),
-        dup.toDF("doc_id", "text"), "text", "doc_id"))
-    assert(e.getMessage.contains("latest-per-key"), e.getMessage)
-    val vecDup = Seq(("v1", Seq.fill(8)(1.0f)), ("v1", Seq.fill(8)(0.5f)))
-      .toDF("doc_id", "emb").select(col("doc_id"), col("emb").cast("array<float>").as("emb"))
-    val idx = graft.ops.IncrementalAnn.IvfIndex(Array(Array.fill(8)(1.0)), nprobe = 1)
-    val e2 = intercept[IllegalArgumentException](
-      graft.ops.IncrementalAnn.refresh(idx,
-        graft.ops.IncrementalAnn.emptyStore(spark), vecDup, "emb", "doc_id"))
-    assert(e2.getMessage.contains("latest-per-key"), e2.getMessage)
+    val dir = tmpDir("dupkey")
+    try {
+      val store = LakeDedupStore.create(spark, s"$dir/d", bands, rowsPerBand, numPids = 4)
+      val dup = Seq(("k1", "first version of the text"), ("k1", "second version of the text"))
+      val e = intercept[IllegalArgumentException](
+        store.planRefresh(dup.toDF("key", "text"), noKeys, minJ))
+      assert(e.getMessage.contains("latest-per-key"), e.getMessage)
+      assert(store.watermark == -1L && store.snapshot().count() == 0) // nothing committed
+      val vecDup = Seq(("v1", Seq.fill(8)(1.0f)), ("v1", Seq.fill(8)(0.5f)))
+        .toDF("id", "vec").select(col("id"), col("vec").cast("array<float>").as("vec"))
+      val idx = graft.ops.IncrementalAnn.IvfIndex(Array(Array.fill(8)(1.0)), nprobe = 1)
+      val ann = LakeAnnStore.create(spark, s"$dir/a", idx, numPids = 4)
+      val e2 = intercept[IllegalArgumentException](
+        ann.refresh(vecDup, Seq.empty[String].toDF("id"), 1L))
+      assert(e2.getMessage.contains("latest-per-key"), e2.getMessage)
+      assert(ann.watermark == -1L && ann.snapshot().count() == 0)
+    } finally rmrf(dir)
   }
 
   test("work per refresh is O(batch): only changed docs are shingled") {
     // 50 stable docs in the store; a 2-doc batch must emit its pairs
-    // without recomputing stable signatures (verified by value: the
-    // stable docs' signatures in the updated store are IDENTICAL objects
-    // of the carry anti-join, and pair emission touches only buckets the
-    // new docs probe)
-    val stable = (0 until 50).map(i => (s"s$i", s"stable document number $i with shared vocabulary words plus unique token u$i"))
-    val (store0, _) = IncrementalDedup.refresh(
-      IncrementalDedup.emptyStore(spark), stable.toDF("doc_id", "text"),
-      "text", "doc_id", bands, rowsPerBand, minJ)
-    val twins = Seq(("n1", "an exact twin pair lives here today"),
-      ("n2", "an exact twin pair lives here today"))
-    val (store1, pairs) = IncrementalDedup.refresh(
-      store0, twins.toDF("doc_id", "text"), "text", "doc_id", bands, rowsPerBand, minJ)
-    val got = pairs.select("key_a", "key_b", "est_jaccard").collect()
-    assert(got.exists(r => r.getString(0) == "n1" && r.getString(1) == "n2" &&
-      r.getDouble(2) == 1.0))
-    assert(store1.count() == 52)
-    // stable docs' signatures carried bit-identically
-    val before = store0.filter(col("key") === "s7").select("sig").collect()(0).getSeq[Long](0)
-    val after = store1.filter(col("key") === "s7").select("sig").collect()(0).getSeq[Long](0)
-    assert(before == after)
+    // while appending rows for the batch only: stable docs' band and key
+    // rows stay in their files, untouched and bit-identical
+    val dir = tmpDir("dedupobatch")
+    try {
+      val stable = (0 until 50).map(i => (s"s$i", s"stable document number $i with shared vocabulary words plus unique token u$i"))
+      val store = LakeDedupStore.create(spark, s"$dir/s", bands, rowsPerBand, numPids = 8)
+      store.refresh(stable.toDF("key", "text"), noKeys, 1L, minJ)
+      def sigOf(k: String) = store.snapshot().filter(col("key") === k)
+        .select("sig").collect()(0).getSeq[Long](0)
+      val before = sigOf("s7")
+      val filesBefore = (store.bandStore.manifest.files ++ store.keyIndex.manifest.files)
+        .map(_.path).toSet
+      val twins = Seq(("n1", "an exact twin pair lives here today"),
+        ("n2", "an exact twin pair lives here today"))
+      val got = store.refresh(twins.toDF("key", "text"), noKeys, 2L, minJ)
+        .select("key_a", "key_b", "est_jaccard").collect()
+      assert(got.exists(r => r.getString(0) == "n1" && r.getString(1) == "n2" &&
+        r.getDouble(2) == 1.0))
+      assert(store.snapshot().count() == 52)
+      // every earlier file carried; the new files hold the batch's rows only
+      val bandFiles = store.bandStore.manifest.files
+      val keyFiles = store.keyIndex.manifest.files
+      assert(filesBefore.subsetOf((bandFiles ++ keyFiles).map(_.path).toSet))
+      assert(bandFiles.filterNot(f => filesBefore(f.path)).map(_.rows).sum == 2 * bands)
+      assert(keyFiles.filterNot(f => filesBefore(f.path)).map(_.rows).sum == 2)
+      // stable docs' signatures carried bit-identically
+      assert(sigOf("s7") == before)
+    } finally rmrf(dir)
   }
 }

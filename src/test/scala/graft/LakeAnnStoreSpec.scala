@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.{IncrementalAnn, LakeAnnStore}
 
-/** The lake-backed ANN assignment store must match the in-memory
-  * incremental path (proved equal to batch assignment in round 3) at
-  * every step, and its search must equal the in-memory search — while
-  * reading only the probed cells' partitions.
+/** The lake-backed ANN assignment store must equal a batch assignment of
+  * the surviving corpus at every step, and its search must equal the
+  * reference search over that assignment — while reading only the probed
+  * cells' partitions.
   */
 class LakeAnnStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -23,26 +23,25 @@ class LakeAnnStoreSpec extends SparkSpec {
   private def toVecDf(rows: Seq[(String, Seq[Float])]) =
     rows.toDF("id", "vec").select(col("id"), col("vec").cast("array<float>").as("vec"))
 
-  test("lake-backed refresh equals the in-memory incremental store at every step; search results identical and cell-pruned") {
+  test("lake-backed refresh equals batch assignment at every step; search results identical and cell-pruned") {
     val dir = tmpDir("lakeann")
     try {
       val index = IncrementalAnn.IvfIndex(
         Array(Array.tabulate(dims)(d => if (d == 0) 1.0 else 0.1),
           Array.tabulate(dims)(d => if (d == 0) -1.0 else 0.1)), nprobe = 1)
       val lake = LakeAnnStore.create(spark, s"$dir/s", index, numPids = 8)
-      var mem = IncrementalAnn.emptyStore(spark)
+      var corpus = Map.empty[String, Seq[Float]]
+      def assigned = toVecDf(corpus.toSeq).withColumn("cell", index.assignExpr(col("vec")))
+      def cellsOf(df: org.apache.spark.sql.DataFrame) =
+        df.select("id", "cell").collect().map(r => r.getString(0) -> r.getInt(1)).toMap
       var wm = 0L
 
       def applyBatch(s: LakeAnnStore, ups: Seq[(String, Seq[Float])],
                      dels: Seq[String] = Nil): Unit = {
         wm += 1
-        mem = IncrementalAnn.remove(mem, dels.toDF("id"), "id")
-        if (ups.nonEmpty)
-          mem = IncrementalAnn.refresh(index, mem, toVecDf(ups), "vec", "id")
+        corpus = corpus -- dels ++ ups
         s.refresh(toVecDf(ups), dels.toDF("id"), wm)
-        val got = s.snapshot().collect().map(r => (r.getString(0), r.getInt(1))).toSet
-        val want = mem.collect().map(r => (r.getString(0), r.getInt(1))).toSet
-        assert(got == want, s"assignment divergence at wm=$wm")
+        assert(cellsOf(s.snapshot()) == cellsOf(assigned), s"assignment divergence at wm=$wm")
         assert(s.watermark == wm)
       }
 
@@ -53,13 +52,13 @@ class LakeAnnStoreSpec extends SparkSpec {
       // DELETE
       applyBatch(lake, Seq.empty, dels = Seq("p1a"))
 
-      // search parity vs the in-memory path, for queries near both poles
+      // search parity vs the reference search, for queries near both poles
       val qs = toVecDf(Seq("q0" -> vec(0, 9), "q1" -> vec(1, 9)))
       def normalize(df: org.apache.spark.sql.DataFrame) =
         df.select("query_id", "corpus_id", "rank").collect()
           .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
       val gotSearch = normalize(lake.search(qs, "vec", "id", k = 2))
-      val wantSearch = normalize(IncrementalAnn.search(index, mem, qs, "vec", "id", k = 2))
+      val wantSearch = normalize(IncrementalAnn.search(index, assigned, qs, "vec", "id", k = 2))
       assert(gotSearch == wantSearch, s"got=$gotSearch want=$wantSearch")
       // pruning: with nprobe=1 the two queries probe one cell each — the
       // probed pid set must be a strict subset of the store's partitions
@@ -79,9 +78,9 @@ class LakeAnnStoreSpec extends SparkSpec {
       // content (ids) preserved, search still finds the near pole
       val swapped = IncrementalAnn.IvfIndex(index.centroids.reverse, nprobe = 1)
       re.reassign(swapped)
-      val after = re.snapshot().collect().map(r => (r.getString(0), r.getInt(1))).toMap
-      assert(after.keySet == mem.collect().map(_.getString(0)).toSet)
-      val relabelled = mem.collect().map(r => r.getString(0) -> (1 - r.getInt(1))).toMap
+      val after = cellsOf(re.snapshot())
+      assert(after.keySet == corpus.keySet)
+      val relabelled = cellsOf(assigned).map { case (id, c) => id -> (1 - c) }
       assert(after == relabelled, s"after=$after want=$relabelled")
       assert(normalize(re.search(qs, "vec", "id", k = 2)) == wantSearch)
     } finally rmrf(dir)

@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.lake.BucketStore
 import graft.ops.{IncrementalDedup, LakeDedupStore}
 
-/** The lake-backed signature store must be pair-for-pair equivalent to the
-  * in-memory incremental path (which round 3 proved equivalent to a full
-  * recompute) at every step — adds, updates, deletes, resurrection —
-  * including across compaction, partition SPLITS, and a cold reload.
+/** The lake-backed signature store's maintained pair state must equal a
+  * from-scratch recompute over the current corpus at every step — adds,
+  * updates, deletes, resurrection — including across compaction,
+  * partition SPLITS, and a cold reload.
   */
 class LakeDedupStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -16,16 +16,13 @@ class LakeDedupStoreSpec extends SparkSpec {
   private val rowsPerBand = 4
   private val minJ = 0.5
 
-  /** From-scratch oracle (same estimator): one in-memory refresh over the
+  /** From-scratch oracle (same estimator): the banded self-join over the
     * whole corpus.
     */
-  private def fullRecompute(corpus: Map[String, String]): Set[(String, String)] = {
-    if (corpus.isEmpty) return Set.empty
-    val df = corpus.toSeq.toDF("key", "text")
-    val (_, pairs) = IncrementalDedup.refresh(
-      IncrementalDedup.emptyStore(spark), df, "text", "key", bands, rowsPerBand, minJ)
-    pairs.select("key_a", "key_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
-  }
+  private def fullRecompute(corpus: Map[String, String]): Set[(String, String)] =
+    if (corpus.isEmpty) Set.empty
+    else pairSet(IncrementalDedup.pairsOf(corpus.toSeq.toDF("key", "text"), "text", "key",
+      bands, rowsPerBand, minJ))
 
   private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
     df.select("key_a", "key_b").collect().map(r => (r.getString(0), r.getString(1))).toSet

@@ -130,36 +130,38 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("incremental dedup refresh re-shingles only the batch: store side reads checkpointed signatures") {
+  test("incremental dedup refresh re-shingles only the batch: store side scans stored signatures") {
     import spark.implicits._
-    val docs = (0 until 200).map(i => (s"d$i", s"document number $i sharing lots of words with neighbors"))
-    val (store, _) = graft.ops.IncrementalDedup.refresh(
-      graft.ops.IncrementalDedup.emptyStore(spark), docs.toDF("doc_id", "text"),
-      "text", "doc_id")
-    val batch = Seq(("n1", "a brand new arrival"), ("n2", "a brand new arrival"))
-    val (_, pairs) = graft.ops.IncrementalDedup.refresh(
-      store, batch.toDF("doc_id", "text"), "text", "doc_id")
-    val plan = pairs.queryExecution.executedPlan.toString
-    // the stored side enters as checkpointed rows (ExistingRDD/LocalTableScan
-    // family), NOT as a re-computation of the text pipeline; the signature
-    // expression appears only for the 2-doc batch side
-    assert(plan.contains("ExistingRDD") || plan.contains("Scan ExistingRDD"),
-      s"store side is not a checkpoint scan:\n${plan.take(2000)}")
-    val shingleOps = "minhash_signature|regexp_extract_all|sentences\\(".r
-      .findAllIn(plan).size
-    // one signature pipeline (the batch side of the candidate join may be
-    // referenced from a reused exchange/subplan, so allow plan-node reuse,
-    // but a store-side recompute would roughly double the count vs the
-    // batch-only baseline)
-    val batchOnlyPlan = graft.ops.IncrementalDedup.signatureOf(
-      batch.toDF("doc_id", "text"), "text", "doc_id", 8, 4)
-      .queryExecution.executedPlan.toString
-    val baseline = "minhash_signature|regexp_extract_all|sentences\\(".r
-      .findAllIn(batchOnlyPlan).size
-    assert(shingleOps <= baseline * 2,
-      s"refresh plan computes signatures $shingleOps times (batch-only baseline $baseline):\n${plan.take(3000)}")
-    // and no quadratic leg, same contract as the batch operators
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"))
+    val dir = tmpDir("planshape-dedup")
+    try {
+      val docs = (0 until 200).map(i => (s"d$i", s"document number $i sharing lots of words with neighbors"))
+      val store = graft.ops.LakeDedupStore.create(spark, s"$dir/s", 8, 4, numPids = 8)
+      store.refresh(docs.toDF("key", "text"), Seq.empty[String].toDF("key"), 1L)
+      val batch = Seq(("n1", "a brand new arrival"), ("n2", "a brand new arrival"))
+      val pairs = store.planRefresh(batch.toDF("key", "text"),
+        Seq.empty[String].toDF("key"), 0.7).pairs
+      val plan = pairs.queryExecution.executedPlan.toString
+      // the stored side enters as a parquet scan of persisted signatures,
+      // NOT as a re-computation of the text pipeline; the signature
+      // expression appears only for the 2-doc batch side
+      assert(plan.contains("Scan parquet") && plan.contains("sig:array<bigint>"),
+        s"store side is not a scan of stored signatures:\n${plan.take(2000)}")
+      val shingleOps = "minhash_signature|regexp_extract_all|sentences\\(".r
+        .findAllIn(plan).size
+      // one signature pipeline (the batch side of the candidate join may be
+      // referenced from a reused exchange/subplan, so allow plan-node reuse,
+      // but a store-side recompute would roughly double the count vs the
+      // batch-only baseline)
+      val batchOnlyPlan = graft.ops.IncrementalDedup.signatureOf(
+        batch.toDF("key", "text"), "text", "key", 8, 4)
+        .queryExecution.executedPlan.toString
+      val baseline = "minhash_signature|regexp_extract_all|sentences\\(".r
+        .findAllIn(batchOnlyPlan).size
+      assert(shingleOps <= baseline * 2,
+        s"refresh plan computes signatures $shingleOps times (batch-only baseline $baseline):\n${plan.take(3000)}")
+      // and no quadratic leg, same contract as the batch operators
+      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"))
+    } finally rmrf(dir)
   }
 
   test("window fills plan running frames only — no unbounded-FOLLOWING scan") {
