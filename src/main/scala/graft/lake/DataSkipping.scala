@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Manifest-level data skipping: decide from per-file [[ColStat]] bounds
   * whether a file can possibly contain a row satisfying a predicate, and
@@ -12,7 +13,7 @@ import org.apache.spark.sql.types._
   * before any scan task launches. At 100 TB this is the difference between
   * "read the partition-pruned buckets" and "read the handful of files
   * whose [min,max] intersect the predicate" — clustering (see
-  * `Compactor.zorderCompact`) exists to make these ranges tight.
+  * `Compactor.zorder`) exists to make these ranges tight.
   *
   * == Soundness under merge-on-read ==
   *
@@ -24,7 +25,7 @@ import org.apache.spark.sql.types._
   * through the filter. The file-level rule here restores soundness:
   *
   *  - a bucket whose files are all BASE holds at most one row per key
-  *    (compaction/CoW wrote it that way) and is read without resolution →
+  *    (compaction wrote it that way) and is read without resolution →
   *    per-file skipping applies;
   *  - a bucket carrying any DELTA file is kept or dropped WHOLE: it is
   *    dropped only when NO file in it can contain a matching row — then no
@@ -54,25 +55,32 @@ object DataSkipping {
     * where min/max stats are useless: delta files span their bucket's
     * whole key range, and z-ordered bases carry deliberately loose
     * (minKey, maxKey). Deserialized blooms are cached process-wide by
-    * file path (file contents are immutable under a path — same rule as
-    * LakeTable's cache).
+    * file path (a path is annotated with at most one bloom over its
+    * immutable contents), at most [[CacheCap]] of them, least recently
+    * used evicted first; point lookups ([[LakeTable.filesForConversation]])
+    * share the cache.
     */
   object KeyBloom {
     val KEY_COL = "conv_id"
+    val CacheCap = 8192
     private val cache =
-      new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.util.sketch.BloomFilter]()
-    private def hashOf(key: String): Long =
-      org.apache.spark.sql.catalyst.expressions.XxHash64(
-        Seq(Literal(org.apache.spark.unsafe.types.UTF8String.fromString(key), StringType)), 42L)
-        .eval(null).asInstanceOf[Long]
+      new java.util.LinkedHashMap[String, BloomFilter](256, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[String, BloomFilter]): Boolean =
+          size() > CacheCap
+      }
+    /** The file's deserialized bloom, if it has one. */
+    def of(f: FileEntry): Option[BloomFilter] = f.bloom.map { b64 =>
+      cache.synchronized(Option(cache.get(f.path))).getOrElse {
+        val b = BloomFilter.readFrom(java.util.Base64.getDecoder.decode(b64))
+        cache.synchronized(cache.put(f.path, b))
+        b
+      }
+    }
+    private[lake] def cacheSize: Int = cache.synchronized(cache.size)
+    private[lake] def isCached(path: String): Boolean = cache.synchronized(cache.containsKey(path))
     /** false ONLY when a bloom is present and excludes the value. */
-    def mightContain(f: FileEntry, value: Any): Boolean = (f.bloom, value) match {
-      case (Some(b64), s: String) =>
-        if (cache.size > 8192) cache.clear()
-        cache.computeIfAbsent(f.path, _ =>
-          org.apache.spark.util.sketch.BloomFilter.readFrom(
-            java.util.Base64.getDecoder.decode(b64)))
-          .mightContainLong(hashOf(s))
+    def mightContain(f: FileEntry, value: Any): Boolean = value match {
+      case s: String => of(f).forall(_.mightContainLong(LakeTable.keyHash(s)))
       case _ => true
     }
     def testFor(f: FileEntry): Option[(String, Any => Boolean)] =

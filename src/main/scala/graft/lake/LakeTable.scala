@@ -19,9 +19,9 @@ import graft.model.Schemas
   *
   * Design points for 100 TB scale:
   *   - `bucket = pmod(xxhash64(conv_id), numBuckets)` — storage-level hash
-  *     partitioning so a MERGE only rewrites touched buckets (copy-on-write
-  *     at bucket granularity; dynamic "partition pruning" = manifest file
-  *     list restricted to affected buckets).
+  *     partitioning so a MERGE appends deltas only to touched buckets and
+  *     compaction rewrites at bucket granularity; dynamic "partition
+  *     pruning" = manifest file list restricted to affected buckets.
   *   - Readers never list directories: the manifest carries the exact file
   *     list, so stale/orphaned files are invisible (snapshot isolation) and
   *     S3-style listing storms are avoided.
@@ -98,11 +98,11 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     * survive into persisted delta files (only `_deleted` does), so an
     * 'I'-vs-'U' tie at one (key, lsn) — two NON-delete rows with different
     * payloads, split across commits by an LSN-duplicating source — cannot
-    * be ordered by op at read time. The CoW path (which dedups before the
-    * rewrite) would pick 'U'; MOR resolve may pick either payload, but it
-    * picks the SAME one everywhere: the residual tie is broken by a hash
-    * of the full payload, so MOR reads, replays, and the maintenance
-    * consumers (which share [[LakeTable.resolveOrder]]) all agree.
+    * be ordered by op at read time. Resolve may pick either payload, but
+    * it picks the SAME one everywhere: the residual tie is broken by a
+    * hash of the full payload, so reads, compactions, replays, and the
+    * maintenance consumers (which share [[LakeTable.resolveOrder]]) all
+    * agree.
     */
   private def maxLsnResolve(df: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -113,7 +113,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
   }
 
   /** PER-BUCKET merge-on-read resolution: buckets whose files are all BASE
-    * are already per-key resolved (compaction/COW wrote them that way) and
+    * are already per-key resolved (compaction wrote them that way) and
     * stream straight from the scan with NO shuffle; only delta-bearing
     * buckets pay the per-key max-LSN window. Buckets partition the key
     * space (bucket = hash(conv_id)), so resolving each side independently
@@ -299,7 +299,8 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
       // restore across a REBUCKET that kept the current numBuckets would
       // misread every unstamped src file at the wrong depth (missed point
       // lookups, wrong coverage closures, duplicate base rows after the
-      // next CoW). A later rebucket grows the space again from src's value.
+      // next compaction). A later rebucket grows the space again from
+      // src's value.
       numBuckets = src.numBuckets,
       totalRows = src.totalRows,
       maxLsn = src.maxLsn,
@@ -341,8 +342,8 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
   /** REBUCKET: multiply the bucket space by integer `factor` (>= 2) as a
     * METADATA-ONLY commit — the growth story for a table whose fixed
     * creation-time bucket count the corpus has outgrown (a 10^10-event
-    * table created at 64 buckets carries multi-TB buckets: CoW rewrites
-    * and compactions balloon, per-key pruning degrades). No data file is
+    * table created at 64 buckets carries multi-TB buckets: compactions
+    * balloon, per-key pruning degrades). No data file is
     * touched: every existing file is stamped with its write depth
     * ([[FileEntry.writePids]], absent = current), and coverage arithmetic
     * (`bucket = hash mod depth`, depth | numBuckets) lets readers,
@@ -355,8 +356,8 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     *
     * Cost: one O(files) manifest rewrite (stamping changes every
     * segment's content address). Concurrency: CAS-retried against
-    * concurrent writers/compactors; in-flight MOR commits rebase over a
-    * rebucket by stamping their own files (see CdcMerge).
+    * concurrent writers/compactors; in-flight merges and compactions
+    * rebase over a rebucket by stamping their own files (see CdcMerge).
     *
     * Reference-scale analogue: owid-etl re-shards nothing (pandas,
     * single node); this is the knob its architecture lacks.
@@ -424,35 +425,9 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     readAligned(mTo, files, target)
   }
 
-  /** Driver-side key hash — the same xxhash64(seed 42) the `xxhash64`
-    * Catalyst function computes, evaluated via the expression itself (so
-    * bucket routing and bloom membership agree with distributed plans
-    * bit-for-bit).
-    */
-  def keyHash(convId: String): Long =
-    org.apache.spark.sql.catalyst.expressions.XxHash64(
-      Seq(org.apache.spark.sql.catalyst.expressions.Literal(
-        org.apache.spark.unsafe.types.UTF8String.fromString(convId),
-        org.apache.spark.sql.types.StringType)), 42L)
-      .eval(null).asInstanceOf[Long]
-
   /** Driver-side bucket assignment for a key. */
   def bucketOf(convId: String, numBuckets: Int): Int =
     java.lang.Math.floorMod(keyHash(convId), numBuckets.toLong).toInt
-
-  // deserialized-bloom cache: a file path is annotated with at most one
-  // bloom over its (immutable) contents, so path-keyed caching is sound;
-  // bounded by clearing when manifests churn past the cap
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.util.sketch.BloomFilter]()
-
-  private def bloomFor(f: FileEntry): Option[org.apache.spark.util.sketch.BloomFilter] =
-    f.bloom.map { b64 =>
-      if (bloomCache.size > 8192) bloomCache.clear()
-      bloomCache.computeIfAbsent(f.path, _ =>
-        org.apache.spark.util.sketch.BloomFilter.readFrom(
-          java.util.Base64.getDecoder.decode(b64)))
-    }
 
   /** Files that can contain `convId`: bucket pruning + per-file
     * (minKey, maxKey) range pruning from the manifest (populated from
@@ -466,7 +441,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     m.files.filter { f =>
       m.covers(f, bucketOf(convId, m.numBuckets)) &&
         f.minKey.forall(_ <= convId) && f.maxKey.forall(_ >= convId) &&
-        bloomFor(f).forall(_.mightContainLong(h))
+        DataSkipping.KeyBloom.of(f).forall(_.mightContainLong(h))
     }
   }
 
@@ -801,6 +776,18 @@ object LakeTable {
   def resolveOrder(df: DataFrame): Seq[org.apache.spark.sql.Column] =
     Seq(col(Schemas.LSN_COL).desc, col(Schemas.DELETED_COL).asc,
       xxhash64(df.columns.sorted.map(col).toSeq: _*).desc)
+
+  /** Driver-side key hash — the same xxhash64(seed 42) the `xxhash64`
+    * Catalyst function computes, evaluated via the expression itself (so
+    * bucket routing and bloom membership agree with distributed plans
+    * bit-for-bit).
+    */
+  def keyHash(convId: String): Long =
+    org.apache.spark.sql.catalyst.expressions.XxHash64(
+      Seq(org.apache.spark.sql.catalyst.expressions.Literal(
+        org.apache.spark.unsafe.types.UTF8String.fromString(convId),
+        org.apache.spark.sql.types.StringType)), 42L)
+      .eval(null).asInstanceOf[Long]
 
   /** One JVM-wide monitor per canonical table root — commit and metadata
     * vacuum serialize on it regardless of how many LakeTable instances

@@ -165,7 +165,7 @@ final case class Manifest(
   /** Files that may hold rows of the given current-depth buckets, widened
     * to the coverage CLOSURE (see [[bucketClosure]]) so per-key max-LSN
     * resolution over the result is exact. Callers that replace these
-    * files (CoW merge, compaction) must exclude them from the carried set
+    * files (compaction) must exclude them from the carried set
     * BY PATH, not by bucket id — the closure can span buckets the caller
     * did not ask for.
     */

@@ -6,26 +6,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
-import graft.lake.{CommitInfo, FileEntry, LakeTable, Manifest, SchemaEntry, SchemaReconciler}
+import graft.lake.{CommitInfo, FileEntry, LakeTable, SchemaEntry, SchemaReconciler}
 import graft.model.Schemas._
 
 /** The CDC apply: one micro-batch of change events → MERGE INTO the lake
-  * table. Two physical strategies, both LSN-gated and replay-idempotent:
+  * table, merge-on-read, LSN-gated and replay-idempotent: route the raw
+  * batch by bucket in ONE exchange, dedup it by max LSN in a window whose
+  * sort is also the writer's sort, append it as per-bucket DELTA files,
+  * commit. O(batch) work per micro-batch, no join against the table.
+  * Readers resolve per-key max LSN across base+deltas; [[Compactor]] folds
+  * deltas back into base files when they pile up (amortized O(bucket)),
+  * which leaves a bucket in the same base-only state a copy-on-write
+  * rewrite would.
   *
-  *  - **MergeOnRead** (default, write-optimized — the 10^10-events/day
-  *    path): route the raw batch by bucket in ONE exchange, dedup it by
-  *    max LSN in a window whose sort is also the writer's sort, append it
-  *    as per-bucket DELTA files, commit. O(batch) work per micro-batch, no
-  *    join against the table. Readers resolve per-key max LSN across base+deltas;
-  *    [[Compactor]] folds deltas back into base files when they pile up
-  *    (amortized O(bucket)).
-  *  - **CopyOnWrite** (read-optimized): full-outer join the deduped batch
-  *    against the affected buckets' current state and rewrite those
-  *    buckets — every read afterwards is a plain scan.
-  *
-  * This mirrors Iceberg's MOR/COW duality; the reference's analogue is the
-  * threaded grapher upsert with per-variable checksum short-circuit
-  * (owid-etl `etl/steps/__init__.py:887-936`, `etl/grapher_import.py:227-323`).
+  * The reference's analogue is the threaded grapher upsert with
+  * per-variable checksum short-circuit (owid-etl
+  * `etl/steps/__init__.py:887-936`, `etl/grapher_import.py:227-323`).
   *
   * Exactly-once: `foreachBatch` may replay a batch after a crash; commits
   * record the epoch and `apply` no-ops when `manifest.lastEpoch >= epoch`
@@ -34,9 +30,12 @@ import graft.model.Schemas._
   */
 object CdcMerge {
 
+  /** The write strategy. Merge-on-read is the only one; the type and the
+    * `mode` parameter of [[apply]] and `CdcStream.runToCompletion` stay
+    * for callers that name it explicitly.
+    */
   sealed trait Mode
   case object MergeOnRead extends Mode
-  case object CopyOnWrite extends Mode
 
   /** `epoch` is the SOURCE epoch the caller presented; `effEpoch` the
     * internal epoch the files were actually recorded under (remapped to
@@ -52,10 +51,10 @@ object CdcMerge {
     * Duplicate deliveries of the same (key, lsn) collapse to one row. The
     * `op desc` tie-break makes two ops at one (key, lsn) — possible from
     * the SQL MERGE surface, which accepts arbitrary sources — resolve the
-    * same way on every replay and under both modes.
+    * same way on every replay.
     *
     * `by` is the window's partition: the key columns, optionally with
-    * columns that are functions of the key (merge-on-read adds its routing
+    * columns that are functions of the key ([[apply]] adds its routing
     * columns so that the exchange that routed the batch already satisfies
     * the window). Its order is the window sort's order.
     */
@@ -107,16 +106,8 @@ object CdcMerge {
         (m.schemas :+ SchemaEntry(id, newUser.toDDL), id)
       } else (m.schemas, m.currentSchemaId)
 
-    // ---- deduped rows → physical shape ----
-    // merge-on-read passes a `target` that keeps its routed `bucket`
-    // column: a recomputed one would be a new attribute, and the plan
-    // would sort again for the writer
+    // ---- route, dedup and write the batch as DELTA files ----
     val physTarget = physical(newUser)
-    def toPhysical(deduped: DataFrame, target: StructType): DataFrame = LakeTable.alignTo(
-      deduped
-        .withColumn(LSN_COL, col("lsn"))
-        .withColumn(DELETED_COL, col("op") === "D"),
-      target)
 
     // Unique per attempt: a second writer racing on the same effEpoch (e.g.
     // streaming writer + SQL MERGE on one table) must not share — and
@@ -128,134 +119,75 @@ object CdcMerge {
     val staging = table.root.resolve(
       s"_staging/epoch-$effEpoch-${java.util.UUID.randomUUID().toString.take(8)}")
 
-    val (newFiles, carried, affected) = mode match {
-      case MergeOnRead =>
-        // O(batch): write deduped rows as per-bucket DELTA files, with ONE
-        // exchange. The RAW batch is routed by bucket; the max-LSN window
-        // runs after that exchange, partitioned by (bucket, key[, salt]) so
-        // the routing already satisfies it, and its sort (bucket, key, …)
-        // is also the writer's sort: one Exchange, one Sort. No map-side
-        // combine: at one WAL file per trigger a batch is one Parquet row
-        // group, so one split, and a combine would run on ONE task (~0.9 s
-        // of a 1.2 s stage at 256k events, 4 cores). At 4 files per trigger
-        // it would run on 4, yet shuffling raw rows still applied batches
-        // ~20% faster there (BenchProbe, 4 cores). Writer tasks number the
-        // session's shuffle parallelism, not the buckets: each task costs
-        // ~34 ms fixed, against ~140 KB of output per bucket at 32 buckets.
-        // A cold bucket hashes to exactly one task, so it still gets one
-        // delta file per batch.
-        // ADAPTIVE salting: a bucket holding a hot conversation (Zipf head)
-        // would straggle in its one task — so buckets whose PREVIOUS batch
-        // share exceeded 2x fair share are split across `saltBuckets`
-        // routing keys on hash(turn_idx), each adding saltBuckets-1 writer
-        // tasks. Detection is free: per-bucket row counts of the last delta
-        // epoch live in the manifest (one-batch lag is fine for steady
-        // streams, and avoids a counting job + full-batch persist).
-        val lastDeltas = m.files.filter(f =>
-          f.kind == FileEntry.DELTA && f.epoch == m.lastEpoch)
-        val counts = lastDeltas.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum).toMap
-        val fair = math.max(1L, counts.values.sum / math.max(1, m.numBuckets))
-        val hot = if (saltBuckets <= 1) Nil else counts.filter(_._2 > 2 * fair).keys.toSeq
-        val keyed = batch.withColumn("bucket", table.bucketExpr(m.numBuckets))
-        // No hot bucket → route by bucket alone: a literal-0 salt would be
-        // folded out of the window partition, which the routing would then
-        // no longer satisfy (a second exchange).
-        val (routed, route) =
-          if (hot.isEmpty) (keyed, Seq("bucket"))
-          else (keyed.withColumn("_salt", when(col("bucket").isin(hot: _*),
-            pmod(xxhash64(col("turn_idx")), lit(saltBuckets.toLong))).otherwise(lit(0L))),
-            Seq("bucket", "_salt"))
-        val nParts = math.min(
-          spark.sessionState.conf.numShufflePartitions + hot.size * (saltBuckets - 1), 4096)
-        val deduped = dedupMaxLsn(routed.repartition(nParts, route.map(col): _*),
-          ("bucket" +: KEY_COLS) ++ route.tail)
-        // sorted within writer tasks (the window's order already, so no
-        // extra Sort is planned): tight per-file conv_id ranges for
-        // file-level pruning + better parquet encoding
-        toPhysical(deduped, physTarget.add("bucket", IntegerType))
-          .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-          .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
-        val files = adoptStaged(table, spark, staging, effEpoch, schemaId2, FileEntry.DELTA, physTarget)
-        (files, m.files, files.map(_.bucket).toSet)
-
-      case CopyOnWrite =>
-        val bucketed = toPhysical(dedupMaxLsn(batch), physTarget)
-          .withColumn("bucket", table.bucketExpr(m.numBuckets))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val aff0 = bucketed.select("bucket").distinct().collect().map(_.getInt(0)).toSet
-        // close over shared-file coverage: after a REBUCKET, a pre-split
-        // base file spans several current buckets — rewriting one of them
-        // must rewrite the whole coverage component (the rewrite replaces
-        // those files BY PATH below, so their sibling-bucket rows must be
-        // in the output). Identity when no rebucket is in history.
-        val aff = m.bucketClosure(aff0)
-        if (aff.isEmpty) { bucketed.unpersist(); (Nil, m.files, Set.empty[Int]) }
-        else {
-          val inputPaths = m.filesForBuckets(aff).map(_.path).toSet
-          val current = LakeTable.alignTo(table.snapshotPhysical(m, Some(aff)), physTarget)
-          val payload = physTarget.fields.filterNot(f => KEY_COLS.contains(f.name))
-          val u = bucketed.select(
-            (KEY_COLS.map(col) ++ payload.map(f => col(f.name).as(s"_u_${f.name}"))): _*)
-          val newer = col(s"_u_$LSN_COL").isNotNull &&
-            (col(s"_u_$LSN_COL") > coalesce(col(LSN_COL), lit(Long.MinValue)))
-          val mergedCols = KEY_COLS.map(col) ++ payload.map { f =>
-            when(newer, col(s"_u_${f.name}")).otherwise(col(f.name)).as(f.name)
-          }
-          val merged = current.join(u, KEY_COLS, "full_outer").select(mergedCols.toSeq: _*)
-          val salted = merged
-            .withColumn("bucket", table.bucketExpr(m.numBuckets))
-            .repartition(spark.sessionState.conf.numShufflePartitions,
-              col("bucket"), pmod(xxhash64(col("turn_idx")), lit(saltBuckets.toLong)))
-          salted.write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
-          bucketed.unpersist()
-          val files = adoptStaged(table, spark, staging, effEpoch, schemaId2, FileEntry.BASE, physTarget)
-          (files, m.files.filterNot(f => inputPaths.contains(f.path)), aff)
-        }
-    }
+    // O(batch): write deduped rows as per-bucket DELTA files, with ONE
+    // exchange. The RAW batch is routed by bucket; the max-LSN window
+    // runs after that exchange, partitioned by (bucket, key[, salt]) so
+    // the routing already satisfies it, and its sort (bucket, key, …)
+    // is also the writer's sort: one Exchange, one Sort. No map-side
+    // combine: at one WAL file per trigger a batch is one Parquet row
+    // group, so one split, and a combine would run on ONE task (~0.9 s
+    // of a 1.2 s stage at 256k events, 4 cores). At 4 files per trigger
+    // it would run on 4, yet shuffling raw rows still applied batches
+    // ~20% faster there (BenchProbe, 4 cores). Writer tasks number the
+    // session's shuffle parallelism, not the buckets: each task costs
+    // ~34 ms fixed, against ~140 KB of output per bucket at 32 buckets.
+    // A cold bucket hashes to exactly one task, so it still gets one
+    // delta file per batch.
+    // ADAPTIVE salting: a bucket holding a hot conversation (Zipf head)
+    // would straggle in its one task — so buckets whose PREVIOUS batch
+    // share exceeded 2x fair share are split across `saltBuckets`
+    // routing keys on hash(turn_idx), each adding saltBuckets-1 writer
+    // tasks. Detection is free: per-bucket row counts of the last delta
+    // epoch live in the manifest (one-batch lag is fine for steady
+    // streams, and avoids a counting job + full-batch persist).
+    val lastDeltas = m.files.filter(f =>
+      f.kind == FileEntry.DELTA && f.epoch == m.lastEpoch)
+    val counts = lastDeltas.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum).toMap
+    val fair = math.max(1L, counts.values.sum / math.max(1, m.numBuckets))
+    val hot = if (saltBuckets <= 1) Nil else counts.filter(_._2 > 2 * fair).keys.toSeq
+    val keyed = batch.withColumn("bucket", table.bucketExpr(m.numBuckets))
+    // No hot bucket → route by bucket alone: a literal-0 salt would be
+    // folded out of the window partition, which the routing would then
+    // no longer satisfy (a second exchange).
+    val (routed, route) =
+      if (hot.isEmpty) (keyed, Seq("bucket"))
+      else (keyed.withColumn("_salt", when(col("bucket").isin(hot: _*),
+        pmod(xxhash64(col("turn_idx")), lit(saltBuckets.toLong))).otherwise(lit(0L))),
+        Seq("bucket", "_salt"))
+    val nParts = math.min(
+      spark.sessionState.conf.numShufflePartitions + hot.size * (saltBuckets - 1), 4096)
+    val deduped = dedupMaxLsn(routed.repartition(nParts, route.map(col): _*),
+      ("bucket" +: KEY_COLS) ++ route.tail)
+    // aligned to a target that keeps the routed `bucket` column: a
+    // recomputed one would be a new attribute, and the plan would sort
+    // again for the writer. Sorted within writer tasks (the window's
+    // order already, so no extra Sort is planned): tight per-file conv_id
+    // ranges for file-level pruning + better parquet encoding
+    LakeTable.alignTo(
+      deduped
+        .withColumn(LSN_COL, col("lsn"))
+        .withColumn(DELETED_COL, col("op") === "D"),
+      physTarget.add("bucket", IntegerType))
+      .sortWithinPartitions("bucket", "conv_id", "turn_idx")
+      .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
+    val newFiles = adoptStaged(table, spark, staging, effEpoch, schemaId2, FileEntry.DELTA, physTarget)
+    val affected = newFiles.map(_.bucket).toSet
     deleteRecursively(staging)
 
     // Commit with REBASE-on-conflict: an async compaction may win the CAS
-    // between our manifest read and commit. A merge-on-read delta append is
-    // always rebase-safe (it only ADDS files); the rebase re-reads the
-    // current manifest, re-derives the carried file list, and retries.
-    // Copy-on-write rewrote its buckets' contents from a snapshot — the
-    // rebase is sound iff the concurrent commit touched NONE of those
-    // buckets (a compactor folding OTHER buckets): our rewritten buckets'
-    // inputs are then byte-identical under the new manifest, so we carry
-    // its other-bucket files and retry. Any change WITHIN a rewritten
-    // bucket invalidates the snapshot → loud single-committer abort.
+    // between our manifest read and commit. A delta append is always
+    // rebase-safe (it only ADDS files): the rebase re-reads the current
+    // manifest, carries its file list, and retries.
     preCommit() // test seam: inject a concurrent commit into the window
     var base = m
     var attempt = 0
     while (true) {
-      val carriedNow =
-        if (base eq m) carried
-        else mode match {
-          case MergeOnRead => base.files
-          case CopyOnWrite =>
-            // a REBUCKET between our manifest read and commit changes the
-            // coverage arithmetic under us — the rewrite's bucket closure
-            // was computed at the old depth; abort rather than reason
-            // about a moving space (the merge is retryable from scratch)
-            if (base.numBuckets != m.numBuckets) throw new IllegalStateException(
-              s"concurrent REBUCKET (${m.numBuckets} -> ${base.numBuckets} buckets) " +
-              "during a copy-on-write merge — re-run the merge")
-            val beforeMine = Manifest.coveringFiles(m.files, m.numBuckets, affected)
-              .map(_.path).toSet
-            val nowMine = Manifest.coveringFiles(base.files, base.numBuckets, affected)
-              .map(_.path).toSet
-            if (beforeMine == nowMine) base.files.filterNot(f => nowMine.contains(f.path))
-            else throw new IllegalStateException(
-              "concurrent commit touched copy-on-write bucket(s) " +
-              s"${affected.toSeq.sorted.mkString(",")} — the rewrite's snapshot is stale; " +
-              "CoW requires a single committer for overlapping buckets")
-        }
-      // a MOR delta append rebasing over a concurrent REBUCKET: our files
-      // were routed at the OLD depth — stamp them so coverage reads them
-      // correctly in the new space (the rebucket stamped only the files
-      // in ITS manifest; ours were in flight)
+      // rebasing over a concurrent REBUCKET: our files were routed at the
+      // OLD depth — stamp them so coverage reads them correctly in the
+      // new space (the rebucket stamped only the files in ITS manifest;
+      // ours were in flight)
       val newFilesNow =
-        if ((base ne m) && base.numBuckets != m.numBuckets)
+        if (base.numBuckets != m.numBuckets)
           newFiles.map(f => if (f.writePids.isEmpty) f.copy(writePids = Some(m.numBuckets)) else f)
         else newFiles
       require(base.schemas == m.schemas && base.currentSchemaId == m.currentSchemaId,
@@ -268,7 +200,7 @@ object CdcMerge {
       require((base eq m) || base.lastEpoch < effEpoch,
         s"concurrent WRITER detected (lastEpoch ${base.lastEpoch} >= epoch $effEpoch " +
           "after rebase) — one writer per table")
-      val allFiles = carriedNow ++ newFilesNow
+      val allFiles = base.files ++ newFilesNow
       val batchMaxLsn = math.max(base.maxLsn, newFiles.map(_.maxLsn).foldLeft(-1L)(math.max))
       val wallMs = (System.nanoTime() - t0) / 1000000
       val m2 = base.copy(
@@ -288,8 +220,7 @@ object CdcMerge {
         table.commit(m2, base.version)
         return Stats(epoch, applied = true, newFiles.map(_.rows).sum, affected.size, wallMs, effEpoch)
       } catch {
-        // CAS lost → re-enter the loop; carriedNow then rebases (MOR) or
-        // raises the explicit single-committer error (CoW)
+        // CAS lost → rebase onto the current manifest and retry
         case _: IllegalArgumentException if attempt < 10 =>
           attempt += 1
           base = table.manifest
@@ -495,6 +426,9 @@ object Compactor {
 
   final case class Result(compactedBuckets: Seq[Int], wallMs: Long)
 
+  /** CAS attempts before a compaction gives up and abandons its output. */
+  private val MaxRetries = 20
+
   /** Compact every bucket whose deltas span >= `deltaThreshold` DISTINCT
     * epochs (not raw file count — a salted hot bucket writes several delta
     * files per batch and must not trigger compaction more often for it).
@@ -502,7 +436,7 @@ object Compactor {
   def compactIfNeeded(table: LakeTable, deltaThreshold: Int = 4,
                       dropTombstones: Boolean = false): Option[Result] = {
     val due = dueBuckets(table, deltaThreshold)
-    if (due.isEmpty) None else Some(compact(table, due.toSet, dropTombstones))
+    if (due.isEmpty) None else compact(table, due.toSet, dropTombstones)
   }
 
   /** Buckets whose deltas span >= `deltaThreshold` distinct epochs. */
@@ -512,106 +446,11 @@ object Compactor {
         .map(_.epoch).distinct.size >= deltaThreshold => b
     }.toSeq.sorted
 
-  def compact(table: LakeTable, buckets: Set[Int],
-              dropTombstones: Boolean = false,
-              maxRecordsPerFile: Long = 0L,
-              clusterBy: Option[DataFrame => org.apache.spark.sql.Column] = None): Result = {
-    val t0 = System.nanoTime()
-    val spark = table.snapshot().sparkSession
-    val m = table.manifest
-    // close over shared-file coverage (identity without a REBUCKET in
-    // history): a pre-split file spans several current buckets, and its
-    // replacement-by-path below means its sibling buckets rewrite too
-    val closed = m.bucketClosure(buckets)
-    val inputPaths = m.filesForBuckets(closed).map(_.path).toSet
-    val resolved1 = table.snapshotPhysical(m, Some(closed)) // max-LSN resolved, tombstones kept
-    val resolved2 = if (dropTombstones)
-      resolved1.filter(!col(graft.model.Schemas.DELETED_COL)) else resolved1
-    // a clusterBy (zorder) computes quantile boundaries with ONE
-    // approxQuantile job over `resolved` BEFORE the rewrite reads it again
-    // — persist so the MOR resolve + scan run once, not twice
-    val resolved = if (clusterBy.isDefined)
-      resolved2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else resolved2
-    val staging = table.root.resolve(s"_staging/compact-${m.version + 1}")
-    CdcMerge.deleteRecursively(staging)
-    // Default layout = key-sorted bases: disjoint per-file conv_id ranges
-    // inside a bucket (with maxRecordsPerFile > 0) → manifest-level file
-    // pruning for single-conversation reads. `clusterBy` overrides the
-    // intra-bucket order (e.g. a z-value for multi-column data skipping;
-    // see [[zorder]]) — point lookups then lean on blooms instead of
-    // minKey/maxKey tightness.
-    // The cluster value is MATERIALIZED as a column before the sort and
-    // sorted as a plain attribute: SortExec's generated ordering evaluates
-    // sort-key EXPRESSIONS per comparison (n·log n times), so sorting
-    // directly on the z expression — a 2^bits-step HOF per evaluation —
-    // multiplies its cost ~2·log₂(rows)×. Measured on a 100k-row zorder
-    // rewrite: 40.6 s sorting on the expression vs ~1 s on the column.
-    val bucketed = resolved.withColumn("bucket", table.bucketExpr(m.numBuckets))
-    val (toSort, sortCols, dropAfter) = clusterBy match {
-      case Some(mk) => (bucketed.withColumn("__cluster", mk(resolved)),
-        Seq(col("bucket"), col("__cluster")), Seq("__cluster"))
-      case None => (bucketed, Seq(col("bucket"), col("conv_id"), col("turn_idx")), Nil)
-    }
-    toSort
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("bucket"))
-      .sortWithinPartitions(sortCols: _*)
-      .drop(dropAfter: _*)
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("bucket").parquet(staging.toString)
-    if (clusterBy.isDefined) resolved.unpersist()
-    val newFiles = CdcMerge.adoptStaged(table, spark, staging, m.lastEpoch,
-      m.currentSchemaId, FileEntry.BASE,
-      graft.model.Schemas.physical(table.userSchema(m)))
-    CdcMerge.deleteRecursively(staging)
-    val carried = m.files.filterNot(f => inputPaths.contains(f.path))
-    val allFiles = carried ++ newFiles
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    val m2 = m.copy(
-      version = m.version + 1,
-      files = allFiles,
-      totalRows = allFiles.map(_.rows).sum,
-      lineage = (m.lineage :+ CommitInfo(m.version + 1, m.lastEpoch,
-        newFiles.map(_.rows).sum, closed.toSeq.sorted, m.maxLsn, wallMs,
-        System.currentTimeMillis())).takeRight(1000))
-    table.commit(m2, m.version)
-    Result(closed.toSeq.sorted, wallMs)
-  }
-
-  /** Z-order the given buckets (default: all): a [[compact]] whose
-    * intra-bucket layout is the Morton interleave of `cols`' quantile
-    * bins ([[graft.lake.ZOrder]]) instead of the key sort — files then
-    * carry tight min/max bounds on EVERY listed column, which is what
-    * makes [[graft.lake.DataSkipping]] effective for multi-dimensional
-    * predicates (e.g. ts ranges over transcripts). Buckets stay the
-    * partition unit, so key-hash routing, MOR resolution, and all
-    * concurrency rules are untouched; within a rewritten bucket the
-    * (minKey, maxKey) ranges get looser — point lookups lean on blooms
-    * (OPTIMIZE ... BLOOM) instead.
-    *
-    * `maxRecordsPerFile <= 0` auto-sizes to ~8 files per bucket (real
-    * deployments should pass an explicit value tuned to row width — the
-    * lever that trades file count against skip granularity).
-    */
-  def zorder(table: LakeTable, cols: Seq[String],
-             buckets: Option[Set[Int]] = None,
-             maxRecordsPerFile: Long = 0L,
-             dropTombstones: Boolean = false): Result = {
-    val m = table.manifest
-    val bs = buckets.getOrElse(m.files.map(_.bucket).toSet)
-    if (bs.isEmpty) return Result(Nil, 0L)
-    val mrf =
-      if (maxRecordsPerFile > 0L) maxRecordsPerFile
-      else math.max(1L, m.totalRows / math.max(1, bs.size) / 8L)
-    compact(table, bs, dropTombstones, mrf,
-      clusterBy = Some(df => graft.lake.ZOrder.zColumn(df, cols)))
-  }
-
-  /** Compaction with OPTIMISTIC-CONCURRENCY commit — the maintenance-thread
-    * form: the (slow) bucket rewrite runs off the streaming hot path while
-    * writers keep committing; the commit then validates-and-retries
-    * Iceberg-style.
+  /** Rewrite `buckets` from a PINNED manifest into per-key-resolved base
+    * files, then commit with OPTIMISTIC CONCURRENCY: the (slow) rewrite
+    * may run while writers keep committing — on the stream thread, on the
+    * maintenance thread, or under a SQL OPTIMIZE — and the commit then
+    * validates-and-retries Iceberg-style.
     *
     * Rebase rules (per compacted bucket, against the pinned manifest m0):
     *  - files ADDED since the pin (a streaming writer's new deltas) are
@@ -622,52 +461,88 @@ object Compactor {
     *    this, a steady stream touching every bucket invalidates EVERY
     *    compaction and delta depth grows with stream age (measured: depth
     *    64 after 64 rapid batches under the abandon-on-any-write rule).
-    *  - files REMOVED since the pin (a CoW rewrite or another compactor
-    *    folded the bucket) → the rewrite is stale → staged output is
-    *    abandoned and None returned.
+    *  - files REMOVED since the pin (another compaction folded the
+    *    bucket) → the rewrite is stale → its output is abandoned and None
+    *    returned.
     *  - `dropTombstones` requires quiescence: folding away a tombstone
     *    while a concurrent (late, stale) update could still arrive would
     *    resurrect the deleted key — any post-pin file in a compacted
     *    bucket aborts a tombstone-dropping compaction.
+    * An abandoned rewrite deletes the files it adopted, so nothing lands
+    * in `data/` that no manifest references. None also means there was
+    * nothing to rewrite.
+    *
+    * Default layout = key-sorted bases: disjoint per-file conv_id ranges
+    * inside a bucket (with maxRecordsPerFile > 0) → manifest-level file
+    * pruning for single-conversation reads. `clusterBy` overrides the
+    * intra-bucket order (e.g. a z-value for multi-column data skipping;
+    * see [[zorder]]) — point lookups then lean on blooms instead of
+    * minKey/maxKey tightness.
+    *
     * `preCommit` is a test seam to inject a concurrent commit into the
     * validation window deterministically.
     */
-  def compactConcurrent(table: LakeTable, buckets: Set[Int],
-                        dropTombstones: Boolean = false,
-                        maxRecordsPerFile: Long = 0L,
-                        maxRetries: Int = 20,
-                        preCommit: () => Unit = () => ()): Option[Result] = {
+  def compact(table: LakeTable, buckets: Set[Int],
+              dropTombstones: Boolean = false,
+              maxRecordsPerFile: Long = 0L,
+              clusterBy: Option[DataFrame => org.apache.spark.sql.Column] = None,
+              preCommit: () => Unit = () => ()): Option[Result] = {
     val t0 = System.nanoTime()
     val spark = table.snapshot().sparkSession
     val m0 = table.manifest
     // closure over shared-file coverage (identity without a REBUCKET in
-    // history); the rewrite region is fixed at the PIN's depth — post-pin
-    // files are never coarser, so the closed region cannot grow under us
+    // history): a pre-split file spans several current buckets, and its
+    // replacement-by-path below means its sibling buckets rewrite too. The
+    // rewrite region is fixed at the PIN's depth — post-pin files are
+    // never coarser, so the closed region cannot grow under us
     val closed = m0.bucketClosure(buckets)
     val inputFiles = m0.filesForBuckets(closed).map(_.path).toSet
     if (inputFiles.isEmpty) return None
-    val resolved0 = // resolve from the PINNED manifest (not _current: a
-      // concurrent writer must not change our input between pin and plan)
-      table.snapshotPhysical(m0, Some(closed))
-    val resolved = if (dropTombstones)
+    // resolve from the PINNED manifest (not _current: a concurrent writer
+    // must not change our input between pin and plan); max-LSN resolved,
+    // tombstones kept unless dropped here
+    val resolved0 = table.snapshotPhysical(m0, Some(closed))
+    val resolved1 = if (dropTombstones)
       resolved0.filter(!col(graft.model.Schemas.DELETED_COL)) else resolved0
+    // a clusterBy (zorder) computes quantile boundaries with ONE
+    // approxQuantile job over `resolved` BEFORE the rewrite reads it again
+    // — persist so the MOR resolve + scan run once, not twice
+    val resolved = if (clusterBy.isDefined)
+      resolved1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    else resolved1
     val staging = table.root.resolve(
-      s"_staging/compact-c${m0.version}-${java.util.UUID.randomUUID().toString.take(8)}")
-    CdcMerge.deleteRecursively(staging)
-    resolved
-      .withColumn("bucket", table.bucketExpr(m0.numBuckets))
+      s"_staging/compact-${m0.version}-${java.util.UUID.randomUUID().toString.take(8)}")
+    // The cluster value is MATERIALIZED as a column before the sort and
+    // sorted as a plain attribute: SortExec's generated ordering evaluates
+    // sort-key EXPRESSIONS per comparison (n·log n times), so sorting
+    // directly on the z expression — a 2^bits-step HOF per evaluation —
+    // multiplies its cost ~2·log₂(rows)×. Measured on a 100k-row zorder
+    // rewrite: 40.6 s sorting on the expression vs ~1 s on the column.
+    val bucketed = resolved.withColumn("bucket", table.bucketExpr(m0.numBuckets))
+    val (toSort, sortCols, dropAfter) = clusterBy match {
+      case Some(mk) => (bucketed.withColumn("__cluster", mk(resolved)),
+        Seq(col("bucket"), col("__cluster")), Seq("__cluster"))
+      case None => (bucketed, Seq(col("bucket"), col("conv_id"), col("turn_idx")), Nil)
+    }
+    try toSort
       .repartition(spark.sessionState.conf.numShufflePartitions, col("bucket"))
-      .sortWithinPartitions("bucket", "conv_id", "turn_idx")
+      .sortWithinPartitions(sortCols: _*)
+      .drop(dropAfter: _*)
       .write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("bucket").parquet(staging.toString)
+    finally if (clusterBy.isDefined) resolved.unpersist()
     val newFiles = CdcMerge.adoptStaged(table, spark, staging, m0.lastEpoch,
       m0.currentSchemaId, FileEntry.BASE,
       graft.model.Schemas.physical(table.userSchema(m0)))
     CdcMerge.deleteRecursively(staging)
+    def abandon(): Option[Result] = {
+      newFiles.foreach(f => java.nio.file.Files.deleteIfExists(table.root.resolve(f.path)))
+      None
+    }
     preCommit()
     var attempt = 0
-    while (attempt < maxRetries) {
+    while (attempt < MaxRetries) {
       val cur = table.manifest
       // the rewrite region, re-indexed under `cur`: f (depth d, bucket b)
       // intersects {t : t mod m0.numBuckets ∈ closed} iff some closed
@@ -685,10 +560,7 @@ object Compactor {
         inRegion(f) && !inputFiles.contains(f.path))
       val stale = !inputFiles.subsetOf(curPaths) || // pinned input vanished → bucket was rewritten
         (dropTombstones && addedSincePin.nonEmpty)  // tombstone-drop needs quiescence
-      if (stale) {
-        newFiles.foreach(f => java.nio.file.Files.deleteIfExists(table.root.resolve(f.path)))
-        return None
-      }
+      if (stale) return abandon()
       // rebasing over a concurrent REBUCKET: our bases were written at the
       // pin's depth — stamp them for the new space (the rebucket stamped
       // only the files in ITS manifest)
@@ -712,7 +584,34 @@ object Compactor {
         case _: IllegalArgumentException => attempt += 1 // CAS lost; rebase + retry
       }
     }
-    newFiles.foreach(f => java.nio.file.Files.deleteIfExists(table.root.resolve(f.path)))
-    None
+    abandon()
+  }
+
+  /** Z-order the given buckets (default: all): a [[compact]] whose
+    * intra-bucket layout is the Morton interleave of `cols`' quantile
+    * bins ([[graft.lake.ZOrder]]) instead of the key sort — files then
+    * carry tight min/max bounds on EVERY listed column, which is what
+    * makes [[graft.lake.DataSkipping]] effective for multi-dimensional
+    * predicates (e.g. ts ranges over transcripts). Buckets stay the
+    * partition unit, so key-hash routing, MOR resolution, and all
+    * concurrency rules are untouched; within a rewritten bucket the
+    * (minKey, maxKey) ranges get looser — point lookups lean on blooms
+    * (OPTIMIZE ... BLOOM) instead.
+    *
+    * `maxRecordsPerFile <= 0` auto-sizes to ~8 files per bucket (real
+    * deployments should pass an explicit value tuned to row width — the
+    * lever that trades file count against skip granularity).
+    */
+  def zorder(table: LakeTable, cols: Seq[String],
+             buckets: Option[Set[Int]] = None,
+             maxRecordsPerFile: Long = 0L,
+             dropTombstones: Boolean = false): Option[Result] = {
+    val m = table.manifest
+    val bs = buckets.getOrElse(m.files.map(_.bucket).toSet)
+    val mrf =
+      if (maxRecordsPerFile > 0L) maxRecordsPerFile
+      else math.max(1L, m.totalRows / math.max(1, bs.size) / 8L)
+    compact(table, bs, dropTombstones, mrf,
+      clusterBy = Some(df => graft.lake.ZOrder.zColumn(df, cols)))
   }
 }

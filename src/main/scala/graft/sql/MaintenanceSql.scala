@@ -20,7 +20,12 @@ import graft.merge.Compactor
   *
   *   OPTIMIZE <name>
   *     → fold every delta-bearing bucket back into per-key-resolved base
-  *       files ([[Compactor.compact]]); returns (buckets_compacted, wall_ms).
+  *       files ([[Compactor.compact]], safe under a live stream); returns
+  *       (buckets_compacted, wall_ms), (0, 0) when nothing was due or a
+  *       concurrent rewrite superseded the pass.
+  *   OPTIMIZE <name> ZORDER BY (c1, ...) [ROWS n]
+  *     → the same compaction with a Morton-clustered layout
+  *       ([[Compactor.zorder]]); returns (buckets_rewritten, wall_ms).
   *   OPTIMIZE <name> BLOOM
   *     → annotate bloom-less delta files with key bloom filters
   *       ([[graft.lake.LakeTable.buildBlooms]], metadata-only commit);
@@ -205,11 +210,11 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface) extends P
   override def parseRoutineParam(sqlText: String): StructType = delegate.parseRoutineParam(sqlText)
 }
 
-/** OPTIMIZE: compact every delta-bearing bucket. Uses the
-  * OPTIMISTIC-CONCURRENCY compactor, not the single-committer one — a
-  * maintenance statement is exactly the thing run while the streaming
-  * writer is live, and a concurrent micro-batch commit must rebase (or
-  * abandon this pass cleanly), never throw a CAS failure at the user.
+/** OPTIMIZE: compact every delta-bearing bucket. A maintenance statement
+  * is exactly the thing run while the streaming writer is live:
+  * [[Compactor.compact]]'s optimistic commit rebases over a concurrent
+  * micro-batch (or abandons this pass cleanly), never throwing a CAS
+  * failure at the user.
   */
 case class GraftOptimizeCommand(tableDir: String) extends LeafRunnableCommand {
   override def output: Seq[Attribute] = Seq(
@@ -220,7 +225,7 @@ case class GraftOptimizeCommand(tableDir: String) extends LeafRunnableCommand {
     val table = LakeTable.load(session, tableDir)
     val due = Compactor.dueBuckets(table, deltaThreshold = 1)
     if (due.isEmpty) return Seq(Row(0, 0L))
-    Compactor.compactConcurrent(table, due.toSet) match {
+    Compactor.compact(table, due.toSet) match {
       case Some(r) => Seq(Row(r.compactedBuckets.size, r.wallMs))
       case None => Seq(Row(0, 0L)) // abandoned: a concurrent rewrite superseded this pass
     }
@@ -232,7 +237,8 @@ case class GraftOptimizeCommand(tableDir: String) extends LeafRunnableCommand {
   * are tight on every listed column — the data-skipping companion to
   * [[graft.lake.DataSkipping]] (Delta's OPTIMIZE ZORDER shape). `ROWS n`
   * caps records per rewritten file (the skip-granularity lever);
-  * omitted = ~8 files per bucket.
+  * omitted = ~8 files per bucket. Commits like OPTIMIZE: a concurrent
+  * micro-batch rebases or abandons the pass (reported as (0, 0)).
   */
 case class GraftZorderCommand(tableDir: String, cols: Seq[String], rowsPerFile: Long)
     extends LeafRunnableCommand {
@@ -242,8 +248,10 @@ case class GraftZorderCommand(tableDir: String, cols: Seq[String], rowsPerFile: 
 
   override def run(session: SparkSession): Seq[Row] = {
     val table = LakeTable.load(session, tableDir)
-    val r = Compactor.zorder(table, cols, maxRecordsPerFile = rowsPerFile)
-    Seq(Row(r.compactedBuckets.size, r.wallMs))
+    Compactor.zorder(table, cols, maxRecordsPerFile = rowsPerFile) match {
+      case Some(r) => Seq(Row(r.compactedBuckets.size, r.wallMs))
+      case None => Seq(Row(0, 0L))
+    }
   }
 }
 

@@ -54,9 +54,9 @@ object CdcStream {
 
   /** Single maintenance thread for async compaction: the bucket rewrite
     * runs here while the streaming loop keeps committing micro-batches;
-    * commits reconcile via [[Compactor.compactConcurrent]]'s
-    * validate-and-retry. One pending task max (a busy compactor skips the
-    * tick — the next one sees the accumulated deltas anyway).
+    * commits reconcile via [[Compactor.compact]]'s validate-and-retry.
+    * One pending task max (a busy compactor skips the tick — the next one
+    * sees the accumulated deltas anyway).
     */
   private val maintenancePool = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
     val t = new Thread(r, "graft-compaction"); t.setDaemon(true); t
@@ -86,7 +86,7 @@ object CdcStream {
     */
   def start(spark: SparkSession, walDir: String, table: LakeTable,
             checkpointDir: String, maxFilesPerTrigger: Int = 4,
-            saltBuckets: Int = 8, mode: CdcMerge.Mode = CdcMerge.MergeOnRead,
+            saltBuckets: Int = 8,
             compactEvery: Int = 8,
             trigger: Trigger = Trigger.AvailableNow(),
             walSchema: org.apache.spark.sql.types.StructType = Schemas.changeEvent,
@@ -105,7 +105,7 @@ object CdcStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (df: DataFrame, epoch: Long) =>
-        applyAndMaintain(table, df, epoch, saltBuckets, mode, compactEvery,
+        applyAndMaintain(table, df, epoch, saltBuckets, compactEvery,
           asyncCompaction, checkpointDir, maxRowsPerBucket)
       }
       .start()
@@ -116,11 +116,11 @@ object CdcStream {
     * parquet WAL tail and the JSON envelope tail.
     */
   private def applyAndMaintain(table: LakeTable, df: DataFrame, epoch: Long,
-                               saltBuckets: Int, mode: CdcMerge.Mode,
+                               saltBuckets: Int,
                                compactEvery: Int, asyncCompaction: Boolean,
                                checkpointDir: String,
                                maxRowsPerBucket: Long = 0L): Unit = {
-        val stats = CdcMerge.apply(table, df, epoch, saltBuckets, mode,
+        val stats = CdcMerge.apply(table, df, epoch, saltBuckets,
           streamId = streamIdOf(checkpointDir))
         // AUTO-REBUCKET: when average bucket occupancy outgrows the bound,
         // double the bucket space (metadata-only commit; old files migrate
@@ -144,7 +144,7 @@ object CdcStream {
             }
           }
         }
-        if (mode == CdcMerge.MergeOnRead && compactEvery > 0) {
+        if (compactEvery > 0) {
           if (!asyncCompaction) Compactor.compactIfNeeded(table, compactEvery)
           else {
             val busy = busyFlag(table)
@@ -152,7 +152,7 @@ object CdcStream {
               maintenancePool.submit(new Runnable {
                 def run(): Unit = try {
                   val due = Compactor.dueBuckets(table, compactEvery)
-                  if (due.nonEmpty) Compactor.compactConcurrent(table, due.toSet)
+                  if (due.nonEmpty) Compactor.compact(table, due.toSet)
                 } catch {
                   case e: Throwable => System.err.println(s"[cdc-stream] async compaction failed: $e")
                 } finally busy.set(false)
@@ -218,7 +218,7 @@ object CdcStream {
                     cutoverLsn: Option[Long] = None,
                     verifyCutoverContiguity: Boolean = false,
                     maxFilesPerTrigger: Int = 4,
-                    saltBuckets: Int = 8, mode: CdcMerge.Mode = CdcMerge.MergeOnRead,
+                    saltBuckets: Int = 8,
                     compactEvery: Int = 8,
                     maxRowsPerBucket: Long = 0L,
                     trigger: Trigger = Trigger.AvailableNow(),
@@ -267,7 +267,7 @@ object CdcStream {
             val mn = good.agg(org.apache.spark.sql.functions.min("lsn")).collect()(0)
             if (!mn.isNullAt(0)) graft.merge.Bootstrap.verifyNoGap(mn.getLong(0), s)
           }
-          applyAndMaintain(table, good, epoch, saltBuckets, mode, compactEvery,
+          applyAndMaintain(table, good, epoch, saltBuckets, compactEvery,
             asyncCompaction, checkpointDir, maxRowsPerBucket)
         } finally annotated.unpersist()
         ()
@@ -275,7 +275,10 @@ object CdcStream {
       .start()
   }
 
-  /** Drain everything currently in the WAL dir and stop (test/bench mode). */
+  /** Drain everything currently in the WAL dir and stop (test/bench mode).
+    * `mode` is [[CdcMerge.MergeOnRead]], the single write strategy, kept for
+    * callers that name it.
+    */
   def runToCompletion(spark: SparkSession, walDir: String, table: LakeTable,
                       checkpointDir: String, maxFilesPerTrigger: Int = 4,
                       saltBuckets: Int = 8,
@@ -284,7 +287,7 @@ object CdcStream {
                       asyncCompaction: Boolean = false,
                       maxRowsPerBucket: Long = 0L): Unit = {
     val q = start(spark, walDir, table, checkpointDir, maxFilesPerTrigger,
-      saltBuckets, mode, compactEvery, asyncCompaction = asyncCompaction,
+      saltBuckets, compactEvery, asyncCompaction = asyncCompaction,
       maxRowsPerBucket = maxRowsPerBucket)
     try q.awaitTermination() finally if (q.isActive) q.stop()
     if (asyncCompaction) awaitMaintenance()

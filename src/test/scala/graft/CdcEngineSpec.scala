@@ -32,8 +32,8 @@ class CdcEngineSpec extends SparkSpec {
     }
   }
 
-  for ((mode, label) <- Seq(CdcMerge.MergeOnRead -> "merge-on-read",
-                            CdcMerge.CopyOnWrite -> "copy-on-write"))
+  for ((compactEach, label) <- Seq(false -> "merge-on-read",
+                                   true -> "merge-on-read, compacted after every batch"))
   test(s"batch merge ($label): WAL with dups/reorder/deletes reconverges to oracle") {
     val dir = tmpDir("lake")
     val cfg = WalGen.Config(numEvents = 20000, numConvs = 200, maxTurns = 30)
@@ -44,7 +44,11 @@ class CdcEngineSpec extends SparkSpec {
       (0 until 4).foreach { b =>
         val batch = WalGen.events(spark, cfg, b * per, (b + 1) * per)
           .orderBy(xxhash64(col("lsn"))) // reorder within batch
-        CdcMerge.apply(table, batch.toDF(), epoch = b.toLong, mode = mode)
+        CdcMerge.apply(table, batch.toDF(), epoch = b.toLong)
+        if (compactEach) {
+          assert(Compactor.compactIfNeeded(table, deltaThreshold = 1).isDefined)
+          assert(table.manifest.files.forall(_.kind == graft.lake.FileEntry.BASE))
+        }
       }
       assertMatchesOracle(table, cfg)
       // uniqueness invariant on the key

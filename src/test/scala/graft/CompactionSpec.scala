@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.gen.WalGen
 import graft.lake.{FileEntry, LakeTable}
@@ -7,10 +8,11 @@ import graft.merge.{CdcMerge, Compactor}
 import graft.model.Schemas
 import graft.stream.CdcStream
 
-/** Optimistic-concurrency compaction: the maintenance-thread rewrite must
-  * reconcile with concurrent micro-batch commits — rebase when the commits
-  * touched other buckets, abandon when they wrote into a compacted bucket —
-  * and an async-compaction stream must converge to the oracle.
+/** Optimistic-concurrency compaction: the rewrite must reconcile with
+  * concurrent micro-batch commits — rebase over commits to other buckets,
+  * carry deltas appended into a compacted bucket, abandon (leaving no
+  * orphan file) when its pinned input was rewritten — and an
+  * async-compaction stream must converge to the oracle.
   */
 class CompactionSpec extends SparkSpec {
 
@@ -74,7 +76,7 @@ class CompactionSpec extends SparkSpec {
         ()
       }
       val v0 = table.currentVersion
-      val r = Compactor.compactConcurrent(table, compactBuckets, preCommit = inject)
+      val r = Compactor.compact(table, compactBuckets, preCommit = inject)
       assert(r.isDefined, "compaction should rebase over an other-bucket commit")
       assert(table.currentVersion == v0 + 2) // injected commit + compaction commit
       // compacted buckets are base-only; injected delta survived the rebase
@@ -107,7 +109,7 @@ class CompactionSpec extends SparkSpec {
       // compacted base holds the pinned files' per-key winners and the new
       // delta rides on top (max-LSN resolve) — abandoning here would let
       // delta depth grow with stream age under a steady all-bucket stream
-      val r = Compactor.compactConcurrent(table, compactBuckets, preCommit = inject)
+      val r = Compactor.compact(table, compactBuckets, preCommit = inject)
       assert(r.isDefined, "compaction must rebase over a post-pin delta, not abandon")
       val m = table.manifest
       val inBuckets = m.filesForBuckets(compactBuckets)
@@ -124,11 +126,11 @@ class CompactionSpec extends SparkSpec {
 
       // tombstone-dropping compaction DOES require quiescence: the same
       // post-pin injection aborts it (resurrection hazard)
-      val r2 = Compactor.compactConcurrent(table, compactBuckets,
+      val r2 = Compactor.compact(table, compactBuckets,
         dropTombstones = true, preCommit = injectAt(100))
       assert(r2.isEmpty, "dropTombstones compaction must abandon on a post-pin write")
-      // a CoW rewrite of the bucket (pinned files REMOVED) also aborts MOR compaction
-      val r3 = Compactor.compactConcurrent(table, compactBuckets, preCommit = () => {
+      // another compaction of the bucket (pinned files REMOVED) aborts this one
+      val r3 = Compactor.compact(table, compactBuckets, preCommit = () => {
         Compactor.compact(table, compactBuckets) // folds the bucket → pinned files vanish
         ()
       })
@@ -137,49 +139,51 @@ class CompactionSpec extends SparkSpec {
     } finally rmrf(dir)
   }
 
-  test("CoW rebase: a concurrent compaction on DISJOINT buckets retries and commits; an overlapping one aborts loudly") {
-    import spark.implicits._
-    val dir = tmpDir("cowreb")
+  test("ZORDER-shaped compaction racing a live append carries it; an abandoned one leaves no orphan file") {
+    val dir = tmpDir("cc4")
+    val cfg = WalGen.Config(numEvents = 8000, numConvs = 100)
     try {
-      val table = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets = 2)
-      // conv ids steered to known buckets
-      val ids = (0 until 40).map(i => s"conv$i")
-      val b0 = ids.filter(table.bucketOf(_, 2) == 0)
-      val b1 = ids.filter(table.bucketOf(_, 2) == 1)
-      assert(b0.nonEmpty && b1.nonEmpty)
-      def batch(convs: Seq[String], lsnBase: Long) = convs.zipWithIndex.map { case (c, i) =>
-        (c, 0, "assistant", s"text of $c", null.asInstanceOf[String],
-          new java.sql.Timestamp(1L), "U", lsnBase + i)
-      }.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "op", "lsn")
-      // MOR deltas in BOTH buckets so a compactor has something to fold
-      CdcMerge.apply(table, batch(b0 ++ b1, 0), 0L)
-      val rows = table.snapshot().count()
-
-      // DISJOINT: CoW rewrites only bucket 1; mid-window a compactor folds
-      // bucket 0 → the CoW commit rebases over it and SUCCEEDS
-      val s1 = CdcMerge.apply(table, batch(b1, 1000), 1L, mode = CdcMerge.CopyOnWrite,
-        preCommit = () => { Compactor.compact(table, Set(0)) })
-      assert(s1.applied)
-      assert(table.snapshot().count() == rows) // no rows lost to the rebase
-      // bucket 0's compacted base survived the CoW commit
-      assert(table.manifest.files.filter(_.bucket == 0).forall(_.kind == FileEntry.BASE))
-      // the CoW-updated texts landed
-      assert(table.snapshot().filter(col("conv_id") === b1.head).select("text")
-        .collect()(0).getString(0) == s"text of ${b1.head}")
-
-      // OVERLAPPING: a concurrent compaction of the SAME bucket the CoW
-      // rewrite targets → stale snapshot → loud abort, table intact
-      val before = table.contentChecksum()
-      val e = intercept[IllegalStateException] {
-        CdcMerge.apply(table, batch(b1, 2000), 2L, mode = CdcMerge.CopyOnWrite,
-          preCommit = () => {
-            // re-dirty bucket 1 then fold it so its file set changes
-            CdcMerge.apply(table, batch(b1.take(1), 1500), 10L, streamId = "side")
-            Compactor.compact(table, Set(1))
-          })
+      val table = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets = 4)
+      (0 until 2).foreach { b =>
+        CdcMerge.apply(table, WalGen.events(spark, cfg, b * 4000L, (b + 1) * 4000L).toDF(), b.toLong)
       }
-      assert(e.getMessage.contains("single committer"), e.getMessage)
-      assert(table.snapshot().count() == rows)
+      val all = (0 until 4).toSet
+      val victimConv = table.snapshot().select("conv_id").first().getString(0)
+      // what OPTIMIZE t ZORDER BY (ts) runs, with a merge-on-read append
+      // committing between the rewrite and its commit
+      val r = Compactor.compact(table, all, maxRecordsPerFile = 64L,
+        clusterBy = Some(df => graft.lake.ZOrder.zColumn(df, Seq("ts"))),
+        preCommit = () => {
+          val extra = WalGen.events(spark, cfg, 0, 2000).toDF()
+            .filter(col("conv_id") === victimConv)
+          assert(CdcMerge.apply(table, extra, epoch = 99, streamId = "injector").applied)
+          ()
+        })
+      assert(r.isDefined, "a clustered compaction must rebase over a concurrent append")
+      val deltas = table.manifest.files.filter(_.kind == FileEntry.DELTA)
+      assert(deltas.nonEmpty, "the concurrent delta was lost by the rebase")
+      assert(deltas.forall(_.epoch > 1L), "pre-pin deltas must be folded away")
+      oracleCheck(table, cfg)
+
+      // abandoned: another compaction folds the same buckets mid-window, so
+      // the pinned input is gone; the loser must delete what it adopted
+      val r2 = Compactor.compact(table, all, preCommit = () => {
+        assert(Compactor.compact(table, all).isDefined)
+        ()
+      })
+      assert(r2.isEmpty, "compaction must abandon when its pinned input files were removed")
+      val root = java.nio.file.Paths.get(s"$dir/t")
+      val referenced = (0L to table.currentVersion)
+        .flatMap(v => table.manifestAt(v).files.map(_.path)).toSet
+      val onDisk = {
+        val w = java.nio.file.Files.walk(root.resolve("data"))
+        try w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(p => root.relativize(p).toString).toSet
+        finally w.close()
+      }
+      assert((onDisk -- referenced).isEmpty,
+        s"files no manifest references: ${(onDisk -- referenced).take(3)}")
+      oracleCheck(table, cfg)
     } finally rmrf(dir)
   }
 

@@ -3,13 +3,13 @@ package graft
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.gen.WalGen
-import graft.lake.LakeTable
-import graft.merge.CdcMerge
+import graft.lake.{FileEntry, LakeTable}
+import graft.merge.{CdcMerge, Compactor}
 import graft.model.Schemas
 
 /** Property-based convergence: for ANY partition of the WAL into ordered
-  * micro-batches, any within-batch reordering, and either merge strategy,
-  * the final table equals the LSN-ordered oracle reduction (SURVEY.md §5;
+  * micro-batches, any within-batch reordering, with or without compacting
+  * each batch's buckets right after it lands, the final table equals the LSN-ordered oracle reduction (SURVEY.md §5;
   * FIXTURES.md scenarios dup-delivery / reorder / restart). ScalaCheck
   * generators with fixed seeds → deterministic cases.
   */
@@ -27,7 +27,9 @@ class PropertySpec extends SparkSpec {
   test("any batch partition + reordering + mode converges to the oracle") {
     (0 until 8).foreach { caseId =>
       val splits = splitsGen.pureApply(Gen.Parameters.default, Seed(caseId.toLong))
-      val mode = if (caseId % 2 == 0) CdcMerge.MergeOnRead else CdcMerge.CopyOnWrite
+      // odd cases fold each batch's buckets straight back into base files,
+      // so the compaction rewrite stays under the random-split property
+      val compactEach = caseId % 2 == 1
       val dir = tmpDir("prop")
       try {
         val table = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets = 4)
@@ -36,12 +38,17 @@ class PropertySpec extends SparkSpec {
           val batch = WalGen.events(spark, cfg, from, until)
             .orderBy(org.apache.spark.sql.functions.xxhash64(
               org.apache.spark.sql.functions.col("lsn"))) // reorder
-          CdcMerge.apply(table, batch.toDF(), epoch.toLong, saltBuckets = 4, mode = mode)
+          val st = CdcMerge.apply(table, batch.toDF(), epoch.toLong, saltBuckets = 4)
+          if (compactEach) {
+            val touched = table.manifest.files
+              .filter(f => f.kind == FileEntry.DELTA && f.epoch == st.effEpoch).map(_.bucket).toSet
+            assert(Compactor.compact(table, touched).isDefined)
+          }
         }
         val got = table.snapshot().select("conv_id", "turn_idx", "text").collect()
           .map(r => ((r.getString(0), r.getInt(1)), r.getString(2))).toMap
         assert(got.size == oracle.size,
-          s"case $caseId (splits=$splits, $mode): size ${got.size} != ${oracle.size}")
+          s"case $caseId (splits=$splits, compactEach=$compactEach): size ${got.size} != ${oracle.size}")
         oracle.foreach { case (k, e) =>
           assert(got(k) == e.text, s"case $caseId: text mismatch at $k") }
       } finally rmrf(dir)

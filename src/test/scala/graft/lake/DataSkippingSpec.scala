@@ -132,6 +132,27 @@ class DataSkippingSpec extends graft.SparkSpec {
     } finally rmrf(dir)
   }
 
+  test("bloom cache: bounded, and a just-used bloom survives eviction past the cap") {
+    import DataSkipping.KeyBloom
+    val bf = org.apache.spark.util.sketch.BloomFilter.create(16, 0.05)
+    bf.putLong(LakeTable.keyHash("conv-hot"))
+    val out = new java.io.ByteArrayOutputStream()
+    bf.writeTo(out)
+    val b64 = java.util.Base64.getEncoder.encodeToString(out.toByteArray)
+    def entry(i: Int) = FileEntry(s"data/bucket=0/bloom-cache-$i.parquet", 0, 1L, 1L, 0,
+      FileEntry.DELTA, 0L, bloom = Some(b64))
+    val hot = entry(-1)
+    // twice the cap of distinct blooms, with `hot` looked up every 64 of them
+    (0 until 2 * KeyBloom.CacheCap).foreach { i =>
+      if (i % 64 == 0) assert(KeyBloom.mightContain(hot, "conv-hot"))
+      KeyBloom.of(entry(i))
+      assert(KeyBloom.cacheSize <= KeyBloom.CacheCap, s"cache grew past its cap at insert $i")
+      assert(KeyBloom.isCached(hot.path), s"a just-used bloom was evicted at insert $i")
+      assert(KeyBloom.isCached(entry(i).path))
+    }
+    assert(!KeyBloom.isCached(entry(0).path), "the least recently used bloom should go first")
+  }
+
   test("OPTIMIZE ... ZORDER BY SQL rewrites and stays readable") {
     val dir = tmpDir("skip-sql")
     spark.sparkContext // ensure the shared context exists (builder reuses it)

@@ -109,7 +109,7 @@ class LakeRebucketSpec extends graft.SparkSpec {
       // compacting the delta's bucket must pull in the old-depth base file
       // (shared coverage) and report the whole closed component
       val deltaBucket = table.manifest.files.find(_.kind == FileEntry.DELTA).get.bucket
-      val r = Compactor.compact(table, Set(deltaBucket))
+      val r = Compactor.compact(table, Set(deltaBucket)).get
       val m = table.manifest
       assert(r.compactedBuckets.size >= 2,
         s"closure must widen to the old file's sibling buckets, got ${r.compactedBuckets}")
@@ -124,27 +124,6 @@ class LakeRebucketSpec extends graft.SparkSpec {
       assert(table.manifest.files.forall(f =>
         f.kind == FileEntry.BASE && f.writePids.isEmpty))
       assert(state(table) == before)
-    } finally rmrf(dir)
-  }
-
-  test("copy-on-write across a rebucket replaces shared-coverage files by path") {
-    val dir = tmpDir("rb-cow")
-    try {
-      val table = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets = 2)
-      val convs = (0 until 30).map(i => s"conv-$i")
-      CdcMerge.apply(table, batch(convs.map(c => ("I", 1L, c, 0, s"v1-$c")): _*), 0L,
-        mode = CdcMerge.CopyOnWrite)
-      table.rebucket(2) // -> 4
-      CdcMerge.apply(table, batch(
-        ("U", 10L, "conv-3", 0, "v2-conv-3"),
-        ("D", 11L, "conv-8", 0, "")), 1L, mode = CdcMerge.CopyOnWrite)
-      val got = state(table)
-      assert(got(("conv-3", 0)) == "v2-conv-3")
-      assert(!got.contains(("conv-8", 0)))
-      assert(got.size == 29)
-      val dups = table.snapshot().groupBy("conv_id", "turn_idx").count()
-        .filter(col("count") > 1).count()
-      assert(dups == 0, "CoW must replace shared-coverage files, never duplicate their rows")
     } finally rmrf(dir)
   }
 
@@ -236,7 +215,7 @@ class LakeRebucketSpec extends graft.SparkSpec {
     }
   }
 
-  test("concurrent REBUCKET races: MOR merge and async compactor stamp; CoW aborts loudly") {
+  test("concurrent REBUCKET races: MOR merge and async compactor stamp their output") {
     val dir = tmpDir("rb-race")
     try {
       // --- MOR merge loses the CAS to a rebucket: its deltas were routed
@@ -260,7 +239,7 @@ class LakeRebucketSpec extends graft.SparkSpec {
       CdcMerge.apply(t2, batch((0 until 16).map(i => ("I", 1L, s"conv-$i", 0, s"v1-$i")): _*), 0L)
       CdcMerge.apply(t2, batch(("U", 10L, "conv-3", 0, "v2-3")), 1L)
       val before2 = state(t2)
-      val r = Compactor.compactConcurrent(t2, t2.manifest.files.map(_.bucket).toSet,
+      val r = Compactor.compact(t2, t2.manifest.files.map(_.bucket).toSet,
         preCommit = () => { t2.rebucket(2); () })
       assert(r.isDefined, "compactor must rebase over a rebucket, not abandon")
       val m2 = t2.manifest
@@ -273,15 +252,6 @@ class LakeRebucketSpec extends graft.SparkSpec {
       Compactor.compact(t2, (0 until 4).toSet)
       assert(t2.manifest.files.forall(_.writePids.isEmpty))
       assert(state(t2) == before2)
-
-      // --- CoW cannot reason about a moved space: loud abort
-      val t3 = LakeTable.create(spark, s"$dir/t3", Schemas.transcript, numBuckets = 2)
-      CdcMerge.apply(t3, batch(("I", 1L, "conv-x", 0, "v1-x")), 0L, mode = CdcMerge.CopyOnWrite)
-      val e = intercept[IllegalStateException] {
-        CdcMerge.apply(t3, batch(("U", 10L, "conv-x", 0, "v2-x")), 1L,
-          mode = CdcMerge.CopyOnWrite, preCommit = () => { t3.rebucket(2); () })
-      }
-      assert(e.getMessage.contains("REBUCKET"))
     } finally rmrf(dir)
   }
 
@@ -385,7 +355,7 @@ class LakeRebucketSpec extends graft.SparkSpec {
             if (table.manifest.numBuckets <= 64) table.rebucket(2 + rnd.nextInt(2))
           case 9 => // concurrent-form compactor over everything
             val files = table.manifest.files
-            if (files.nonEmpty) Compactor.compactConcurrent(table, files.map(_.bucket).toSet)
+            if (files.nonEmpty) Compactor.compact(table, files.map(_.bucket).toSet)
         }
         if (step % 8 == 7) { // periodic full equality check
           val got = state(table)
