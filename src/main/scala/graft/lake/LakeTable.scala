@@ -3,6 +3,10 @@ package graft.lake
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Cast, Descending, Expression, Literal, SortOrder, XxHash64}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.model.Schemas
@@ -122,8 +126,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     * single delta file must not re-shuffle the whole table.
     */
   private def resolveMor(m: Manifest, files: Seq[FileEntry], target: StructType): DataFrame = {
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
+    if (files.isEmpty) return localFrame(spark, target)
     // Dirty = every current-depth bucket a non-base file covers, CLOSED
     // under shared-file coverage over the subset being read: after a
     // REBUCKET, a pre-split base file spans several current buckets, and
@@ -412,8 +415,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
           "which is not representable as delta rows — re-sync the follower from a snapshot")
       mv.files.filter(f => f.kind == FileEntry.DELTA && f.epoch > fromEpoch)
     }.distinctBy(_.path)
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
+    if (files.isEmpty) return localFrame(spark, target)
     // fail loudly (not silently-partial) if a referenced delta was vacuumed
     files.filterNot(f => Files.exists(root.resolve(f.path))) match {
       case missing if missing.nonEmpty => throw new IllegalStateException(
@@ -435,11 +437,18 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     * bloom pruning where [[buildBlooms]] has annotated the file (delta
     * files span their bucket's key range, so only the bloom can skip them).
     */
-  def filesForConversation(convId: String): Seq[FileEntry] = {
-    val m = manifest
+  def filesForConversation(convId: String): Seq[FileEntry] =
+    filesForConversation(manifest, convId)
+
+  /** Same, over a PINNED manifest: a lookup prunes and reads under one
+    * version, so a commit landing in between cannot pair new files with
+    * old schemas.
+    */
+  def filesForConversation(m: Manifest, convId: String): Seq[FileEntry] = {
     val h = keyHash(convId)
+    val b = bucketOf(convId, m.numBuckets)
     m.files.filter { f =>
-      m.covers(f, bucketOf(convId, m.numBuckets)) &&
+      m.covers(f, b) &&
         f.minKey.forall(_ <= convId) && f.maxKey.forall(_ >= convId) &&
         DataSkipping.KeyBloom.of(f).forall(_.mightContainLong(h))
     }
@@ -532,21 +541,28 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     0 // unreachable
   }
 
-  /** Point-lookup read of one conversation — scans only the pruned file
-    * set, resolves max-LSN, drops tombstones.
+  /** Point lookup of one conversation, read on the driver: no Spark job
+    * and no broadcast. It pins one manifest and prunes it to the files
+    * that can hold `convId` ([[filesForConversation]]: bucket coverage,
+    * key range, bloom). From those files it keeps only that key's rows,
+    * decoded by the vectorized Parquet reader of Spark's file scan with a
+    * row-group filter on `conv_id`. Each row is aligned to the current
+    * schema as [[alignTo]] aligns a scan. Each turn keeps its
+    * [[resolveOrder]] winner, tombstones are dropped, and rows are sorted
+    * by `turn_idx` (see [[PointRead]]).
+    *
+    * Bound: the rows read are one key's versions in the pruned files, so
+    * the cost does not grow with the table. The result is a local
+    * relation: `collect()` runs no job. (`count()` plans a global
+    * aggregate, which Spark runs as a job even over a local relation.)
     */
-  def readConversation(convId: String): DataFrame = {
-    val m = manifest
-    val target = Schemas.physical(userSchema(m))
-    val files = filesForConversation(convId)
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(userSchema(m).fields))
-    val all = readAligned(m, files, target).filter(col("conv_id") === convId)
-    val resolved = if (files.forall(_.kind == FileEntry.BASE)) all else maxLsnResolve(all)
-    resolved.filter(!col(Schemas.DELETED_COL))
-      .select(userSchema(m).fieldNames.map(col).toSeq: _*)
-      .orderBy("turn_idx")
+  def readConversation(convId: String): DataFrame = readConversation(manifest, convId)
+
+  /** Same, under a PINNED manifest. */
+  def readConversation(m: Manifest, convId: String): DataFrame = {
+    val user = userSchema(m)
+    localFrame(spark, user, PointRead.conversation(spark, root, m,
+      filesForConversation(m, convId), Schemas.physical(user), convId))
   }
 
   /** Order-invariant content checksum of the live snapshot — sum of per-row
@@ -777,6 +793,18 @@ object LakeTable {
     Seq(col(Schemas.LSN_COL).desc, col(Schemas.DELETED_COL).asc,
       xxhash64(df.columns.sorted.map(col).toSeq: _*).desc)
 
+  /** [[resolveOrder]] as Catalyst sort orders over rows of `schema`: the
+    * same three keys for the driver-side resolve of a point lookup.
+    */
+  private[lake] def resolveOrdering(schema: StructType): Seq[SortOrder] = {
+    def ref(name: String) = {
+      val i = schema.fieldIndex(name)
+      BoundReference(i, schema(i).dataType, nullable = true)
+    }
+    Seq(SortOrder(ref(Schemas.LSN_COL), Descending), SortOrder(ref(Schemas.DELETED_COL), Ascending),
+      SortOrder(XxHash64(schema.fieldNames.sorted.map(ref).toSeq, 42L), Descending))
+  }
+
   /** Driver-side key hash — the same xxhash64(seed 42) the `xxhash64`
     * Catalyst function computes, evaluated via the expression itself (so
     * bucket routing and bloom membership agree with distributed plans
@@ -797,6 +825,14 @@ object LakeTable {
   private[lake] def pathLock(root: Path): Object =
     locks.getOrElseUpdate(root.toAbsolutePath.normalize.toString, new Object)
 
+  /** A DataFrame over rows held on the driver: a local relation, so
+    * collecting it runs no job.
+    */
+  private[lake] def localFrame(spark: SparkSession, schema: StructType,
+                               rows: Seq[InternalRow] = Nil): DataFrame =
+    org.apache.spark.sql.graftglue.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
   /** Align `df` to `target` schema: missing columns → typed nulls, differing
     * types → cast; column order = target order.
     */
@@ -811,6 +847,18 @@ object LakeTable {
     }
     df.select(cols.toSeq: _*)
   }
+
+  /** [[alignTo]] as Catalyst expressions over rows of `from`: the same
+    * keep, cast and null-pad rule for the driver-side point lookup.
+    */
+  private[lake] def alignExprs(from: StructType, target: StructType,
+                               timeZone: String): Seq[Expression] =
+    target.fields.toSeq.map { tf =>
+      val i = from.fieldNames.indexOf(tf.name)
+      if (i < 0) Literal(null, tf.dataType)
+      else if (from(i).dataType == tf.dataType) BoundReference(i, tf.dataType, nullable = true)
+      else Cast(BoundReference(i, from(i).dataType, nullable = true), tf.dataType, Some(timeZone))
+    }
 
   /** The engine pins its sessions' parquet timestamp physical type to
     * TIMESTAMP_MICROS (Iceberg's mandated unit): Spark's INT96 legacy
