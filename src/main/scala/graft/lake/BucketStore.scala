@@ -367,14 +367,11 @@ final class BucketStore private (val root: Path, spark: SparkSession,
     manifestMemo = (m2.version, m2)
   }
 
-  private def hadoopConf = spark.sessionState.newHadoopConf()
+  /** One footer reader per adoption (see [[FooterReader]]). */
+  private def footerReader = new FooterReader(spark.sessionState.newHadoopConf())
 
-  private def rowCount(p: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), hadoopConf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
-  }
+  private def rowCount(footers: FooterReader, p: Path): Long =
+    footers.footer(p).getBlocks.asScala.map(_.getRowCount).sum
 
   /** Adopt a flat staging dir's parquet files as `kind` entries at `pid`. */
   private def adoptDir(staging: Path, pid: Int, kind: String, ver: Long): Seq[FileEntry] = {
@@ -382,8 +379,9 @@ final class BucketStore private (val root: Path, spark: SparkSession,
     val sub = if (pid < 0) "delta" else s"pid=$pid"
     val dir = dataDir.resolve(sub)
     Files.createDirectories(dir)
+    val footers = footerReader
     val out = files.map { p =>
-      val rows = rowCount(p)
+      val rows = rowCount(footers, p)
       val name = s"$kind-v$ver-${p.getFileName.toString}"
       Files.move(p, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
       FileEntry(s"data/$sub/$name", pid, rows, ver, 0, kind, ver)
@@ -398,12 +396,13 @@ final class BucketStore private (val root: Path, spark: SparkSession,
     */
   private def adoptPartitioned(staging: Path, ver: Long, nPids: Int): Seq[FileEntry] = {
     val pidRe = "__pid=(\\d+)".r
+    val footers = footerReader
     val out = listParquet(staging).flatMap { p =>
         p.getParent.getFileName.toString match {
           case pidRe(pid) =>
             val dir = dataDir.resolve(s"pid=$pid")
             Files.createDirectories(dir)
-            val rows = rowCount(p)
+            val rows = rowCount(footers, p)
             val name = s"${FileEntry.BASE}-v$ver-${p.getFileName.toString}"
             Files.move(p, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
             Some(FileEntry(s"data/pid=$pid/$name", pid.toInt, rows, ver, 0,

@@ -48,7 +48,25 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     s.toLong
   }
 
-  def manifest: Manifest = manifestAt(currentVersion)
+  /** The session this table reads and writes through. */
+  def sparkSession: SparkSession = spark
+
+  // One-entry memo of the current manifest: a lookup, scan or commit
+  // loads the manifest, and re-parsing an unchanged version costs ~7 ms
+  // of JSON work. `_current` is still read on every call, so a commit
+  // through any other instance (or process) is seen at once.
+  @volatile private var manifestMemo: (Long, Manifest) = null
+
+  def manifest: Manifest = {
+    val v = currentVersion
+    val memo = manifestMemo
+    if (memo != null && memo._1 == v) memo._2
+    else {
+      val m = manifestAt(v)
+      manifestMemo = (v, m)
+      m
+    }
+  }
 
   def manifestAt(version: Long): Manifest =
     Manifest.readSplit(manifestDir, version)
@@ -75,7 +93,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
   /** Read `files` under manifest `m`, aligned to `target` (schema-evolution
     * groups cast/padded to the current physical schema).
     */
-  private def readAligned(m: Manifest, files: Seq[FileEntry], target: StructType): DataFrame =
+  private[graft] def readAligned(m: Manifest, files: Seq[FileEntry], target: StructType): DataFrame =
     files.groupBy(_.schemaId).map { case (sid, fs) =>
       val fileSchema = Schemas.physical(
         StructType.fromDDL(m.schemas.find(_.id == sid).get.ddl))
@@ -107,11 +125,20 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     * hash of the full payload, so reads, compactions, replays, and the
     * maintenance consumers (which share [[LakeTable.resolveOrder]]) all
     * agree.
+    *
+    * `by` is the window's partition: the key columns, optionally with
+    * routing columns that are functions of the key (the compactor adds
+    * `bucket`, so that its exchange already satisfies the window). Its
+    * order is the window sort's order. Routing columns stay out of the
+    * payload hash, so a tie resolves as it does in a read.
     */
-  private def maxLsnResolve(df: DataFrame): DataFrame = {
+  private[graft] def maxLsnResolve(df: DataFrame,
+                                   by: Seq[String] = Schemas.KEY_COLS): DataFrame = {
+    require(Schemas.KEY_COLS.forall(by.contains), s"resolve partition $by lacks a key column")
+    val routing = by.filterNot(Schemas.KEY_COLS.contains)
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(Schemas.KEY_COLS.map(col): _*)
-      .orderBy(resolveOrder(df): _*)
+      .partitionBy(by.map(col): _*)
+      .orderBy(resolveOrder(df.columns.filterNot(routing.contains).toSeq): _*)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
@@ -152,7 +179,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
 
   /** Same, over a PINNED manifest — concurrent commits between planning and
     * execution must not change which files this read resolves (used by the
-    * optimistic-concurrency compactor).
+    * incremental aggregates' changelog refresh).
     */
   def snapshotPhysical(m: Manifest, buckets: Option[Set[Int]]): DataFrame = {
     val target = Schemas.physical(userSchema(m))
@@ -788,10 +815,12 @@ object LakeTable {
     * contract-violating duplicate-LSN input — identical duplicate
     * deliveries hash equal, so normal replays are unaffected — but it
     * turns an arbitrary `row_number` pick into a deterministic one.
+    * `payload` names the hashed columns: the physical columns, in any
+    * order.
     */
-  def resolveOrder(df: DataFrame): Seq[org.apache.spark.sql.Column] =
+  def resolveOrder(payload: Seq[String]): Seq[org.apache.spark.sql.Column] =
     Seq(col(Schemas.LSN_COL).desc, col(Schemas.DELETED_COL).asc,
-      xxhash64(df.columns.sorted.map(col).toSeq: _*).desc)
+      xxhash64(payload.sorted.map(col): _*).desc)
 
   /** [[resolveOrder]] as Catalyst sort orders over rows of `schema`: the
     * same three keys for the driver-side resolve of a point lookup.

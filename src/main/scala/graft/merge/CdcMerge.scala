@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
-import graft.lake.{CommitInfo, FileEntry, LakeTable, SchemaEntry, SchemaReconciler}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import graft.lake.{CommitInfo, FileEntry, FooterReader, LakeTable, SchemaEntry, SchemaReconciler}
 import graft.model.Schemas._
 
 /** The CDC apply: one micro-batch of change events → MERGE INTO the lake
@@ -263,7 +264,9 @@ object CdcMerge {
         .filter(p => p.getFileName.toString.endsWith(".parquet")).toSeq
       finally s.close()
     }
-    val conf = spark.sessionState.newHadoopConf()
+    // one reader per adoption: its read options are built once from the
+    // session's Hadoop conf, not once per footer
+    val footers = new FooterReader(spark.sessionState.newHadoopConf())
     // Footer reads are driver-side metadata I/O; done serially they become
     // a per-batch serial stage at 10k staged files — run them on a bounded
     // pool (ordering preserved by indexing futures).
@@ -273,12 +276,12 @@ object CdcMerge {
     // filter then skips all-tombstone base files); _lsn stays out — its
     // watermark already has a dedicated manifest field (maxLsn)
     val userStats = StructType(statsSchema.fields.filterNot(_.name == LSN_COL))
-    try parquetFiles.map(p => pool.submit(adoptOne(table, conf, bucketRe, epoch, schemaId, kind, userStats, p)))
+    try parquetFiles.map(p => pool.submit(adoptOne(table, footers, bucketRe, epoch, schemaId, kind, userStats, p)))
       .map(_.get())
     finally pool.shutdown()
   }
 
-  private def adoptOne(table: LakeTable, conf: org.apache.hadoop.conf.Configuration,
+  private def adoptOne(table: LakeTable, footers: FooterReader,
                        bucketRe: scala.util.matching.Regex, epoch: Long, schemaId: Int,
                        kind: String, statsSchema: StructType, p: java.nio.file.Path)
       : java.util.concurrent.Callable[FileEntry] = () => {
@@ -286,33 +289,41 @@ object CdcMerge {
         case bucketRe(b) => b.toInt
         case other => throw new IllegalStateException(s"no bucket dir in $other")
       }
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val (rows, maxLsn, minKey, maxKey, colStats) = try {
-        val blocks = reader.getFooter.getBlocks.asScala
-        val rows = blocks.map(_.getRowCount).sum
-        val maxLsn = blocks.flatMap { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == LSN_COL)
-            .flatMap(c => Option(c.getStatistics))
-            .collect { case s if !s.isEmpty && s.hasNonNullValue =>
-              s.genericGetMax.asInstanceOf[java.lang.Long].longValue() }
-        }.foldLeft(-1L)(math.max)
-        val keyStats = blocks.flatMap { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == "conv_id")
-            .flatMap(c => Option(c.getStatistics))
-            .collect { case s if !s.isEmpty && s.hasNonNullValue =>
-              (s.minAsString, s.maxAsString) }
-        }
-        val minKey = if (keyStats.isEmpty) None else Some(keyStats.map(_._1).min)
-        val maxKey = if (keyStats.isEmpty) None else Some(keyStats.map(_._2).max)
-        val colStats = graft.lake.StatsHarvest.fromBlocks(blocks.toSeq, statsSchema)
-        (rows, maxLsn, minKey, maxKey, colStats)
-      } finally reader.close()
+      val s = FooterStats(footers.footer(p), statsSchema)
       val bytes = Files.size(p)
       val rel = table.adoptStagedFile(p, bucket, epoch, kind)
-      FileEntry(rel, bucket, rows, maxLsn, schemaId, kind, epoch, minKey, maxKey,
-        colStats = colStats, bytes = Some(bytes))
+      FileEntry(rel, bucket, s.rows, s.maxLsn, schemaId, kind, epoch, s.minKey, s.maxKey,
+        colStats = s.colStats, bytes = Some(bytes))
+  }
+
+  /** What an adopted file's entry takes from its footer: rows, the `_lsn`
+    * max, the `conv_id` range and the [[graft.lake.StatsHarvest]] bounds
+    * of the stats schema's columns.
+    */
+  private[graft] final case class FooterStats(
+      rows: Long, maxLsn: Long, minKey: Option[String], maxKey: Option[String],
+      colStats: Option[Map[String, graft.lake.ColStat]])
+
+  private[graft] object FooterStats {
+    def apply(footer: ParquetMetadata, statsSchema: StructType): FooterStats = {
+      val blocks = footer.getBlocks.asScala.toSeq
+      val rows = blocks.map(_.getRowCount).sum
+      val maxLsn = blocks.flatMap { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == LSN_COL)
+          .flatMap(c => Option(c.getStatistics))
+          .collect { case s if !s.isEmpty && s.hasNonNullValue =>
+            s.genericGetMax.asInstanceOf[java.lang.Long].longValue() }
+      }.foldLeft(-1L)(math.max)
+      val keyStats = blocks.flatMap { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == "conv_id")
+          .flatMap(c => Option(c.getStatistics))
+          .collect { case s if !s.isEmpty && s.hasNonNullValue =>
+            (s.minAsString, s.maxAsString) }
+      }
+      val minKey = if (keyStats.isEmpty) None else Some(keyStats.map(_._1).min)
+      val maxKey = if (keyStats.isEmpty) None else Some(keyStats.map(_._2).max)
+      FooterStats(rows, maxLsn, minKey, maxKey, graft.lake.StatsHarvest.fromBlocks(blocks, statsSchema))
+    }
   }
 
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
@@ -447,7 +458,11 @@ object Compactor {
     }.toSeq.sorted
 
   /** Rewrite `buckets` from a PINNED manifest into per-key-resolved base
-    * files, then commit with OPTIMISTIC CONCURRENCY: the (slow) rewrite
+    * files in one Spark write with ONE exchange and ONE sort: the pinned
+    * files are routed by bucket, resolved by max LSN in a window
+    * partitioned by (bucket, key) and written in that window's order (a
+    * `clusterBy` adds its own sort after the same exchange). Then commit
+    * with OPTIMISTIC CONCURRENCY: the (slow) rewrite
     * may run while writers keep committing — on the stream thread, on the
     * maintenance thread, or under a SQL OPTIMIZE — and the commit then
     * validates-and-retries Iceberg-style.
@@ -488,7 +503,7 @@ object Compactor {
               clusterBy: Option[DataFrame => org.apache.spark.sql.Column] = None,
               preCommit: () => Unit = () => ()): Option[Result] = {
     val t0 = System.nanoTime()
-    val spark = table.snapshot().sparkSession
+    val spark = table.sparkSession
     val m0 = table.manifest
     // closure over shared-file coverage (identity without a REBUCKET in
     // history): a pre-split file spans several current buckets, and its
@@ -496,45 +511,50 @@ object Compactor {
     // rewrite region is fixed at the PIN's depth — post-pin files are
     // never coarser, so the closed region cannot grow under us
     val closed = m0.bucketClosure(buckets)
-    val inputFiles = m0.filesForBuckets(closed).map(_.path).toSet
+    val pinned = m0.filesForBuckets(closed)
+    val inputFiles = pinned.map(_.path).toSet
     if (inputFiles.isEmpty) return None
-    // resolve from the PINNED manifest (not _current: a concurrent writer
-    // must not change our input between pin and plan); max-LSN resolved,
-    // tombstones kept unless dropped here
-    val resolved0 = table.snapshotPhysical(m0, Some(closed))
+    // ONE exchange, ONE sort: read the PINNED files (not _current: a
+    // concurrent writer must not change our input between pin and plan),
+    // route them by bucket, and resolve max-LSN in a window partitioned by
+    // (bucket, key), which the routing already satisfies and whose sort
+    // (bucket, conv_id, turn_idx, …) is also the writer's. Tombstones are
+    // kept unless dropped here.
+    val physTarget = graft.model.Schemas.physical(table.userSchema(m0))
+    val routed = table.readAligned(m0, pinned, physTarget)
+      .withColumn("bucket", table.bucketExpr(m0.numBuckets))
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("bucket"))
+    val resolved0 = table.maxLsnResolve(routed, "bucket" +: graft.model.Schemas.KEY_COLS)
     val resolved1 = if (dropTombstones)
       resolved0.filter(!col(graft.model.Schemas.DELETED_COL)) else resolved0
     // a clusterBy (zorder) computes quantile boundaries with ONE
     // approxQuantile job over `resolved` BEFORE the rewrite reads it again
-    // — persist so the MOR resolve + scan run once, not twice
+    // — persist so the read, exchange and resolve run once, not twice
     val resolved = if (clusterBy.isDefined)
       resolved1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else resolved1
     val staging = table.root.resolve(
       s"_staging/compact-${m0.version}-${java.util.UUID.randomUUID().toString.take(8)}")
-    // The cluster value is MATERIALIZED as a column before the sort and
-    // sorted as a plain attribute: SortExec's generated ordering evaluates
-    // sort-key EXPRESSIONS per comparison (n·log n times), so sorting
-    // directly on the z expression — a 2^bits-step HOF per evaluation —
-    // multiplies its cost ~2·log₂(rows)×. Measured on a 100k-row zorder
-    // rewrite: 40.6 s sorting on the expression vs ~1 s on the column.
-    val bucketed = resolved.withColumn("bucket", table.bucketExpr(m0.numBuckets))
-    val (toSort, sortCols, dropAfter) = clusterBy match {
-      case Some(mk) => (bucketed.withColumn("__cluster", mk(resolved)),
-        Seq(col("bucket"), col("__cluster")), Seq("__cluster"))
-      case None => (bucketed, Seq(col("bucket"), col("conv_id"), col("turn_idx")), Nil)
+    // A clusterBy keeps its own sort, after the same exchange. The cluster
+    // value is MATERIALIZED as a column before the sort and sorted as a
+    // plain attribute: SortExec's generated ordering evaluates sort-key
+    // EXPRESSIONS per comparison (n·log n times), so sorting directly on
+    // the z expression — a 2^bits-step HOF per evaluation — multiplies its
+    // cost ~2·log₂(rows)×. Measured on a 100k-row zorder rewrite: 40.6 s
+    // sorting on the expression vs ~1 s on the column.
+    val sorted = clusterBy match {
+      case Some(mk) => resolved.withColumn("__cluster", mk(resolved))
+        .sortWithinPartitions("bucket", "__cluster").drop("__cluster")
+      // the window's order already: no extra Sort is planned
+      case None => resolved.sortWithinPartitions("bucket", "conv_id", "turn_idx")
     }
-    try toSort
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("bucket"))
-      .sortWithinPartitions(sortCols: _*)
-      .drop(dropAfter: _*)
+    try sorted
       .write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("bucket").parquet(staging.toString)
     finally if (clusterBy.isDefined) resolved.unpersist()
     val newFiles = CdcMerge.adoptStaged(table, spark, staging, m0.lastEpoch,
-      m0.currentSchemaId, FileEntry.BASE,
-      graft.model.Schemas.physical(table.userSchema(m0)))
+      m0.currentSchemaId, FileEntry.BASE, physTarget)
     CdcMerge.deleteRecursively(staging)
     def abandon(): Option[Result] = {
       newFiles.foreach(f => java.nio.file.Files.deleteIfExists(table.root.resolve(f.path)))

@@ -53,7 +53,7 @@ object AnnMaintenance {
                 numPids: Int = 64, compactEvery: Int = 8,
                 retrainAbove: Double = 4.0,
                 maxRowsPerPid: Long = 1L << 19): Handle = {
-    val spark = table.snapshot().sparkSession
+    val spark = table.sparkSession
     def keyed(df: org.apache.spark.sql.DataFrame) =
       df.withColumn("id", concat_ws("#", Schemas.KEY_COLS.map(col): _*))
     // shares the dedup loop's live registry: one maintenance loop per

@@ -60,7 +60,7 @@ object DedupMaintenance {
   private[stream] def windowLatest(changes: DataFrame, keyName: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(Schemas.KEY_COLS.map(col): _*)
-      .orderBy(LakeTable.resolveOrder(changes): _*)
+      .orderBy(LakeTable.resolveOrder(changes.columns.toSeq): _*)
     changes.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
       .withColumn(keyName, concat_ws("#", Schemas.KEY_COLS.map(col): _*))
@@ -192,7 +192,7 @@ object DedupMaintenance {
                 numPids: Int = 64, compactEvery: Int = 8,
                 maxRowsPerPid: Long = 1L << 19,
                 touchesDir: Option[String] = None): LakeHandle = {
-    val spark = table.snapshot().sparkSession
+    val spark = table.sparkSession
     registerLive(table, pinName, liveKey => {
       // EVERYTHING effectful sits after the singleton check — a REFUSED
       // start must be a pure no-op, and the bootstrap is the opposite of

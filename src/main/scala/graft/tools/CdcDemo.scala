@@ -49,7 +49,7 @@ object CdcDemo {
     val pruned = table.filesForConversation(conv)
     println(s"[demo] point lookup $conv: scans ${pruned.size} of ${m.files.size} files " +
       s"(bucket ${table.bucketOf(conv, m.numBuckets)})")
-    println(s"[demo] $conv turns: ${table.readConversation(conv).count()}")
+    println(s"[demo] $conv turns: ${table.readConversation(conv).collect().length}")
 
     // oracle check (driver-side reducer over the same deterministic stream)
     val oracle = WalGen.oracleState(cfg)

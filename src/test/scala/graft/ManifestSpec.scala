@@ -71,6 +71,27 @@ class ManifestSpec extends SparkSpec {
     } finally rmrf(dir)
   }
 
+  test("the current manifest is parsed once per version; other instances' commits and the metadata horizon still show") {
+    val dir = tmpDir("segmemo")
+    val cfg = WalGen.Config(numEvents = 3000, numConvs = 40)
+    try {
+      val a = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets = 2)
+      CdcMerge.apply(a, WalGen.events(spark, cfg, 0, 1000).toDF(), 0L)
+      val m1 = a.manifest
+      assert(a.manifest eq m1, "an unchanged version was parsed again")
+      // a commit through a second instance on the same root is seen by the first
+      val b = LakeTable.load(spark, s"$dir/t")
+      CdcMerge.apply(b, WalGen.events(spark, cfg, 1000, 2000).toDF(), 1L)
+      val m2 = a.manifest
+      assert(m2.version == m1.version + 1 && m2 == Manifest.readSplit(a.manifestDir, m2.version))
+      // a metadata-vacuumed version throws even while it is the memo's entry
+      CdcMerge.apply(b, WalGen.events(spark, cfg, 2000, 3000).toDF(), 2L)
+      b.vacuumMetadata(keepVersions = 1)
+      intercept[java.nio.file.NoSuchFileException](a.manifestAt(m2.version))
+      assert(a.manifest.version == m2.version + 1)
+    } finally rmrf(dir)
+  }
+
   test("v1 inline manifests remain readable") {
     val dir = tmpDir("segv1")
     try {

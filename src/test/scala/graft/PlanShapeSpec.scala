@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.merge.CdcMerge
@@ -12,7 +13,8 @@ import graft.merge.CdcMerge
 /** Physical-plan-shape assertions for the headline paths — the plans must
   * stay the ones you'd want at 100 TB, not just produce correct rows:
   * filters reach the parquet scan, projections prune the read schema,
-  * small joins broadcast, and the merge-on-read apply shuffles once.
+  * small joins broadcast, and the merge-on-read apply and the compaction
+  * each shuffle once.
   */
 class PlanShapeSpec extends SparkSpec {
 
@@ -90,6 +92,47 @@ class PlanShapeSpec extends SparkSpec {
         assert(exchanges.head.outputPartitioning.toString.contains("_salt") == salted,
           s"salted routing expected only once a bucket is hot, $shown")
       }
+    } finally rmrf(dir)
+  }
+
+  /** Exchanges in `plan`, counting those inside a cached relation it
+    * scans: a persisted input's shuffle still runs once per rewrite.
+    */
+  private def exchangesIn(plan: SparkPlan): Int = Aqe.collect(plan) {
+    case _: ShuffleExchangeLike => 1
+    case m: InMemoryTableScanExec => exchangesIn(m.relation.cachedPlan)
+  }.sum
+
+  test("compaction shuffles once and sorts once") {
+    val dir = tmpDir("planshape-compact")
+    try {
+      val cfg = graft.gen.WalGen.Config(numEvents = 6000, numConvs = 60)
+      def events(from: Long, to: Long) = graft.gen.WalGen.events(spark, cfg, from, to).toDF()
+      def assertShape(what: String, plan: SparkPlan, sorts: Int): Unit = {
+        val shown = s"$what:\n${plan.treeString.take(4000)}"
+        assert(exchangesIn(plan) == 1, s"expected exactly one exchange, $shown")
+        assert(Aqe.collect(plan) { case s: SortExec => s }.size == sorts,
+          s"expected $sorts sort(s), $shown")
+      }
+      // two delta epochs on every bucket
+      val t = graft.lake.LakeTable.create(spark, s"$dir/t",
+        graft.model.Schemas.transcript, numBuckets = 4)
+      CdcMerge.apply(t, events(0, 3000), 0L)
+      CdcMerge.apply(t, events(3000, 6000), 1L)
+      assertShape("two delta epochs", writePlanOf(
+        assert(graft.merge.Compactor.compact(t, (0 until 4).toSet).isDefined)), sorts = 1)
+      // pre-split bases: bucket 0's base at depth 2 also covers bucket 2
+      val r = graft.lake.LakeTable.create(spark, s"$dir/r",
+        graft.model.Schemas.transcript, numBuckets = 2)
+      CdcMerge.apply(r, events(0, 3000), 0L)
+      graft.merge.Compactor.compact(r, Set(0, 1))
+      r.rebucket(2)
+      CdcMerge.apply(r, events(3000, 6000), 1L)
+      assertShape("REBUCKET with pre-split bases", writePlanOf(
+        assert(graft.merge.Compactor.compact(r, Set(0)).isDefined)), sorts = 1)
+      // a ZORDER layout keeps its own sort, after the same exchange
+      val zplan = writePlanOf(assert(graft.merge.Compactor.zorder(t, Seq("ts")).isDefined))
+      assert(exchangesIn(zplan) == 1, s"ZORDER:\n${zplan.treeString.take(4000)}")
     } finally rmrf(dir)
   }
 

@@ -59,6 +59,48 @@ class DataSkippingSpec extends graft.SparkSpec {
     } finally rmrf(dir)
   }
 
+  test("footer harvest: adopted stats equal a default-options footer read of every file") {
+    val dir = tmpDir("skip-footer")
+    try {
+      val t = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets = 2)
+      def batch(op: String, lsn: Long, n: Int, extra: Seq[org.apache.spark.sql.Column] = Nil) =
+        spark.range(n).select(Seq(lit(op).as("op"), (col("id") + lsn).as("lsn"),
+          concat(lit("c"), pmod(col("id"), lit(13))).as("conv_id"),
+          col("id").cast("int").as("turn_idx"), lit("user").as("role"),
+          when(col("id") % 7 === 0, lit(null)).otherwise(concat(lit("t"), col("id"))).as("text"),
+          lit(null).cast("string").as("tool"),
+          timestamp_seconds(lit(1709251200L) + col("id") * 60).as("ts")) ++ extra: _*)
+      CdcMerge.apply(t, batch("U", 0L, 300), 0L)
+      // a schema-evolving batch: a new column, written under schema id 1
+      CdcMerge.apply(t, batch("U", 1000L, 200, Seq((col("id") / 7.0).as("score"))), 1L)
+      // deletes only: every file of this epoch holds tombstones alone
+      CdcMerge.apply(t, batch("D", 2000L, 40), 2L)
+      val m = t.manifest
+      val tombstoneOnly = m.files.filter(f => f.epoch == 2L &&
+        f.colStats.flatMap(_.get(Schemas.DELETED_COL)).exists(s => s.min.contains("true")))
+      assert(tombstoneOnly.nonEmpty, "no tombstone-only file staged")
+      assert(m.files.exists(_.schemaId == 1), "no file under the evolved schema")
+      Compactor.compact(t, Set(0)).getOrElse(fail("compaction did not commit"))
+      val files = (m.files ++ t.manifest.files).distinctBy(_.path)
+      assert(files.exists(_.kind == FileEntry.BASE) && files.exists(_.kind == FileEntry.DELTA))
+      files.foreach { f =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(t.root.resolve(f.path).toUri),
+          new org.apache.hadoop.conf.Configuration())
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val oracle = try {
+          val written = Schemas.physical(StructType.fromDDL(
+            t.manifest.schemas.find(_.id == f.schemaId).get.ddl))
+          CdcMerge.FooterStats(reader.getFooter,
+            StructType(written.fields.filterNot(_.name == Schemas.LSN_COL)))
+        } finally reader.close()
+        assert(CdcMerge.FooterStats(f.rows, f.maxLsn, f.minKey, f.maxKey, f.colStats) == oracle,
+          s"${f.path}: adopted stats differ from the default footer read")
+        assert(f.colStats.exists(_.get("ts").exists(_.min.isDefined)), s"${f.path}: no ts bounds")
+      }
+    } finally rmrf(dir)
+  }
+
   test("snapshotWhere == snapshot().filter across predicate shapes") {
     val dir = tmpDir("skip-eq")
     try {
