@@ -38,7 +38,7 @@ object RelationalQueries {
       java.nio.file.Files.createTempDirectory(shm, prefix)
     else java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      graft.merge.CdcMerge.deleteRecursively(p)))
+      graft.lake.LakeCore.deleteRecursively(p)))
     p.toString
   }
 

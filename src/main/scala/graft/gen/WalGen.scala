@@ -131,7 +131,7 @@ object WalGen {
       Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
       // clean the tmp dir (crc/_SUCCESS leftovers); close the walk stream —
       // this runs once per generated chunk and each leaks an fd otherwise
-      graft.merge.CdcMerge.deleteRecursively(tmp)
+      graft.lake.LakeCore.deleteRecursively(tmp)
       target
     }}
     val written = Await.result(Future.sequence(futures), Duration.Inf)

@@ -1,7 +1,8 @@
 package graft.lake
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructField, StructType}
@@ -12,9 +13,17 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructFie
   * signature store cannot live as a checkpointed DataFrame view, and a
   * per-refresh carry-rewrite is O(corpus) I/O).
   *
-  * LSM-shaped lifecycle on top of the repo's manifest machinery
-  * ([[Manifest]]: content-addressed split segments, atomic `_current`
-  * pointer, CAS commits):
+  * The manifest mechanics are [[LakeCore]]'s, the same ones a
+  * [[LakeTable]] runs on: the CAS commit and its memo (inline manifests,
+  * [[Manifest.writeInline]]: one doc beats per-pid segments at store pid
+  * counts), staged writes under `_staging/` with the sweep of crashed
+  * attempts, footer-read adoption, and the reclaim of unreferenced data
+  * files and old manifests. What this class owns is the store's meaning:
+  * the `_sver`/`_deleted` row versioning and its resolve, the pid layout
+  * and its lazy split policy, [[replaceAll]], and [[pidsOf]]. Coverage of
+  * a file written at an older pid depth is [[Manifest.covers]].
+  *
+  * LSM-shaped lifecycle:
   *
   *  - **append** writes a change batch (upserts + `_deleted` tombstones)
   *    as DELTA files — O(batch) rows, NO carry-rewrite of old state;
@@ -27,10 +36,10 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructFie
   *  - **compact** folds the delta tail into per-pid base files — only
   *    pids the deltas touch are rewritten (O(touched)), tombstones are
   *    dropped, and when partitions outgrow `maxRowsPerPid` the partition
-  *    space SPLITS (numPids doubles, full rewrite, amortized like any
-  *    LSM level promotion) so per-partition read cost stays bounded as
-  *    the store grows — that is what keeps a constant-size refresh FLAT
-  *    while the corpus grows 10×.
+  *    space SPLITS (numPids doubles, lazily: see [[compact]]; amortized
+  *    like any LSM level promotion) so per-partition read cost stays
+  *    bounded as the store grows — that is what keeps a constant-size
+  *    refresh FLAT while the corpus grows 10×.
   *
   * The manifest's `lastSourceEpoch` field carries the WATERMARK: the
   * source-table version this store reflects. append() commits rows and
@@ -46,28 +55,12 @@ final class BucketStore private (val root: Path, spark: SparkSession,
                                  val partCols: Seq[String], val keyCols: Seq[String]) {
   import BucketStore._
 
-  private def manifestDir: Path = root.resolve("_manifests")
-  private def dataDir: Path = root.resolve("data")
-  private def currentPtr: Path = root.resolve("_current")
+  private[graft] val core = new LakeCore(root, spark, Manifest.writeInline)
 
-  def currentVersion: Long = new String(Files.readAllBytes(currentPtr)).trim.toLong
+  def currentVersion: Long = core.currentVersion
 
-  // Per-version memo: one refresh touches the manifest several times
-  // (pidsOf, pruned read, append's read-check) and manifests are
-  // immutable per version — re-parsing per call would put O(files)
-  // driver JSON work on every probe. Invalidated by the version moving
-  // (another process's commit included).
-  @volatile private var manifestMemo: (Long, Manifest) = null
-  def manifest: Manifest = {
-    val v = currentVersion
-    val memo = manifestMemo
-    if (memo != null && memo._1 == v) memo._2
-    else {
-      val m = Manifest.readSplit(manifestDir, v)
-      manifestMemo = (v, m)
-      m
-    }
-  }
+  /** The current manifest, parsed once per version (see [[LakeCore]]). */
+  def manifest: Manifest = core.manifest
   def numPids: Int = manifest.numBuckets
 
   /** Source-table version the committed store reflects (-1 = fresh). */
@@ -103,7 +96,7 @@ final class BucketStore private (val root: Path, spark: SparkSession,
     * nondeterministically, so refuse upstream (see
     * IncrementalDedup.requireUniqueKeys).
     */
-  def append(batch: DataFrame, watermark: Long): Unit = pathLock(root).synchronized {
+  def append(batch: DataFrame, watermark: Long): Unit = core.lock.synchronized {
     val m = manifest
     val ver = m.version + 1
     // tombstones must carry the SAME partCols values as the rows they
@@ -114,7 +107,7 @@ final class BucketStore private (val root: Path, spark: SparkSession,
     val cols = userSchema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq :+
       del.as(DELETED_COL) :+
       lit(ver).as(VER_COL)
-    val staging = root.resolve("_staging-" + java.util.UUID.randomUUID().toString.take(8))
+    val staging = core.stagingFor("append")
     // bound the file count per append: a change batch arriving with the
     // session's full shuffle parallelism would otherwise write ~32 tiny
     // delta files per refresh, and every probe pays the listing — the
@@ -122,22 +115,20 @@ final class BucketStore private (val root: Path, spark: SparkSession,
     // row count. A handful of writers is plenty for O(batch) rows.
     val writers = math.max(1, spark.sparkContext.defaultParallelism / 8)
     batch.select(cols: _*).coalesce(writers).write.parquet(staging.toString)
-    val adopted = adoptDir(staging, pid = -1, kind = FileEntry.DELTA, ver = ver)
-    commit(m.copy(version = ver, lastEpoch = ver, files = m.files ++ adopted,
+    val adopted = core.adopt(staging) { (p, footer) =>
+      FileEntry(s"data/delta/${FileEntry.DELTA}-v$ver-${p.getFileName}", -1, rowCount(footer),
+        ver, 0, FileEntry.DELTA, ver)
+    }
+    core.commit(m.copy(version = ver, lastEpoch = ver, files = m.files ++ adopted,
       lastSourceEpoch = watermark), expectedParent = m.version)
   }
 
-  /** Partition-space size a BASE file was written under (≤ current, a
-    * power-of-two divisor of it). A file at depth P covers current pids
-    * {bucket + j·P}: extendible-hash doubling keeps carried files valid.
+  /** Does base file `f` hold rows of any `touched` current-depth pid? A
+    * file written at depth P covers pids {bucket + j·P}: extendible-hash
+    * doubling keeps carried files valid.
     */
-  private def filePids(f: FileEntry, cur: Int): Int = f.writePids.getOrElse(cur)
-
-  /** Does this base file cover any of the `touched` current-depth pids? */
-  private def covers(f: FileEntry, touched: Set[Int], cur: Int): Boolean = {
-    val fp = filePids(f, cur)
-    touched.exists(q => q % fp == f.bucket)
-  }
+  private def covers(m: Manifest, f: FileEntry, touched: Set[Int]): Boolean =
+    touched.exists(m.covers(f, _))
 
   /** Read the resolved live rows — all partitions, or only `touched` pids
     * (delta files are always read: they are unpartitioned by design, and
@@ -148,11 +139,9 @@ final class BucketStore private (val root: Path, spark: SparkSession,
   def read(touched: Option[Set[Int]] = None): DataFrame = {
     val m = manifest
     val files = m.files.filter(f =>
-      f.kind == FileEntry.DELTA || touched.forall(t => covers(f, t, m.numBuckets)))
+      f.kind == FileEntry.DELTA || touched.forall(covers(m, f, _)))
     val userCols = userSchema.fieldNames.map(col).toSeq
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        userSchema)
+    if (files.isEmpty) return LakeTable.localFrame(spark, userSchema)
     val raw = spark.read.schema(physSchema)
       .parquet(files.map(f => root.resolve(f.path).toString): _*)
     if (files.forall(_.kind == FileEntry.BASE)) raw.select(userCols: _*)
@@ -186,7 +175,7 @@ final class BucketStore private (val root: Path, spark: SparkSession,
     * row is in the rewrite set with its tombstone). Returns the number
     * of (old-depth) partitions rewritten.
     */
-  def compact(maxRowsPerPid: Long = 1L << 19): Int = pathLock(root).synchronized {
+  def compact(maxRowsPerPid: Long = 1L << 19): Int = core.lock.synchronized {
     val m = manifest
     val cur = m.numBuckets
     val deltas = m.files.filter(_.kind == FileEntry.DELTA)
@@ -223,7 +212,7 @@ final class BucketStore private (val root: Path, spark: SparkSession,
       if (oversized.isEmpty) Nil
       else {
         val hotFiles = m.files.filter(f =>
-          f.kind == FileEntry.DELTA || covers(f, oversized, cur))
+          f.kind == FileEntry.DELTA || covers(m, f, oversized))
         spark.read.schema(physSchema)
           .parquet(hotFiles.map(f => root.resolve(f.path).toString): _*)
           .groupBy(pidExpr(cur).as("__pid"))
@@ -245,7 +234,7 @@ final class BucketStore private (val root: Path, spark: SparkSession,
     val touchedOld = deltaPerPid.keySet ++
       (if (splitting && oversized.nonEmpty) realOversized.map(_._1).toSet else Set.empty)
     val (inputFiles, carried0) = m.files.partition(f =>
-      f.kind == FileEntry.DELTA || covers(f, touchedOld, cur))
+      f.kind == FileEntry.DELTA || covers(m, f, touchedOld))
     // STAMP carried legacy entries (writePids=None == "current depth")
     // with the depth that is true NOW: after a split changes numBuckets,
     // an unstamped file would be misread at the NEW depth — pruned reads
@@ -261,12 +250,12 @@ final class BucketStore private (val root: Path, spark: SparkSession,
     val resolved = resolve(input) // tombstones dropped
       .withColumn(VER_COL, lit(ver)) // rebased: one generation per base file set
       .withColumn("__pid", pidExpr(nPids))
-    val staging = root.resolve("_staging-" + java.util.UUID.randomUUID().toString.take(8))
+    val staging = core.stagingFor("compact")
     val writers = math.max(1, math.min(64, touchedOld.size * (nPids / cur)))
     resolved.repartition(writers, col("__pid"))
       .write.partitionBy("__pid").parquet(staging.toString)
-    val adopted = adoptPartitioned(staging, ver, nPids)
-    commit(m.copy(version = ver, lastEpoch = ver, numBuckets = nPids,
+    val adopted = adoptBases(staging, ver, nPids)
+    core.commit(m.copy(version = ver, lastEpoch = ver, numBuckets = nPids,
       files = carried ++ adopted), expectedParent = m.version)
     // observability: a partition still over the bound after the fold holds
     // an indivisible hot partCols value — probes touching it pay
@@ -289,7 +278,7 @@ final class BucketStore private (val root: Path, spark: SparkSession,
     * Caller contract: one row per resolve key.
     */
   def replaceAll(rows: DataFrame, watermark: Long,
-                 maxRowsPerPid: Long = 1L << 19): Unit = pathLock(root).synchronized {
+                 maxRowsPerPid: Long = 1L << 19): Unit = core.lock.synchronized {
     val m = manifest
     val est = rows.count()
     val nPids = math.max(m.numBuckets,
@@ -300,11 +289,11 @@ final class BucketStore private (val root: Path, spark: SparkSession,
       .withColumn(DELETED_COL, lit(false))
       .withColumn(VER_COL, lit(ver))
       .withColumn("__pid", pidExpr(nPids))
-    val staging = root.resolve("_staging-" + java.util.UUID.randomUUID().toString.take(8))
+    val staging = core.stagingFor("replace")
     out.repartition(math.max(1, math.min(64, nPids)), col("__pid"))
       .write.partitionBy("__pid").parquet(staging.toString)
-    val adopted = adoptPartitioned(staging, ver, nPids)
-    commit(m.copy(version = ver, lastEpoch = ver, numBuckets = nPids,
+    val adopted = adoptBases(staging, ver, nPids)
+    core.commit(m.copy(version = ver, lastEpoch = ver, numBuckets = nPids,
       files = adopted, lastSourceEpoch = watermark), expectedParent = m.version)
   }
 
@@ -315,122 +304,35 @@ final class BucketStore private (val root: Path, spark: SparkSession,
     * manifest).
     */
   def vacuum(keepVersions: Int = 2, graceMs: Long = 300000L): Int =
-    pathLock(root).synchronized {
+    core.lock.synchronized {
       val cur = currentVersion
-      val keep = (math.max(0L, cur - keepVersions + 1) to cur)
-        .flatMap(v => scala.util.Try(Manifest.readSplit(manifestDir, v)).toOption)
-        .flatMap(_.files.map(_.path)).toSet
-      if (!Files.exists(dataDir)) return 0
-      val adoptedAfter = System.currentTimeMillis() - graceMs
-      var removed = 0
-      val walk = Files.walk(dataDir)
-      try walk.iterator().asScala
-        .filter(Files.isRegularFile(_))
-        .foreach { p =>
-          val rel = root.relativize(p).toString
-          if (!keep.contains(rel) &&
-              Files.getLastModifiedTime(p).toMillis < adoptedAfter) {
-            Files.delete(p); removed += 1
-          }
-        }
-      finally walk.close()
-      // manifest horizon
-      val manifestRe = "manifest-(\\d{10})\\.json".r
       val horizon = math.max(0L, cur - keepVersions + 1)
-      val names = { val s = Files.list(manifestDir); try s.iterator().asScala.toSeq finally s.close() }
-      val keptVersions = scala.collection.mutable.ArrayBuffer.empty[Long]
-      names.foreach(p => p.getFileName.toString match {
-        case manifestRe(v) =>
-          if (v.toLong < horizon) Files.delete(p) else keptVersions += v.toLong
-        case _ =>
-      })
-      val referenced = keptVersions
-        .flatMap(v => scala.util.Try(Manifest.readDoc(manifestDir, v)).toOption)
-        .flatMap(_.segments.map(_.seg)).toSet
-      names.filter(p => Files.exists(p)).foreach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("seg-") && !referenced.contains(n)) Files.delete(p)
-      }
+      val removed = core.reclaimData(core.filesOf(horizon, cur).map(_.path).toSet, graceMs)
+      core.dropManifestsBefore(horizon)
       removed
     }
 
   // ---- internals ---------------------------------------------------
 
-  private def commit(m2: Manifest, expectedParent: Long): Unit = {
-    require(currentVersion == expectedParent,
-      s"concurrent store commit: current=$currentVersion expected=$expectedParent")
-    // inline manifests: at store pid counts (hundreds-thousands), one doc
-    // beats per-bucket segments by orders of magnitude on both commit and
-    // load (see Manifest.writeInline)
-    Manifest.writeInline(manifestDir, m2)
-    Manifest.writeAtomic(currentPtr, m2.version.toString)
-    manifestMemo = (m2.version, m2)
-  }
+  private def rowCount(footer: ParquetMetadata): Long =
+    footer.getBlocks.asScala.map(_.getRowCount).sum
 
-  /** One footer reader per adoption (see [[FooterReader]]). */
-  private def footerReader = new FooterReader(spark.sessionState.newHadoopConf())
-
-  private def rowCount(footers: FooterReader, p: Path): Long =
-    footers.footer(p).getBlocks.asScala.map(_.getRowCount).sum
-
-  /** Adopt a flat staging dir's parquet files as `kind` entries at `pid`. */
-  private def adoptDir(staging: Path, pid: Int, kind: String, ver: Long): Seq[FileEntry] = {
-    val files = listParquet(staging)
-    val sub = if (pid < 0) "delta" else s"pid=$pid"
-    val dir = dataDir.resolve(sub)
-    Files.createDirectories(dir)
-    val footers = footerReader
-    val out = files.map { p =>
-      val rows = rowCount(footers, p)
-      val name = s"$kind-v$ver-${p.getFileName.toString}"
-      Files.move(p, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-      FileEntry(s"data/$sub/$name", pid, rows, ver, 0, kind, ver)
-    }
-    deleteRecursively(staging)
-    out
-  }
-
-  /** Adopt a `partitionBy("__pid")` staging layout: one base entry per
-    * written file, pid parsed from its partition directory, write depth
-    * recorded for lazy-split coverage.
+  /** Adopt a `partitionBy("__pid")` staged write: one base entry per
+    * file, pid from its partition directory, write depth recorded for
+    * lazy-split coverage.
     */
-  private def adoptPartitioned(staging: Path, ver: Long, nPids: Int): Seq[FileEntry] = {
-    val pidRe = "__pid=(\\d+)".r
-    val footers = footerReader
-    val out = listParquet(staging).flatMap { p =>
-        p.getParent.getFileName.toString match {
-          case pidRe(pid) =>
-            val dir = dataDir.resolve(s"pid=$pid")
-            Files.createDirectories(dir)
-            val rows = rowCount(footers, p)
-            val name = s"${FileEntry.BASE}-v$ver-${p.getFileName.toString}"
-            Files.move(p, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-            Some(FileEntry(s"data/pid=$pid/$name", pid.toInt, rows, ver, 0,
-              FileEntry.BASE, ver, writePids = Some(nPids)))
-          case _ => None
-        }
-      }
-    deleteRecursively(staging)
-    out
-  }
-
-  private def listParquet(dir: Path): Seq[Path] = {
-    val s = Files.walk(dir)
-    try s.iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet")).toSeq
-    finally s.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    graft.merge.CdcMerge.deleteRecursively(p)
+  private def adoptBases(staging: Path, ver: Long, nPids: Int): Seq[FileEntry] =
+    core.adopt(staging) { (p, footer) =>
+      val pid = LakeCore.partitionOf(p, "__pid")
+      FileEntry(s"data/pid=$pid/${FileEntry.BASE}-v$ver-${p.getFileName}", pid, rowCount(footer),
+        ver, 0, FileEntry.BASE, ver, writePids = Some(nPids))
+    }
 }
 
 object BucketStore {
   /** Internal bookkeeping columns in every store data file. */
   val DELETED_COL = "_deleted"
   val VER_COL = "_sver"
-
-  private[lake] def pathLock(root: Path): Object = LakeTable.pathLock(root)
 
   private final case class StoreConfig(partCols: List[String], keyCols: List[String])
   private implicit val fmts: org.json4s.Formats =
@@ -457,14 +359,11 @@ object BucketStore {
     require(partCols.forall(keyCols.contains),
       s"partCols (${partCols.mkString(",")}) must be a subset of keyCols " +
       s"(${keyCols.mkString(",")}) so tombstones route to their target's partition")
-    Files.createDirectories(root.resolve("_manifests"))
-    Files.createDirectories(root.resolve("data"))
     Manifest.writeAtomic(root.resolve("_store.json"),
       org.json4s.jackson.Serialization.write(StoreConfig(partCols.toList, keyCols.toList)))
-    val m = Manifest.empty(numPids, schema.toDDL)
-    Manifest.writeInline(root.resolve("_manifests"), m)
-    Manifest.writeAtomic(root.resolve("_current"), "0")
-    new BucketStore(root, spark, partCols, keyCols)
+    val s = new BucketStore(root, spark, partCols, keyCols)
+    s.core.create(Manifest.empty(numPids, schema.toDDL))
+    s
   }
 
   def load(spark: SparkSession, dir: String): BucketStore = {

@@ -1,6 +1,6 @@
 package graft.lake
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -39,37 +39,20 @@ import graft.model.Schemas
 final class LakeTable private (val root: Path, spark: SparkSession) {
   import LakeTable._
 
-  def manifestDir: Path = root.resolve("_manifests")
-  def dataDir: Path = root.resolve("data")
-  private def currentPtr: Path = root.resolve("_current")
+  /** Commit, memo, staging, adoption and reclaim; split manifests. */
+  private[graft] val core = new LakeCore(root, spark, Manifest.writeSplit)
 
-  def currentVersion: Long = {
-    val s = new String(Files.readAllBytes(currentPtr)).trim
-    s.toLong
-  }
+  def manifestDir: Path = core.manifestDir
+
+  def currentVersion: Long = core.currentVersion
 
   /** The session this table reads and writes through. */
   def sparkSession: SparkSession = spark
 
-  // One-entry memo of the current manifest: a lookup, scan or commit
-  // loads the manifest, and re-parsing an unchanged version costs ~7 ms
-  // of JSON work. `_current` is still read on every call, so a commit
-  // through any other instance (or process) is seen at once.
-  @volatile private var manifestMemo: (Long, Manifest) = null
+  /** The current manifest, parsed once per version (see [[LakeCore]]). */
+  def manifest: Manifest = core.manifest
 
-  def manifest: Manifest = {
-    val v = currentVersion
-    val memo = manifestMemo
-    if (memo != null && memo._1 == v) memo._2
-    else {
-      val m = manifestAt(v)
-      manifestMemo = (v, m)
-      m
-    }
-  }
-
-  def manifestAt(version: Long): Manifest =
-    Manifest.readSplit(manifestDir, version)
+  def manifestAt(version: Long): Manifest = core.manifestAt(version)
 
   def userSchema: StructType = userSchema(manifest)
   def userSchema(m: Manifest): StructType =
@@ -81,15 +64,6 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
   def bucketExpr(numBuckets: Int) =
     pmod(xxhash64(col("conv_id")), lit(numBuckets.toLong)).cast(IntegerType)
 
-  /** Physical snapshot (includes `_lsn`/`_deleted` bookkeeping and
-    * tombstones) for the given buckets (None = all). Files written under
-    * older schemas are aligned to the current schema: missing columns →
-    * null, widened types → cast.
-    *
-    * Merge-on-read: when delta files are present, the per-key max-LSN row
-    * wins across base+deltas (one window; ties carry identical payloads by
-    * construction — duplicate deliveries of the same (key, lsn)).
-    */
   /** Read `files` under manifest `m`, aligned to `target` (schema-evolution
     * groups cast/padded to the current physical schema).
     */
@@ -174,6 +148,15 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     parts.reduce(_ unionByName _)
   }
 
+  /** Physical snapshot (includes `_lsn`/`_deleted` bookkeeping and
+    * tombstones) for the given buckets (None = all). Files written under
+    * older schemas are aligned to the current schema: missing columns →
+    * null, widened types → cast.
+    *
+    * Merge-on-read: when delta files are present, the per-key max-LSN row
+    * wins across base+deltas (one window; ties carry identical payloads by
+    * construction — duplicate deliveries of the same (key, lsn)).
+    */
   def snapshotPhysical(buckets: Option[Set[Int]] = None): DataFrame =
     snapshotPhysical(manifest, buckets)
 
@@ -307,7 +290,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     * past the metadata-vacuum horizon or any of its data files were
     * vacuumed.
     */
-  def restoreTo(version: Long): Long = LakeTable.pathLock(root).synchronized {
+  def restoreTo(version: Long): Long = core.lock.synchronized {
     val cur = currentVersion
     require(version >= 1 && version < cur,
       s"RESTORE: version $version is not an earlier version of this table (current=$cur)")
@@ -350,7 +333,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     * (`readAligned`). Returns the new schema id (current id if `target`
     * is already the current schema).
     */
-  def evolveSchema(target: StructType): Int = LakeTable.pathLock(root).synchronized {
+  def evolveSchema(target: StructType): Int = core.lock.synchronized {
     val m = manifest
     val current = userSchema(m)
     val rec = SchemaReconciler.reconcile(current, target) match {
@@ -392,7 +375,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     * Reference-scale analogue: owid-etl re-shards nothing (pandas,
     * single node); this is the knob its architecture lacks.
     */
-  def rebucket(factor: Int): Int = LakeTable.pathLock(root).synchronized {
+  def rebucket(factor: Int): Int = core.lock.synchronized {
     require(factor >= 2, s"REBUCKET factor must be >= 2, got $factor")
     var attempt = 0
     while (true) {
@@ -411,7 +394,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
           op = "rebucket")).takeRight(1000))
       try { commit(m2, m.version); return target }
       catch {
-        case _: IllegalArgumentException if attempt < 10 => attempt += 1 // CAS lost
+        case _: CommitConflict if attempt < 10 => attempt += 1
       }
     }
     throw new IllegalStateException("unreachable")
@@ -561,8 +544,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
         commit(m2, cur.version)
         return annotated
       } catch {
-        case e: IllegalArgumentException if attempt < 8 => attempt += 1
-        case e: IllegalStateException if attempt < 8 => attempt += 1
+        case _: CommitConflict if attempt < 8 => attempt += 1
       }
     }
     0 // unreachable
@@ -606,31 +588,35 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     if (r.isNullAt(0)) 0L else r.getDecimal(0).toBigInteger.longValue()
   }
 
-  /** Atomically commit a new manifest. Single-writer CAS: fails if the
-    * current version moved under us. The monitor is PER TABLE PATH, not
-    * per LakeTable instance — two instances over the same root (e.g. a
-    * streaming writer and a SQL MERGE command, or the async compactor)
-    * must serialize their read-check-write sections or both could pass
-    * the CAS check and the second would silently drop the first's files.
+  /** Atomically commit a new manifest as the child of `expectedParent`.
+    * Optimistic CAS under the table path's monitor (not the instance's):
+    * throws [[CommitConflict]] if the current version moved (see
+    * [[LakeCore.commit]]).
     */
   def commit(newManifest: Manifest, expectedParent: Long): Unit =
-    LakeTable.pathLock(root).synchronized {
-    val cur = currentVersion
-    require(cur == expectedParent,
-      s"concurrent commit: current=$cur expected=$expectedParent")
-    require(newManifest.version == expectedParent + 1)
-    Manifest.writeSplit(manifestDir, newManifest)
-    Manifest.writeAtomic(currentPtr, newManifest.version.toString)
-  }
+    core.commit(newManifest, expectedParent)
 
-  /** Move a staged file into the data dir; returns the table-relative path. */
-  def adoptStagedFile(staged: Path, bucket: Int, epoch: Long,
-                      kind: String = FileEntry.BASE): String = {
-    val dir = dataDir.resolve(s"bucket=$bucket")
-    Files.createDirectories(dir)
-    val name = s"$kind-e$epoch-${staged.getFileName.toString}"
-    Files.move(staged, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-    s"data/bucket=$bucket/$name"
+  /** Adopt a `partitionBy("bucket")` staged write as `kind` files of
+    * `epoch`: per-file stats come straight from the parquet FOOTERS (row
+    * counts, the `_lsn` max, the `conv_id` range, and [[StatsHarvest]]
+    * data-skipping bounds for the user columns of `statsSchema` plus
+    * `_deleted`, so a pushed `!_deleted` filter skips all-tombstone base
+    * files) — a driver-side metadata read, not a Spark job. `statsSchema`
+    * is the physical schema the files were written under (passed
+    * explicitly: on a schema-evolving write its id is not committed yet).
+    * Files land at `data/bucket=<b>/<kind>-e<epoch>-<name>`.
+    */
+  private[graft] def adoptStaged(staging: Path, epoch: Long, schemaId: Int, kind: String,
+                                 statsSchema: StructType): Seq[FileEntry] = {
+    // `_lsn` stays out of colStats: its watermark has its own field (maxLsn)
+    val userStats = StructType(statsSchema.fields.filterNot(_.name == Schemas.LSN_COL))
+    core.adopt(staging) { (p, footer) =>
+      val bucket = LakeCore.partitionOf(p, "bucket")
+      val s = FooterStats(footer, userStats)
+      FileEntry(s"data/bucket=$bucket/$kind-e$epoch-${p.getFileName}", bucket, s.rows,
+        s.maxLsn, schemaId, kind, epoch, s.minKey, s.maxKey, colStats = s.colStats,
+        bytes = Some(Files.size(p)))
+    }
   }
 
   // ---- consumer reference pins -------------------------------------
@@ -651,7 +637,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     * version does not resolve to a retained manifest — a pin on an already
     * vacuumed version would be an unsatisfiable promise.
     */
-  def pin(name: String, version: Long): Unit = LakeTable.pathLock(root).synchronized {
+  def pin(name: String, version: Long): Unit = core.lock.synchronized {
     require(name.nonEmpty && !name.contains('/') && !name.contains('.'),
       s"pin name must be a simple identifier (got '$name')")
     require(scala.util.Try(manifestAt(version)).isSuccess,
@@ -661,7 +647,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
   }
 
   /** Release a consumer pin; idempotent. */
-  def unpin(name: String): Unit = LakeTable.pathLock(root).synchronized {
+  def unpin(name: String): Unit = core.lock.synchronized {
     Files.deleteIfExists(refsDir.resolve(name))
   }
 
@@ -701,35 +687,26 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     */
   def vacuum(keepVersions: Int = 2, changelogRetentionVersions: Int = 0,
              graceMs: Long = 300000L): Int =
-    // Same monitor as commit: adoptStaged moves files into data/ BEFORE the
-    // manifest referencing them exists, so an unsynchronized vacuum would
-    // see an in-flight commit's files as unreferenced and delete them. The
-    // lock serializes against commit()'s read-check-write; the mtime grace
-    // window (Delta-style retention) additionally protects files adopted by
-    // a commit still building its manifest OUTSIDE the lock — pass
-    // graceMs = 0 only when no writer can be in flight (tests, offline GC).
-    LakeTable.pathLock(root).synchronized {
+    // Same monitor as commit, held while the keep set is built: a commit
+    // landing in between would add files the set does not name (their
+    // mtime grace protects them too; see LakeCore.reclaimData).
+    core.lock.synchronized {
     val cur = currentVersion
-    val adoptedAfter = System.currentTimeMillis() - graceMs
-    def filesOf(vers: Range.Inclusive): Seq[FileEntry] = vers
-      .flatMap(v => scala.util.Try(manifestAt(v.toLong)).toOption)
-      .flatMap(_.files)
     // base+delta files of the last keepVersions manifests, PLUS — delta
     // files only — those of the wider changelog retention window (base
     // generations superseded within it are still reclaimed)
-    val keepAll = filesOf(math.max(0L, cur - keepVersions + 1).toInt to cur.toInt)
-      .map(_.path)
+    val keepAll = core.filesOf(cur - keepVersions + 1, cur).map(_.path)
     val keepDeltas =
       if (changelogRetentionVersions <= keepVersions) Nil
-      else filesOf(math.max(0L, cur - changelogRetentionVersions + 1).toInt to cur.toInt)
+      else core.filesOf(cur - changelogRetentionVersions + 1, cur)
         .filter(_.kind == FileEntry.DELTA).map(_.path)
     // pinned consumers: the pinned snapshot's full file set, plus every
     // later delta (their unread changelog suffix). STRICT manifest reads:
     // the numeric-retention filesOf above tolerates metadata-vacuumed
-    // manifests (Try), but a pin is a loud-failure promise — silently
-    // skipping an unreadable pinned manifest would delete the very
-    // snapshot the pin protects. (vacuumMetadata's horizon never passes a
-    // pin, so every manifest in [pin, cur] is supposed to be readable.)
+    // manifests, but a pin is a loud-failure promise — silently skipping
+    // an unreadable pinned manifest would delete the very snapshot the
+    // pin protects. (vacuumMetadata's horizon never passes a pin, so
+    // every manifest in [pin, cur] is supposed to be readable.)
     val keepPinned = pins.toSeq.flatMap { case (name, v) =>
       def strictFiles(vers: Range.Inclusive): Seq[FileEntry] = vers.flatMap { vv =>
         try manifestAt(vv.toLong).files
@@ -741,19 +718,7 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
         strictFiles(math.min(v + 1, cur).toInt to cur.toInt)
           .filter(_.kind == FileEntry.DELTA).map(_.path)
     }
-    val keep = (keepAll ++ keepDeltas ++ keepPinned).toSet
-    if (!Files.exists(dataDir)) return 0
-    var removed = 0
-    val walk = Files.walk(dataDir)
-    try walk.iterator().asScala
-      .filter(p => Files.isRegularFile(p))
-      .foreach { p =>
-        val rel = root.relativize(p).toString
-        val recent = Files.getLastModifiedTime(p).toMillis >= adoptedAfter
-        if (!keep.contains(rel) && !recent) { Files.delete(p); removed += 1 }
-      }
-    finally walk.close()
-    removed
+    core.reclaimData((keepAll ++ keepDeltas ++ keepPinned).toSet, graceMs)
   }
 
   /** Metadata vacuum: bound the time-travel horizon to the last
@@ -764,42 +729,13 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     * removed. Complements [[vacuum]] (data files) — together they bound
     * total table footprint to the retention window.
     */
-  def vacuumMetadata(keepVersions: Int = 8): (Int, Int) =
-    // same monitor as commit: a commit writes its segments BEFORE the top
-    // doc exists, so an unsynchronized GC pass would see them unreferenced
-    // and delete files the about-to-land manifest points at
-    LakeTable.pathLock(root).synchronized {
-      def listNames(): Seq[Path] = {
-        val s = Files.list(manifestDir)
-        try s.iterator().asScala.toSeq finally s.close()
-      }
-      val cur = currentVersion
-      // the horizon never passes a pinned version: the pin is a promise
-      // that snapshotAt(pinned) and changesBetween(pinned, cur) stay
-      // readable until released
-      val horizon = (math.max(0L, cur - keepVersions + 1) +: pins.values.toSeq).min
-      val manifestRe = "manifest-(\\d{10})\\.json".r
-      var removedManifests = 0
-      val keptVersions = scala.collection.mutable.ArrayBuffer.empty[Long]
-      listNames().foreach { p =>
-        p.getFileName.toString match {
-          case manifestRe(v) =>
-            if (v.toLong < horizon) { Files.delete(p); removedManifests += 1 }
-            else keptVersions += v.toLong
-          case _ =>
-        }
-      }
-      val referenced = keptVersions.flatMap(v =>
-        Manifest.readDoc(manifestDir, v).segments.map(_.seg)).toSet
-      var removedSegs = 0
-      listNames().foreach { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("seg-") && !referenced.contains(name)) {
-          Files.delete(p); removedSegs += 1
-        }
-      }
-      (removedManifests, removedSegs)
-    }
+  def vacuumMetadata(keepVersions: Int = 8): (Int, Int) = core.lock.synchronized {
+    // the horizon never passes a pinned version: the pin is a promise
+    // that snapshotAt(pinned) and changesBetween(pinned, cur) stay
+    // readable until released
+    val cur = currentVersion
+    core.dropManifestsBefore((math.max(0L, cur - keepVersions + 1) +: pins.values.toSeq).min)
+  }
 }
 
 object LakeTable {
@@ -845,14 +781,6 @@ object LakeTable {
         org.apache.spark.unsafe.types.UTF8String.fromString(convId),
         org.apache.spark.sql.types.StringType)), 42L)
       .eval(null).asInstanceOf[Long]
-
-  /** One JVM-wide monitor per canonical table root — commit and metadata
-    * vacuum serialize on it regardless of how many LakeTable instances
-    * point at the same directory.
-    */
-  private val locks = scala.collection.concurrent.TrieMap.empty[String, Object]
-  private[lake] def pathLock(root: Path): Object =
-    locks.getOrElseUpdate(root.toAbsolutePath.normalize.toString, new Object)
 
   /** A DataFrame over rows held on the driver: a local relation, so
     * collecting it runs no job.
@@ -904,12 +832,8 @@ object LakeTable {
     pinParquetTimestamps(spark)
     val root = Paths.get(dir)
     require(!Files.exists(root.resolve("_current")), s"table already exists at $dir")
-    Files.createDirectories(root.resolve("_manifests"))
-    Files.createDirectories(root.resolve("data"))
     val t = new LakeTable(root, spark)
-    val m = Manifest.empty(numBuckets, schema.toDDL)
-    Manifest.writeSplit(t.manifestDir, m)
-    Manifest.writeAtomic(root.resolve("_current"), "0")
+    t.core.create(Manifest.empty(numBuckets, schema.toDDL))
     t
   }
 

@@ -286,11 +286,12 @@ object Manifest {
 
   /** Write manifest `m` (v2 split form) under `dir`: segments first
     * (content-addressed — existing files are reused, writes are
-    * idempotent), then the atomic top doc. Returns the top-doc path.
+    * idempotent), then the atomic top doc. Returns `m` as [[readSplit]]
+    * reads it back: files in segment (bucket) order, v2 format.
     */
-  def writeSplit(dir: Path, m: Manifest): Path = {
-    val byBucket = m.files.groupBy(_.bucket)
-    val segs = byBucket.toSeq.sortBy(_._1).map { case (b, fs) =>
+  def writeSplit(dir: Path, m: Manifest): Manifest = {
+    val byBucket = m.files.groupBy(_.bucket).toSeq.sortBy(_._1)
+    val segs = byBucket.map { case (b, fs) =>
       val name = s"seg-$b-${segDigest(fs)}.json"
       val p = dir.resolve(name)
       if (!Files.exists(p)) writeAtomic(p, Serialization.write(fs))
@@ -302,9 +303,8 @@ object Manifest {
       schemas = m.schemas, files = Nil, segments = segs,
       totalRows = m.totalRows, maxLsn = m.maxLsn, lineage = m.lineage,
       streamId = m.streamId, lastSourceEpoch = m.lastSourceEpoch)
-    val p = dir.resolve(f"manifest-${m.version}%010d.json")
-    writeAtomic(p, Serialization.write(doc))
-    p
+    writeAtomic(dir.resolve(f"manifest-${m.version}%010d.json"), Serialization.write(doc))
+    m.copy(formatVersion = FORMAT_VERSION, files = byBucket.flatMap(_._2))
   }
 
   /** Write manifest `m` as ONE inline doc (v1 shape: full file list in
@@ -314,18 +314,18 @@ object Manifest {
     * load under the split form; one ~100s-of-KB doc is strictly cheaper
     * until file counts reach the many-tens-of-thousands, where a
     * segment-GROUPED form — not per-bucket — would be the next step).
-    * Readable by [[readSplit]] like any v1 doc.
+    * Readable by [[readSplit]] like any v1 doc. Returns `m` as
+    * [[readSplit]] reads it back (v1 format).
     */
-  def writeInline(dir: Path, m: Manifest): Path = {
+  def writeInline(dir: Path, m: Manifest): Manifest = {
     val doc = ManifestDoc(
       formatVersion = 1, version = m.version, lastEpoch = m.lastEpoch,
       numBuckets = m.numBuckets, currentSchemaId = m.currentSchemaId,
       schemas = m.schemas, files = m.files, segments = Nil,
       totalRows = m.totalRows, maxLsn = m.maxLsn, lineage = m.lineage,
       streamId = m.streamId, lastSourceEpoch = m.lastSourceEpoch)
-    val p = dir.resolve(f"manifest-${m.version}%010d.json")
-    writeAtomic(p, Serialization.write(doc))
-    p
+    writeAtomic(dir.resolve(f"manifest-${m.version}%010d.json"), Serialization.write(doc))
+    m.copy(formatVersion = 1)
   }
 
   /** Top doc only (no segment loads) — metadata-level operations. */

@@ -1,13 +1,10 @@
 package graft.merge
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import graft.lake.{CommitInfo, FileEntry, FooterReader, LakeTable, SchemaEntry, SchemaReconciler}
+import graft.lake.{CommitConflict, CommitInfo, FileEntry, LakeTable, SchemaEntry, SchemaReconciler}
 import graft.model.Schemas._
 
 /** The CDC apply: one micro-batch of change events → MERGE INTO the lake
@@ -110,15 +107,8 @@ object CdcMerge {
     // ---- route, dedup and write the batch as DELTA files ----
     val physTarget = physical(newUser)
 
-    // Unique per attempt: a second writer racing on the same effEpoch (e.g.
-    // streaming writer + SQL MERGE on one table) must not share — and
-    // deleteRecursively — this in-flight staging directory. Unique names
-    // mean a CRASHED attempt's directory is never reclaimed by the retry,
-    // so sweep abandoned staging dirs older than the grace window first
-    // (in-flight writers are younger than it by construction).
-    sweepStaleStaging(table)
-    val staging = table.root.resolve(
-      s"_staging/epoch-$effEpoch-${java.util.UUID.randomUUID().toString.take(8)}")
+    // unique per attempt, after a sweep of abandoned attempts (LakeCore)
+    val staging = table.core.stagingFor(s"epoch-$effEpoch")
 
     // O(batch): write deduped rows as per-bucket DELTA files, with ONE
     // exchange. The RAW batch is routed by bucket; the max-LSN window
@@ -171,9 +161,8 @@ object CdcMerge {
       physTarget.add("bucket", IntegerType))
       .sortWithinPartitions("bucket", "conv_id", "turn_idx")
       .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
-    val newFiles = adoptStaged(table, spark, staging, effEpoch, schemaId2, FileEntry.DELTA, physTarget)
+    val newFiles = table.adoptStaged(staging, effEpoch, schemaId2, FileEntry.DELTA, physTarget)
     val affected = newFiles.map(_.bucket).toSet
-    deleteRecursively(staging)
 
     // Commit with REBASE-on-conflict: an async compaction may win the CAS
     // between our manifest read and commit. A delta append is always
@@ -222,143 +211,13 @@ object CdcMerge {
         return Stats(epoch, applied = true, newFiles.map(_.rows).sum, affected.size, wallMs, effEpoch)
       } catch {
         // CAS lost → rebase onto the current manifest and retry
-        case _: IllegalArgumentException if attempt < 10 =>
+        case _: CommitConflict if attempt < 10 =>
           attempt += 1
           base = table.manifest
       }
     }
     throw new IllegalStateException(
       s"commit for epoch $effEpoch lost the CAS race 10 times — a concurrent writer is live")
-  }
-
-  /** Collect per-file stats straight from the parquet FOOTERS (row counts
-    * + `_lsn` column min/max statistics Spark already wrote, plus
-    * [[graft.lake.StatsHarvest]] per-column data-skipping bounds for the
-    * USER columns of `statsSchema`) — a driver-side metadata read, not a
-    * Spark job. Then move files into the table and return their entries.
-    * `statsSchema` is the physical schema the staged files were written
-    * under (passed explicitly: on a schema-evolving write its id is not
-    * committed yet).
-    */
-  private[merge] def adoptStaged(table: LakeTable, spark: SparkSession,
-                                 staging: java.nio.file.Path, epoch: Long,
-                                 schemaId: Int, kind: String,
-                                 statsSchema: StructType): Seq[FileEntry] = {
-    // Always called right after a SUCCESSFUL write to `staging` — a missing
-    // directory is never "no output" (an empty result still leaves the dir
-    // + _SUCCESS); it means something deleted the staged data between write
-    // and adopt (e.g. a mis-tuned staging GC). Committing Nil here would
-    // silently drop the batch — or, in the compactor, remove a bucket's
-    // files with no replacement. Fail loudly instead.
-    if (!Files.exists(staging))
-      throw new IllegalStateException(
-        s"staged output vanished before adoption: $staging — " +
-        "was the staging GC grace window set below the write duration?")
-    val bucketRe = ".*bucket=(\\d+).*".r
-    // walk stream closed eagerly: adoption runs on EVERY commit, and an
-    // unclosed directory stream holds its fd until process exit — a
-    // months-long stream of micro-batches would exhaust the fd table
-    val parquetFiles = {
-      val s = Files.walk(staging)
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet")).toSeq
-      finally s.close()
-    }
-    // one reader per adoption: its read options are built once from the
-    // session's Hadoop conf, not once per footer
-    val footers = new FooterReader(spark.sessionState.newHadoopConf())
-    // Footer reads are driver-side metadata I/O; done serially they become
-    // a per-batch serial stage at 10k staged files — run them on a bounded
-    // pool (ordering preserved by indexing futures).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(16, parquetFiles.size)))
-    // data-skipping stats: user columns + _deleted (the pushed !_deleted
-    // filter then skips all-tombstone base files); _lsn stays out — its
-    // watermark already has a dedicated manifest field (maxLsn)
-    val userStats = StructType(statsSchema.fields.filterNot(_.name == LSN_COL))
-    try parquetFiles.map(p => pool.submit(adoptOne(table, footers, bucketRe, epoch, schemaId, kind, userStats, p)))
-      .map(_.get())
-    finally pool.shutdown()
-  }
-
-  private def adoptOne(table: LakeTable, footers: FooterReader,
-                       bucketRe: scala.util.matching.Regex, epoch: Long, schemaId: Int,
-                       kind: String, statsSchema: StructType, p: java.nio.file.Path)
-      : java.util.concurrent.Callable[FileEntry] = () => {
-      val bucket = p.getParent.toString match {
-        case bucketRe(b) => b.toInt
-        case other => throw new IllegalStateException(s"no bucket dir in $other")
-      }
-      val s = FooterStats(footers.footer(p), statsSchema)
-      val bytes = Files.size(p)
-      val rel = table.adoptStagedFile(p, bucket, epoch, kind)
-      FileEntry(rel, bucket, s.rows, s.maxLsn, schemaId, kind, epoch, s.minKey, s.maxKey,
-        colStats = s.colStats, bytes = Some(bytes))
-  }
-
-  /** What an adopted file's entry takes from its footer: rows, the `_lsn`
-    * max, the `conv_id` range and the [[graft.lake.StatsHarvest]] bounds
-    * of the stats schema's columns.
-    */
-  private[graft] final case class FooterStats(
-      rows: Long, maxLsn: Long, minKey: Option[String], maxKey: Option[String],
-      colStats: Option[Map[String, graft.lake.ColStat]])
-
-  private[graft] object FooterStats {
-    def apply(footer: ParquetMetadata, statsSchema: StructType): FooterStats = {
-      val blocks = footer.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val maxLsn = blocks.flatMap { b =>
-        b.getColumns.asScala.find(_.getPath.toDotString == LSN_COL)
-          .flatMap(c => Option(c.getStatistics))
-          .collect { case s if !s.isEmpty && s.hasNonNullValue =>
-            s.genericGetMax.asInstanceOf[java.lang.Long].longValue() }
-      }.foldLeft(-1L)(math.max)
-      val keyStats = blocks.flatMap { b =>
-        b.getColumns.asScala.find(_.getPath.toDotString == "conv_id")
-          .flatMap(c => Option(c.getStatistics))
-          .collect { case s if !s.isEmpty && s.hasNonNullValue =>
-            (s.minAsString, s.maxAsString) }
-      }
-      val minKey = if (keyStats.isEmpty) None else Some(keyStats.map(_._1).min)
-      val maxKey = if (keyStats.isEmpty) None else Some(keyStats.map(_._2).max)
-      FooterStats(rows, maxLsn, minKey, maxKey, graft.lake.StatsHarvest.fromBlocks(blocks, statsSchema))
-    }
-  }
-
-  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
-
-  /** GC abandoned per-attempt staging dirs (a merge that crashed mid-write
-    * leaves `_staging/epoch-N-<uuid>` behind and no retry ever reuses the
-    * name). Staleness is judged by the SUBTREE's max mtime, not the top
-    * dir's: a running parquet job touches only `_temporary/` and bucket
-    * subdirectories, so the top-level dir's mtime is its creation time and
-    * a long rewrite (> grace) would be swept mid-flight. A subtree with no
-    * write activity for `olderThanMs` cannot belong to a live writer short
-    * of a task stalled a full hour between file creations (raise the grace
-    * if that is plausible in your environment).
-    */
-  private[graft] def sweepStaleStaging(table: LakeTable,
-                                       olderThanMs: Long = 3600000L): Unit = {
-    val dir = table.root.resolve("_staging")
-    if (!Files.exists(dir)) return
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    val kids = Files.list(dir)
-    try kids.iterator().asScala.toSeq.foreach { d =>
-      val stale = try {
-        val walk = Files.walk(d)
-        try walk.iterator().asScala
-          .map(p => try Files.getLastModifiedTime(p).toMillis catch { case _: Throwable => Long.MaxValue })
-          .max < cutoff
-        finally walk.close()
-      } catch { case _: Throwable => false }
-      if (stale) try deleteRecursively(d) catch { case _: Throwable => () }
-    } finally kids.close()
   }
 }
 
@@ -392,8 +251,7 @@ object BulkLoad {
     val asPhysical = LakeTable.alignTo(
       userDf.withColumn(LSN_COL, col("lsn")).withColumn(DELETED_COL, lit(false)),
       physTarget)
-    val staging = table.root.resolve("_staging/bootstrap")
-    CdcMerge.deleteRecursively(staging)
+    val staging = table.core.stagingFor("bootstrap")
     val salt =
       if (saltBuckets <= 1) lit(0L)
       else pmod(xxhash64(col("turn_idx")), lit(saltBuckets.toLong))
@@ -405,9 +263,7 @@ object BulkLoad {
       .write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("bucket").parquet(staging.toString)
-    val newFiles = CdcMerge.adoptStaged(table, spark, staging, epoch = 0L,
-      m.currentSchemaId, FileEntry.BASE, physTarget)
-    CdcMerge.deleteRecursively(staging)
+    val newFiles = table.adoptStaged(staging, epoch = 0L, m.currentSchemaId, FileEntry.BASE, physTarget)
     val maxLsn = newFiles.map(_.maxLsn).foldLeft(-1L)(math.max)
     val wallMs = (System.nanoTime() - t0) / 1000000
     val m2 = m.copy(
@@ -533,8 +389,7 @@ object Compactor {
     val resolved = if (clusterBy.isDefined)
       resolved1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else resolved1
-    val staging = table.root.resolve(
-      s"_staging/compact-${m0.version}-${java.util.UUID.randomUUID().toString.take(8)}")
+    val staging = table.core.stagingFor(s"compact-${m0.version}")
     // A clusterBy keeps its own sort, after the same exchange. The cluster
     // value is MATERIALIZED as a column before the sort and sorted as a
     // plain attribute: SortExec's generated ordering evaluates sort-key
@@ -553,9 +408,7 @@ object Compactor {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("bucket").parquet(staging.toString)
     finally if (clusterBy.isDefined) resolved.unpersist()
-    val newFiles = CdcMerge.adoptStaged(table, spark, staging, m0.lastEpoch,
-      m0.currentSchemaId, FileEntry.BASE, physTarget)
-    CdcMerge.deleteRecursively(staging)
+    val newFiles = table.adoptStaged(staging, m0.lastEpoch, m0.currentSchemaId, FileEntry.BASE, physTarget)
     def abandon(): Option[Result] = {
       newFiles.foreach(f => java.nio.file.Files.deleteIfExists(table.root.resolve(f.path)))
       None
@@ -601,7 +454,7 @@ object Compactor {
         table.commit(m2, cur.version)
         return Some(Result(closed.toSeq.sorted, wallMs))
       } catch {
-        case _: IllegalArgumentException => attempt += 1 // CAS lost; rebase + retry
+        case _: CommitConflict => attempt += 1 // rebase + retry
       }
     }
     abandon()

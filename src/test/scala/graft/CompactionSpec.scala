@@ -36,7 +36,7 @@ class CompactionSpec extends SparkSpec {
       java.nio.file.Files.setLastModifiedTime(live, old)
       java.nio.file.Files.write(live.resolve("bucket=1/part-0.parquet"), Array[Byte](1))
       java.nio.file.Files.setLastModifiedTime(live.resolve("bucket=1"), old)
-      CdcMerge.sweepStaleStaging(table, olderThanMs = 3600000L)
+      table.core.sweepStaleStaging(olderThanMs = 3600000L)
       assert(!java.nio.file.Files.exists(dead), "stale attempt should be swept")
       assert(java.nio.file.Files.exists(live.resolve("bucket=1/part-0.parquet")),
         "subtree with a recent write must not be swept mid-flight")

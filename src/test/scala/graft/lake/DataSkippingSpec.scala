@@ -91,10 +91,10 @@ class DataSkippingSpec extends graft.SparkSpec {
         val oracle = try {
           val written = Schemas.physical(StructType.fromDDL(
             t.manifest.schemas.find(_.id == f.schemaId).get.ddl))
-          CdcMerge.FooterStats(reader.getFooter,
+          FooterStats(reader.getFooter,
             StructType(written.fields.filterNot(_.name == Schemas.LSN_COL)))
         } finally reader.close()
-        assert(CdcMerge.FooterStats(f.rows, f.maxLsn, f.minKey, f.maxKey, f.colStats) == oracle,
+        assert(FooterStats(f.rows, f.maxLsn, f.minKey, f.maxKey, f.colStats) == oracle,
           s"${f.path}: adopted stats differ from the default footer read")
         assert(f.colStats.exists(_.get("ts").exists(_.min.isDefined)), s"${f.path}: no ts bounds")
       }
