@@ -1,7 +1,9 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import graft.gen.WalGen
 import graft.lake.LakeTable
@@ -9,93 +11,43 @@ import graft.merge.CdcMerge
 import graft.model.Schemas
 import graft.stream.CdcStream
 
-/** Benchmark harness. Four parts:
+/** Benchmark harness. Two parts:
   *
   *  1. headline operator queries on `SPARK_GRAFT_SF_DIR` at
   *     `local[SPARK_GRAFT_CPUS]` (driver contract — one JSON line);
-  *  2. CDC-apply scaling evidence (BASELINE.md protocol): the same
-  *     deterministic WAL stream-applied end-to-end at two parallelism
-  *     levels (local[8] vs local[32]), `GRAFT_BENCH_REPS` repetitions per
-  *     level with the BEST run kept (the sandbox host is a shared VM with
-  *     heavy, variable kernel-side overhead — best-of-N approximates the
-  *     noise floor; per-rep numbers are also reported);
-  *  3. a scan scaling probe (full-table checksum scan: parquet decode +
-  *     xxhash64 + agg, no writes/no shuffle);
-  *  4. a PURE-COMPUTE scaling probe (codegen'd chained hashing over
-  *     spark.range, no filesystem at all) under the same pinned-child
-  *     protocol — separates "does the engine's compute scale" from the
-  *     host's non-scaling kernel I/O path.
+  *  2. CDC-apply scaling: the same deterministic WAL stream-applied
+  *     end-to-end at N = cores/4 and 4N cores, where `cores` is what this
+  *     JVM was granted. Each rep runs in a fresh `graft.Bench child` JVM
+  *     pinned to its level with `taskset`; `GRAFT_BENCH_REPS` interleaved
+  *     reps per level, the best kept. A level the host cannot grant reads
+  *     `invalid`, and no efficiency is printed unless both levels are valid.
   *
-  * Output: one JSON line on stdout + BENCH/BASELINE.md.
+  * Output: one JSON line on stdout + BENCH/BASELINE.md + BENCH/BENCH.json.
   */
-/** Persistent cross-run record of the two-level CDC scaling sessions
-  * (`BENCH/SCALING_HISTORY.json`, committed). The sandbox is a shared VM
-  * whose capacity collapses for hours at a time; a single Bench run that
-  * lands in such a window would otherwise ERASE quiet-window evidence
-  * from BASELINE.md (the file is regenerated wholesale). Every full run
-  * appends one entry — both levels measured interleaved in the SAME
-  * window, so each entry's efficiency is internally coherent — and the
-  * report shows the current session alongside the best recorded one.
-  */
-object BenchHistory {
-  import org.json4s.{Formats, NoTypeHints}
-  import org.json4s.jackson.{JsonMethods, Serialization}
-
-  case class Entry(ts: String, loPar: Int, hiPar: Int, lo: Long, hi: Long,
-                   eff: Double, scanEff: Double, cpuEff: Double, note: String)
-
-  private val histPath = Paths.get("BENCH/SCALING_HISTORY.json")
-  private implicit val fmts: Formats = Serialization.formats(NoTypeHints)
-
-  def load(): Seq[Entry] =
-    if (!Files.exists(histPath)) Seq.empty
-    else try JsonMethods.parse(new String(Files.readAllBytes(histPath),
-      StandardCharsets.UTF_8)).extract[Seq[Entry]]
-    catch { case _: Throwable => Seq.empty }
-
-  def append(e: Entry): Seq[Entry] = {
-    val all = (load() :+ e).takeRight(40)
-    Files.createDirectories(histPath.getParent)
-    Files.write(histPath, Serialization.writePretty(all).getBytes(StandardCharsets.UTF_8))
-    all
-  }
-
-  /** Per-query min seconds from the PREVIOUS full run's BENCH/BENCH.json —
-    * the reference point for the outlier re-measure pass. Empty when the
-    * prior run used a different scale factor (not comparable). */
-  def priorQueryMins(sfDir: String): Map[String, Double] = {
-    val p = Paths.get("BENCH/BENCH.json")
-    if (!Files.exists(p)) Map.empty
-    else try {
-      val j = JsonMethods.parse(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-      (j \ "sf") match {
-        case org.json4s.JString(s) if s != sfDir => return Map.empty
-        case _ =>
-      }
-      (j \ "queries") match {
-        case org.json4s.JObject(fields) => fields.collect {
-          case (k, org.json4s.JDouble(v)) => k -> v
-          case (k, org.json4s.JInt(v)) => k -> v.toDouble
-          case (k, org.json4s.JDecimal(v)) => k -> v.toDouble
-        }.toMap
-        case _ => Map.empty
-      }
-    } catch { case _: Throwable => Map.empty }
-  }
-}
-
 object Bench {
 
-  private def benchTmp: String = {
-    val shm = Paths.get("/dev/shm")
-    // per-process scratch: two concurrent Bench runs must not share (and
-    // rmrf) each other's WAL/spark-local dirs
-    val pid = ProcessHandle.current().pid()
-    val base = if (Files.isWritable(shm)) s"/dev/shm/graft-bench-$pid"
-               else System.getProperty("java.io.tmpdir") + s"/graft-bench-$pid"
-    Files.createDirectories(Paths.get(base))
-    base
+  /** One pinned child's run of a CDC level. `cores` is what the child's
+    * JVM reported after pinning (0 when it printed no result line).
+    */
+  final case class Rep(level: Int, cores: Int, eventsPerSec: Double, wallSec: Double,
+                       calibMops: Double) {
+    def valid: Boolean = cores >= level
   }
+
+  /** The CDC levels N = cores/4 and 4N on a host of `cores`, or None when
+    * N is 0: a host of fewer than 4 cores cannot grant two levels 4x apart.
+    */
+  def levels(cores: Int): Option[(Int, Int)] = Some(cores / 4).filter(_ > 0).map(n => (n, 4 * n))
+
+  /** A level's best valid rep, or None (`invalid`) when no rep of it was
+    * granted its cores.
+    */
+  def best(reps: Seq[Rep], level: Int): Option[Rep] =
+    reps.filter(r => r.level == level && r.valid).maxByOption(_.eventsPerSec)
+
+  /** (tput_hi / tput_lo) / (hi / lo), computed only from two valid levels. */
+  def efficiency(lo: Option[Rep], hi: Option[Rep]): Option[Double] =
+    for (l <- lo; h <- hi) yield (h.eventsPerSec / l.eventsPerSec) / (h.level.toDouble / l.level)
 
   private def session(cores: Int, tmp: String): SparkSession = {
     SparkSession.clearActiveSession()
@@ -116,10 +68,8 @@ object Bench {
       .config("spark.hadoop.fs.file.impl", classOf[graft.util.FastLocalFileSystem].getName)
       // snappy: measured 5-15% faster end-to-end apply than zstd on this
       // CPU-bound box (both orderings, pinned 8-core probes); zstd remains
-      // the right choice on storage-bandwidth-bound clusters — override
-      // with GRAFT_BENCH_CODEC
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("GRAFT_BENCH_CODEC", "snappy"))
+      // the right choice on storage-bandwidth-bound clusters
+      .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.local.dir", s"$tmp/spark-local-$cores")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -127,39 +77,88 @@ object Bench {
     s
   }
 
-  /** End-to-end streaming apply of `walDir` into a fresh table → (ev/s, wallSec, tableDir). */
+  /** End-to-end streaming apply of `walDir` into a fresh table → (ev/s, wallSec). */
   private def cdcApply(spark: SparkSession, walDir: String, work: String,
-                       numEvents: Long): (Double, Double, String) = {
-    val dir = s"$work/table"
-    val table = LakeTable.create(spark, dir, Schemas.transcript, numBuckets = 32)
+                       numEvents: Long): (Double, Double) = {
+    val table = LakeTable.create(spark, s"$work/table", Schemas.transcript, numBuckets = 32)
     val t0 = System.nanoTime()
     CdcStream.runToCompletion(spark, walDir, table, s"$work/cp",
       maxFilesPerTrigger = 4, saltBuckets = 8, mode = CdcMerge.MergeOnRead,
       compactEvery = 8)
     val secs = (System.nanoTime() - t0) / 1e9
-    (numEvents / secs, secs, dir)
+    (numEvents / secs, secs)
+  }
+
+  private val ChildLine =
+    """\[bench-child\] cores=(\d+)(?: events_per_sec=(\d+) wall_sec=(\S+) calib_mops=(\d+))?""".r
+
+  /** Child mode: apply `walDir` at `level` cores and print one result
+    * line. A child granted fewer cores than its level runs nothing.
+    */
+  private def child(level: Int, events: Long, walDir: String, work: String): Unit = {
+    val cores = Runtime.getRuntime.availableProcessors()
+    if (cores < level) println(s"[bench-child] cores=$cores")
+    else {
+      // single-thread host calibration, just before the run: the shared
+      // host's capacity swings minute to minute
+      val calib = graft.util.DetHash.calibrateMops()
+      val spark = session(level, work)
+      val (evps, secs) = cdcApply(spark, walDir, work, events)
+      spark.stop()
+      println(f"[bench-child] cores=$cores events_per_sec=$evps%.0f wall_sec=$secs%.3f calib_mops=$calib%.0f")
+    }
+  }
+
+  /** One rep of `level` in a fresh JVM pinned to CPUs 0..level-1: an
+    * "N-core cluster" gets N cores for everything (executor threads, GC,
+    * shuffle and writer threads), unlike an unpinned local[N] that borrows
+    * the host's idle cores. The child runs with this JVM's own flags, which
+    * carry build.sbt's add-opens and heap size.
+    */
+  private def runChild(level: Int, events: Long, walDir: String, work: String): Rep = {
+    val cmd = Seq("taskset", "-c", s"0-${level - 1}", System.getProperty("java.home") + "/bin/java") ++
+      ManagementFactory.getRuntimeMXBean.getInputArguments.asScala ++
+      Seq("-cp", System.getProperty("java.class.path"),
+        "graft.Bench", "child", level.toString, events.toString, walDir, work)
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes(), StandardCharsets.UTF_8)
+    proc.waitFor()
+    ChildLine.findFirstMatchIn(out) match {
+      case Some(m) if m.group(2) != null =>
+        Rep(level, m.group(1).toInt, m.group(2).toDouble, m.group(3).toDouble, m.group(4).toDouble)
+      case Some(m) => Rep(level, m.group(1).toInt, 0.0, 0.0, 0.0)
+      case None =>
+        System.err.println(s"[bench] pinned child produced no result line:\n${out.takeRight(2000)}")
+        Rep(level, 0, 0.0, 0.0, 0.0)
+    }
   }
 
   private def rmrf(dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
     val p = Paths.get(dir)
     if (Files.exists(p))
       Files.walk(p).iterator().asScala.toSeq.reverse
         .foreach(x => try Files.deleteIfExists(x) catch { case _: Throwable => () })
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = args match {
+    case Array("child", level, events, walDir, work) =>
+      child(level.toInt, events.toLong, walDir, work)
+      sys.exit(0) // Spark leaves non-daemon threads behind; the result is printed
+    case _ => run()
+  }
+
+  private def run(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val benchEvents = sys.env.getOrElse("GRAFT_BENCH_EVENTS", "16000000").toLong
-    val loPar = sys.env.getOrElse("GRAFT_BENCH_LO", "8").toInt
-    val hiPar = sys.env.getOrElse("GRAFT_BENCH_HI", "32").toInt
     val reps = sys.env.getOrElse("GRAFT_BENCH_REPS", "2").toInt
-    val tmp = benchTmp
+    // per-process scratch on the ordinary filesystem: two concurrent Bench
+    // runs must not share (and rmrf) each other's WAL/spark-local dirs
+    val tmp = Files.createTempDirectory("graft-bench-").toString
 
     // ---- part 1: operator queries ----
     // iteration knobs (builder-local): GRAFT_BENCH_ONLY=q1,q2 runs a subset;
-    // GRAFT_BENCH_SKIP_CDC=1 skips parts 2+3 (per-query timing loops)
+    // GRAFT_BENCH_SKIP_CDC=1 skips part 2 (per-query timing loops)
     val only = sys.env.get("GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val skipCdc = sys.env.contains("GRAFT_BENCH_SKIP_CDC")
     val s1 = session(cpus, tmp)
@@ -203,36 +202,6 @@ object Bench {
     }
     val failedBoth = benchQueries.map(_._1)
       .filter(n => failedFwd.contains(n) && failedRev.contains(n))
-    // Outlier re-measure: on this shared VM a single degraded host window
-    // can inflate BOTH passes of a query (they run minutes apart, a bad
-    // window spans both). A query whose min is far above the PRIOR
-    // recorded min (BENCH/BENCH.json from the last run) gets one more
-    // isolated measurement; the min of three is reported and the query is
-    // listed under `remeasured` so the number's provenance is explicit.
-    val priorMins = BenchHistory.priorQueryMins(sfDir)
-    val remeasured = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results2 = results.map { case (name, t) =>
-      val prior = priorMins.get(name)
-      val outlier = t > 0 && (
-        prior.exists(p => p > 0 && t > math.max(3.0, 2.0 * p)) ||
-        // a query with NO recorded prior (first round it appears) can
-        // still have both passes poisoned by host weather — e.g. the
-        // alphabetical tail of a collapsed window is first-touch in the
-        // reversed pass too. A high min with wildly disagreeing passes
-        // earns one isolated third measurement (measured: q_zorder_skip
-        // 60s/280s in-suite vs 5.7s isolated, same code, same sf).
-        (prior.isEmpty && t > 5.0 && math.max(fwd(name), rev(name)) > 3.0 * t))
-      if (!outlier) name -> t
-      else {
-        s1.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val t3 = try { benchQueries.find(_._1 == name).get._2(s1, sfDir).count()
-                       (System.nanoTime() - t0) / 1e9 }
-                 catch { case _: Throwable => Double.MaxValue }
-        remeasured += name
-        name -> math.min(t, t3)
-      }
-    }
     // first_touch: position changed this query's cost materially — its
     // single-pass number would have been attribution noise (only
     // meaningful when both passes succeeded)
@@ -241,212 +210,61 @@ object Bench {
       !failedFwd.contains(n) && !failedRev.contains(n) &&
         math.abs(fwd(n) - rev(n)) > math.max(0.5 * mn, 0.3)
     }
-    val totalQ = results2.map(_._2).filter(_ >= 0).sum
+    val totalQ = results.map(_._2).filter(_ >= 0).sum
     val firstTouchJson = firstTouch.map("\"" + _ + "\"").mkString("[", ",", "]") +
-      (if (remeasured.nonEmpty)
-        remeasured.map("\"" + _ + "\"").mkString(",\"remeasured\":[", ",", "]")
-      else "") +
       (if (failedBoth.nonEmpty)
         failedBoth.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
       else "")
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
 
     if (skipCdc) {
-      val qs0 = results2.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
       println(s"""{"metric":"queries_only","queries_total_sec":${f"$totalQ%.1f"},""" +
-        s""""queries":$qs0,"first_touch":$firstTouchJson,"sf":"$sfDir"}""")
+        s""""queries":$qs,"first_touch":$firstTouchJson,"sf":"$sfDir"}""")
       s1.stop(); rmrf(tmp); return
     }
 
-    // ---- part 2: CDC scaling (same WAL, two parallelism levels) ----
-    val cfg = WalGen.Config(numEvents = benchEvents,
-      numConvs = math.max(100L, benchEvents / 200), maxTurns = 40)
-    val walDir = s"$tmp/wal"
-    rmrf(walDir)
-    WalGen.writeWal(s1, walDir, cfg, numChunks = 8)
-    s1.stop()
-    // (no parent-JVM warmup: each measurement is a fresh pinned child;
-    // interleaved reps + best-of absorb JIT warm-up)
-
-    // Each level runs in a FRESH child JVM pinned to exactly `par` CPUs
-    // (taskset): an "N-core cluster" gets N cores for everything — executor
-    // threads, GC, shuffle and writer threads — unlike an unpinned
-    // local[N] JVM that silently borrows the host's idle cores. Fresh JVM
-    // per rep also equalizes JIT state. Interleaved reps, best-of kept.
+    // ---- part 2: CDC scaling (same WAL, two pinned levels) ----
+    val hostCores = Runtime.getRuntime.availableProcessors()
+    val lv = levels(hostCores)
     val canPin = new java.io.File("/usr/bin/taskset").exists()
-    def runLevel(par: Int, rep: Int): (Double, Double, Double) = {
-      val work = s"$tmp/run-$par-$rep"
-      rmrf(work)
-      if (canPin) {
-        val javaBin = System.getProperty("java.home") + "/bin/java"
-        val addOpens = Seq(
-          "java.base/java.lang", "java.base/java.lang.invoke",
-          "java.base/java.lang.reflect", "java.base/java.io",
-          "java.base/java.net", "java.base/java.nio",
-          "java.base/java.util", "java.base/java.util.concurrent",
-          "java.base/java.util.concurrent.atomic",
-          "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-          "java.base/sun.security.action", "java.base/sun.util.calendar"
-        ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-        val cmd = Seq("taskset", "-c", s"0-${par - 1}", javaBin) ++ addOpens ++ Seq(
-          "-Xmx24g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-          "-cp", System.getProperty("java.class.path"),
-          "graft.tools.BenchProbe", par.toString, benchEvents.toString, "32", "8", "4", walDir)
-        val pb = new ProcessBuilder(cmd: _*)
-        pb.environment().put("GRAFT_BENCH_TMP", tmp)
-        pb.environment().put("GRAFT_BENCH_MPB", "8388608")
-        pb.environment().put("GRAFT_BENCH_CODEC",
-          sys.env.getOrElse("GRAFT_BENCH_CODEC", "snappy"))
-        pb.redirectErrorStream(true)
-        val proc = pb.start()
-        val out = new String(proc.getInputStream.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        proc.waitFor()
-        val reTotal = """total (\d+(?:\.\d+)?)s -> (\d+) ev/s""".r
-        val reCalib = """calib (\d+) Mops""".r
-        val calib = reCalib.findFirstMatchIn(out).map(_.group(1).toDouble).getOrElse(-1.0)
-        reTotal.findFirstMatchIn(out) match {
-          case Some(mm) => (mm.group(2).toDouble, mm.group(1).toDouble, calib)
-          case None =>
-            System.err.println(s"[bench] pinned child produced no total line:\n${out.takeRight(2000)}")
-            (0.0, Double.MaxValue, calib)
+    val runs: Seq[Rep] = lv match {
+      case Some((lo, hi)) if canPin =>
+        val cfg = WalGen.Config(numEvents = benchEvents,
+          numConvs = math.max(100L, benchEvents / 200), maxTurns = 40)
+        val walDir = s"$tmp/wal"
+        WalGen.writeWal(s1, walDir, cfg, numChunks = 8)
+        s1.stop()
+        // fresh JVM per rep equalizes JIT state; alternate which level
+        // goes first, so within-run warming (page cache, host state) does
+        // not systematically favor one level
+        (0 until reps).flatMap { r =>
+          val order = if (r % 2 == 0) Seq(hi, lo) else Seq(lo, hi)
+          order.map { par =>
+            val work = s"$tmp/run-$par-$r"
+            try runChild(par, benchEvents, walDir, work) finally rmrf(work)
+          }
         }
-      } else {
-        val spark = session(par, tmp)
-        val calib = graft.util.DetHash.calibrateMops()
-        val r = cdcApply(spark, walDir, work, benchEvents)
-        spark.stop()
-        (r._1, r._2, calib)
-      }
+      case _ => s1.stop(); Nil
     }
-    val runs = (0 until reps).flatMap { r =>
-      // alternate which level goes first: within-run warming (page cache,
-      // host state) must not systematically favor one level
-      val order = if (r % 2 == 0) Seq(hiPar, loPar) else Seq(loPar, hiPar)
-      order.map(par => (par, runLevel(par, r)))
-    }
-    val bestHi = runs.filter(_._1 == hiPar).map(_._2).maxBy(_._1)
-    val bestLo = runs.filter(_._1 == loPar).map(_._2).maxBy(_._1)
-    val efficiency = (bestHi._1 / bestLo._1) / (hiPar.toDouble / loPar)
-
-    // ---- part 3: compute-only scaling probe (read+hash scan, no writes):
-    // full WAL scan + xxhash64 + order-invariant sum, best of 3
-    def checksumScan(par: Int): Double = {
-      val spark = session(par, tmp)
-      import org.apache.spark.sql.functions._
-      val df = spark.read.parquet(walDir)
-      df.count() // warm listing + JIT
-      val secs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        df.select(sum(xxhash64(df.columns.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-          .cast("decimal(38,0)"))).collect()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      spark.stop()
-      secs
-    }
-    var scanHiSecs = checksumScan(hiPar)
-    var scanLoSecs = checksumScan(loPar)
-    def scanEff0 = (scanLoSecs / scanHiSecs) / (hiPar.toDouble / loPar)
-    // the two levels run minutes apart, so a collapsed host window on one
-    // side yields a physically impossible ratio (super-linear, or near
-    // zero). One interleaved retry per level keeps the per-level best; if
-    // the ratio is STILL implausible it is flagged, never laundered into
-    // the recorded baselines as a real measurement.
-    if (scanEff0 > 1.25 || scanEff0 < 0.05) {
-      scanHiSecs = math.min(scanHiSecs, checksumScan(hiPar))
-      scanLoSecs = math.min(scanLoSecs, checksumScan(loPar))
-    }
-    val scanEff = scanEff0
-    val scanImplausible = scanEff > 1.25 || scanEff < 0.05
-
-    // ---- part 4: pure-compute scaling probe (codegen'd hash arithmetic,
-    // no filesystem, no shuffle write) in the SAME pinned-child protocol —
-    // separates "does the engine's compute scale" from the host's
-    // kernel/FS ceiling that parts 2-3 hit.
-    def cpuProbe(par: Int): Double = {
-      val rows = sys.env.getOrElse("GRAFT_BENCH_CPU_ROWS", "400000000")
-      if (canPin) {
-        val javaBin = System.getProperty("java.home") + "/bin/java"
-        val cmd = Seq("taskset", "-c", s"0-${par - 1}", javaBin,
-          "-Xmx8g", "-Dspark.ui.enabled=false",
-          "-cp", System.getProperty("java.class.path"),
-          "graft.tools.BenchProbe", "cpu", par.toString, rows)
-        val pb = new ProcessBuilder(cmd: _*)
-        pb.redirectErrorStream(true)
-        val proc = pb.start()
-        val out = new String(proc.getInputStream.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        proc.waitFor()
-        val re = """rows: (\d+(?:\.\d+)?)s""".r
-        val times = re.findAllMatchIn(out).map(_.group(1).toDouble).toSeq
-        if (times.nonEmpty) times.min
-        else { System.err.println(s"[bench] cpu child produced no timing:\n${out.takeRight(800)}"); -1.0 }
-      } else { // no taskset: unpinned in-process fallback (marked as such in md)
-        val spark = session(par, tmp)
-        import org.apache.spark.sql.functions._
-        val df = spark.range(0, rows.toLong, 1, par * 4)
-        val h = (1 to 8).foldLeft(col("id"))((c, _) => xxhash64(c))
-        df.select(sum(lit(0L))).collect()
-        val best = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          df.select(sum(h.cast("decimal(38,0)"))).collect()
-          (System.nanoTime() - t0) / 1e9
-        }.min
-        spark.stop()
-        best
-      }
-    }
-    var cpuHiSecs = cpuProbe(hiPar)
-    var cpuLoSecs = cpuProbe(loPar)
-    // -1 sentinel (child produced no timing) must not fabricate a number
-    def cpuEff0 =
-      if (cpuHiSecs <= 0 || cpuLoSecs <= 0) -1.0
-      else (cpuLoSecs / cpuHiSecs) / (hiPar.toDouble / loPar)
-    // same plausibility rule as the scan probe: >1 scaling efficiency is
-    // physically impossible — the levels landed in different host
-    // windows; retry interleaved, keep per-level best
-    if (cpuEff0 > 1.05 || (cpuEff0 >= 0 && cpuEff0 < 0.05)) {
-      val h2 = cpuProbe(hiPar); if (h2 > 0) cpuHiSecs = math.min(cpuHiSecs, h2)
-      val l2 = cpuProbe(loPar); if (l2 > 0) cpuLoSecs = math.min(cpuLoSecs, l2)
-    }
-    val cpuEff = cpuEff0
-
-    // record this session in the persistent history; headline the best
-    // recorded session so a degraded host window can't erase quiet-window
-    // evidence (both levels of every entry ran interleaved in one window)
-    val nowTs = java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC)
-      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm'Z'"))
-    val calibs = runs.map(_._2._3).filter(_ > 0)
-    val calibNote = if (calibs.isEmpty) "no calib"
-      else f"calib ${calibs.min}%.0f-${calibs.max}%.0f Mops"
-    val history = BenchHistory.append(BenchHistory.Entry(nowTs, loPar, hiPar,
-      bestLo._1.round, bestHi._1.round, efficiency, scanEff, cpuEff, calibNote))
-    val comparable = history.filter(e => e.loPar == loPar && e.hiPar == hiPar)
-    val bestRec = comparable.maxBy(_.eff)
-    // the recorded-best headline only considers PLAUSIBLE probe values:
-    // a super-linear ratio is two host windows, not a measurement (the
-    // raw value still sits in its history row, honestly)
-    val bestCpuRec = comparable.map(_.cpuEff).filter(_ <= 1.05)
-      .maxOption.getOrElse(-1.0)
+    val bestLo = lv.flatMap(l => best(runs, l._1))
+    val bestHi = lv.flatMap(l => best(runs, l._2))
+    val eff = efficiency(bestLo, bestHi)
 
     // ONE compact JSON line, emitted LAST — the driver captures only a tail
     // window of the output, so per-query seconds are rounded to 3 decimals
     // and the header kept tight (round 1's full-precision line overflowed
     // the window and parsed as null). Full-precision copy → BENCH/BENCH.json.
-    val qs = results2.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    val repsJson = runs.map { case (p, (tput, secs, mops)) =>
-      s"""{"par":$p,"events_per_sec":${tput.round},"wall_sec":${f"$secs%.1f"},""" +
-      s""""host_calib_mops":${f"$mops%.0f"}}"""
+    val (loTag, hiTag) = lv.fold(("", "")) { case (lo, hi) => (s"_${lo}c", s"_${hi}c") }
+    def evps(r: Option[Rep]) = r.fold("\"invalid\"")(_.eventsPerSec.round.toString)
+    val repsJson = runs.map { r =>
+      s"""{"par":${r.level},"cores":${r.cores},"events_per_sec":${r.eventsPerSec.round},""" +
+      s""""wall_sec":${f"${r.wallSec}%.1f"},"host_calib_mops":${f"${r.calibMops}%.0f"}}"""
     }.mkString("[", ",", "]")
     def jsonLine(withReps: Boolean) =
-      s"""{"metric":"cdc_apply_events_per_sec_${hiPar}c","value":${bestHi._1.round},"unit":"events/sec",""" +
-      s""""cdc_events":$benchEvents,"events_per_sec_lo_${loPar}c":${bestLo._1.round},""" +
-      s""""events_per_sec_hi_${hiPar}c":${bestHi._1.round},"scaling_efficiency":${f"$efficiency%.3f"},""" +
-      s""""scan_scaling_efficiency":${f"$scanEff%.3f"},""" +
-      (if (scanImplausible) s""""scan_scaling_implausible":true,""" else "") +
-      s""""cpu_scaling_efficiency":${f"$cpuEff%.3f"},""" +
-      s""""best_recorded_efficiency":${f"${bestRec.eff}%.3f"},"best_recorded_ts":"${bestRec.ts}",""" +
-      s""""best_recorded_cpu_efficiency":${f"$bestCpuRec%.3f"},""" +
+      s"""{"metric":"cdc_apply_events_per_sec$hiTag","value":${evps(bestHi)},"unit":"events/sec",""" +
+      s""""cdc_events":$benchEvents,"host_cores":$hostCores,""" +
+      s""""events_per_sec_lo$loTag":${evps(bestLo)},"events_per_sec_hi$hiTag":${evps(bestHi)},""" +
+      eff.fold("")(e => s""""scaling_efficiency":${f"$e%.3f"},""") +
       (if (withReps) s""""cdc_runs":$repsJson,""" else "") +
       (if (withReps) {
         val f = benchQueries.map { case (k, _) => "\"" + k + "\":" + f"${fwd(k)}%.3f" }.mkString("{", ",", "}")
@@ -459,96 +277,42 @@ object Bench {
     Files.write(Paths.get("BENCH/BENCH.json"),
       jsonLine(withReps = true).getBytes(StandardCharsets.UTF_8))
 
+    def row(level: Int, r: Option[Rep]) =
+      r.fold(s"| $level | invalid | invalid |")(b => s"| $level | ${f"${b.wallSec}%.1f"} | ${b.eventsPerSec.round} |")
+    val levelRows = lv.fold("| — | invalid | invalid |") { case (lo, hi) =>
+      row(lo, bestLo) + "\n|" + row(hi, bestHi) } // "\n|": stripMargin runs over it
+    val effText = eff.fold(
+      if (lv.isEmpty) s"not computed: this host grants $hostCores cores, fewer than the 4 that two levels 4x apart need"
+      else if (!canPin) "not computed: `taskset` is missing, so no level could be pinned"
+      else "not computed: a level has no rep that was granted its cores"
+    )(e => f"**$e%.3f** (target >= 0.8)")
     val md =
       s"""# BENCH — measured results (written by graft.Bench)
          |
-         |## CDC apply scaling (BASELINE.md protocol)
+         |## CDC apply scaling
          |
          |Same $benchEvents-event deterministic WAL (Zipf-hot conv_ids, duplicate
          |deliveries, reordering, deletes), streamed end-to-end
-         |(foreachBatch merge-on-read + periodic compaction) into a fresh
-         |32-bucket LakeTable. Each measurement is a FRESH child JVM pinned
-         |with `taskset -c 0-(N-1)` — an "N-core cluster" gets exactly N
-         |cores for executor/GC/shuffle/writer threads, unlike an unpinned
-         |local[N] that borrows the host's idle cores. $reps interleaved
-         |repetitions per level, best kept (shared-VM host: kernel-side
-         |overhead is large and variable — per-rep numbers below).
+         |(foreachBatch merge-on-read, 4 files per trigger, salt 8, compaction
+         |every 8 epochs) into a fresh 32-bucket LakeTable, at N = cores/4 and
+         |4N cores of the $hostCores this JVM was granted. Each rep is a FRESH
+         |child JVM pinned with `taskset -c 0-(N-1)`, so a level gets exactly
+         |its cores for executor, GC, shuffle and writer threads. $reps
+         |interleaved reps per level, best kept. A level reads `invalid` when
+         |the host cannot grant its cores.
          |
-         || parallelism | best wall (s) | best events/sec |
+         || cores | best wall (s) | best events/sec |
          ||---|---|---|
-         || local[$loPar] | ${f"${bestLo._2}%.1f"} | ${bestLo._1.round} |
-         || local[$hiPar] | ${f"${bestHi._2}%.1f"} | ${bestHi._1.round} |
+         |$levelRows
          |
-         |**End-to-end scaling efficiency** (tput_hi/tput_lo)/($hiPar/$loPar) =
-         |**${f"$efficiency%.3f"}** (target >= 0.8 on a real multi-host cluster).
+         |**End-to-end scaling efficiency** (tput_hi/tput_lo)/(hi/lo): $effText.
          |
          |All reps (host_calib = single-thread splitmix Mops measured INSIDE
-         |each pinned child JVM just before its run — the shared host's
-         |capacity swings minute to minute): ${runs.map { case (p, (t, s, mops)) =>
-             s"local[$p]=${t.round}ev/s(${f"$s%.0f"}s, calib ${f"$mops%.0f"}Mops)" }.mkString(", ")}
+         |each pinned child JVM just before its run): ${runs.map { r =>
+             s"${r.level}c=${if (r.valid) s"${r.eventsPerSec.round}ev/s(${f"${r.wallSec}%.0f"}s, calib ${f"${r.calibMops}%.0f"}Mops)"
+                         else s"invalid(granted ${r.cores})"}" }.mkString(", ")}
          |
-         |## Recorded scaling sessions (BENCH/SCALING_HISTORY.json)
-         |
-         |Each row = one full Bench invocation; BOTH levels of a row ran
-         |interleaved in the same host window, so each row's efficiency is
-         |internally coherent. The host's capacity collapses for hours at
-         |a time (see Interpretation below) — the best recorded row is the
-         |engine's demonstrated floor, the worst rows are the host's.
-         |**Best recorded end-to-end efficiency: ${f"${bestRec.eff}%.3f"}
-         |(${bestRec.ts}, ${bestRec.lo} ev/s @$loPar → ${bestRec.hi} ev/s @$hiPar);
-         |best recorded pure-compute probe: ${f"$bestCpuRec%.3f"}.**
-         |
-         || session (UTC) | ev/s @$loPar | ev/s @$hiPar | end-to-end eff | cpu-probe eff | host |
-         ||---|---|---|---|---|---|
-         |${comparable.reverse.map(e =>
-             s"| ${e.ts} | ${e.lo} | ${e.hi} | ${f"${e.eff}%.3f"} | ${f"${e.cpuEff}%.3f"} | ${e.note} |")
-           .mkString("\n|")}
-         |
-         |## Compute-only scaling probes
-         |
-         |Full-WAL checksum scan (parquet decode + xxhash64 + agg; no
-         |writes, no shuffle), best of 3 per level:
-         |local[$loPar] ${f"$scanLoSecs%.1f"}s vs local[$hiPar] ${f"$scanHiSecs%.1f"}s →
-         |efficiency **${f"$scanEff%.3f"}**${
-           if (scanImplausible) " (IMPLAUSIBLE: the two levels landed in " +
-             "different host windows even after an interleaved retry — " +
-             "treat as host noise, not a measurement)" else ""}.
-         |
-         |PURE-COMPUTE probe (codegen'd chained xxhash64 over spark.range —
-         |no filesystem, no shuffle write), same taskset-pinned child-JVM
-         |protocol as the CDC apply, best of 3 per level:
-         |$loPar cores ${f"$cpuLoSecs%.1f"}s vs $hiPar cores ${f"$cpuHiSecs%.1f"}s →
-         |efficiency **${f"$cpuEff%.3f"}**. This is the engine's compute
-         |path scaling when the host's kernel/FS ceiling is out of the
-         |picture — the gap between this number and the end-to-end one is
-         |the shared-VM I/O path, not plan shape.
-         |
-         |Interpretation: this sandbox is one shared VM. The single-thread
-         |calibration above is STABLE run-to-run while identical parallel
-         |runs vary up to 3x (e.g. two fresh pinned 32-core children on the
-         |same input: 113s vs 40s) — multi-core bursts contend with
-         |co-tenants at the hypervisor, and `time` shows sys:user ≈ 2.7:1
-         |during heavy runs (kernel-side page/FS work). Controlled
-         |experiments across this build ranged 0.14-0.72 efficiency purely
-         |with host weather; a pure-CPU 32-thread spin scales 35x on this
-         |box, so the ceiling is not the engine. On a real N vs 4N EXECUTOR
-         |cluster each executor brings its own memory bus + local disks +
-         |kernel — the regime the >=0.8 target describes. The only serial
-         |part of a batch is its read when the batch is a single split; a
-         |trigger of several files reads in parallel. The batch crosses one
-         |bucket exchange, the dedup window and the delta write share its
-         |sort, commits are O(#files) driver metadata.
-         |
-         |Standalone-cluster control (run 2026-08-16 during round 1, via a
-         |real spark standalone master + taskset-pinned worker JVMs on this
-         |box; see NOTES.md): the same 32M-event apply on 1 executor x 8
-         |cores vs 4 executors x 8 cores produced IDENTICAL steady-state
-         |batch times (~13s per 8M-event batch) — separate executor JVMs,
-         |pinned threads, and local[N] all plateau at ~8 cores of demand.
-         |Three topologies agreeing pins the plateau on the VM's shared
-         |memory/kernel path, not on the engine's plan shape.
-         |
-         |## Operator queries (${results2.size} queries, $sfDir)
+         |## Operator queries (${results.size} queries, $sfDir)
          |
          |total ${f"$totalQ%.1f"} s. Per-query seconds = MIN of two passes
          |(forward order, cache cleared, reversed order) so no query's

@@ -117,12 +117,20 @@ private[graft] final class LakeCore(val root: Path, spark: SparkSession,
     * swept mid-flight. A subtree with no write activity for `olderThanMs`
     * cannot belong to a live writer short of a task stalled a full hour
     * between file creations (raise the grace if that is plausible).
+    * Root children named `_staging-*` are attempts of a store written
+    * before the shared `_staging/` area and are swept by the same rule.
     */
   def sweepStaleStaging(olderThanMs: Long = 3600000L): Unit = {
-    if (!Files.exists(stagingDir)) return
     val cutoff = System.currentTimeMillis() - olderThanMs
-    val kids = Files.list(stagingDir)
-    try kids.iterator().asScala.toSeq.foreach { d =>
+    def children(dir: Path): Seq[Path] =
+      if (!Files.isDirectory(dir)) Nil
+      else {
+        val s = Files.list(dir)
+        try s.iterator().asScala.toList finally s.close()
+      }
+    val attempts = children(stagingDir) ++
+      children(root).filter(_.getFileName.toString.startsWith("_staging-"))
+    attempts.foreach { d =>
       val stale = try {
         val walk = Files.walk(d)
         try walk.iterator().asScala
@@ -131,7 +139,7 @@ private[graft] final class LakeCore(val root: Path, spark: SparkSession,
         finally walk.close()
       } catch { case _: Throwable => false }
       if (stale) try deleteRecursively(d) catch { case _: Throwable => () }
-    } finally kids.close()
+    }
   }
 
   /** Adopt the parquet files a successful write left under `staging`.

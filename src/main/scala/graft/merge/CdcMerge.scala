@@ -119,7 +119,8 @@ object CdcMerge {
     // group, so one split, and a combine would run on ONE task (~0.9 s
     // of a 1.2 s stage at 256k events, 4 cores). At 4 files per trigger
     // it would run on 4, yet shuffling raw rows still applied batches
-    // ~20% faster there (BenchProbe, 4 cores). Writer tasks number the
+    // ~28% faster there (4 cores, 10 alternating pairs; CHANGES.md, "CDC
+    // apply in one exchange"). Writer tasks number the
     // session's shuffle parallelism, not the buckets: each task costs
     // ~34 ms fixed, against ~140 KB of output per bucket at 32 buckets.
     // A cold bucket hashes to exactly one task, so it still gets one

@@ -121,4 +121,24 @@ class LakeCoreSpec extends graft.SparkSpec {
       assert(bs.watermark == 3L)
     } finally rmrf(dir)
   }
+
+  test("a stale root-level _staging-<uuid> attempt of an older store is reclaimed by the next append") {
+    val dir = tmpDir("core-old-staging")
+    try {
+      val root = Paths.get(s"$dir/b")
+      val bs = BucketStore.create(spark, root.toString, storeSchema, Seq("g"), Seq("g", "id"), numPids = 4)
+      bs.append(Seq((1, "a", 10)).toDF("g", "id", "v"), 1L)
+      // the layout the store used before the shared `_staging/` area: one
+      // attempt directory per write, directly under the store root
+      val old = root.resolve("_staging-deadbeef")
+      val part = old.resolve("part-0.parquet")
+      Files.createDirectories(old)
+      Files.write(part, Array[Byte](1, 2, 3))
+      val aged = FileTime.fromMillis(System.currentTimeMillis() - 2 * 3600000L)
+      Seq(part, old).foreach(p => Files.setLastModifiedTime(p, aged))
+      bs.append(Seq((2, "b", 20)).toDF("g", "id", "v"), 2L)
+      assert(!Files.exists(old), s"the stale attempt $old was not reclaimed")
+      assert(storeContent(bs) == Set((1, "a", 10), (2, "b", 20)) && bs.watermark == 2L)
+    } finally rmrf(dir)
+  }
 }
