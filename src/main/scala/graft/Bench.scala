@@ -14,7 +14,8 @@ import graft.stream.CdcStream
 /** Benchmark harness. Two parts:
   *
   *  1. headline operator queries on `SPARK_GRAFT_SF_DIR` at
-  *     `local[SPARK_GRAFT_CPUS]` (driver contract — one JSON line);
+  *     `local[SPARK_GRAFT_CPUS]` (driver contract — one JSON line); their
+  *     total reads `invalid` when this JVM was granted fewer cores;
   *  2. CDC-apply scaling: the same deterministic WAL stream-applied
   *     end-to-end at N = cores/4 and 4N cores, where `cores` is what this
   *     JVM was granted. Each rep runs in a fresh `graft.Bench child` JVM
@@ -48,6 +49,14 @@ object Bench {
   /** (tput_hi / tput_lo) / (hi / lo), computed only from two valid levels. */
   def efficiency(lo: Option[Rep], hi: Option[Rep]): Option[Double] =
     for (l <- lo; h <- hi) yield (h.eventsPerSec / l.eventsPerSec) / (h.level.toDouble / l.level)
+
+  /** Part 1's total, or None (printed as `invalid`) when the JVM was
+    * granted fewer cores than the `local[cpus]` the queries ran at, since
+    * their task threads then shared cores and the total is not a
+    * `cpus`-core figure.
+    */
+  def queriesTotal(totalSec: Double, cpus: Int, granted: Int): Option[Double] =
+    Option.when(granted >= cpus)(totalSec)
 
   private def session(cores: Int, tmp: String): SparkSession = {
     SparkSession.clearActiveSession()
@@ -161,6 +170,7 @@ object Bench {
     // GRAFT_BENCH_SKIP_CDC=1 skips part 2 (per-query timing loops)
     val only = sys.env.get("GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val skipCdc = sys.env.contains("GRAFT_BENCH_SKIP_CDC")
+    val hostCores = Runtime.getRuntime.availableProcessors()
     val s1 = session(cpus, tmp)
     // untimed warm-up: session init, codegen/JIT first-touch, parquet
     // footer caches — otherwise the alphabetically-first queries absorb
@@ -211,6 +221,8 @@ object Bench {
         math.abs(fwd(n) - rev(n)) > math.max(0.5 * mn, 0.3)
     }
     val totalQ = results.map(_._2).filter(_ >= 0).sum
+    val total = queriesTotal(totalQ, cpus, hostCores)
+    val totalJson = total.fold("\"invalid\"")(t => f"$t%.1f")
     val firstTouchJson = firstTouch.map("\"" + _ + "\"").mkString("[", ",", "]") +
       (if (failedBoth.nonEmpty)
         failedBoth.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
@@ -218,13 +230,12 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
 
     if (skipCdc) {
-      println(s"""{"metric":"queries_only","queries_total_sec":${f"$totalQ%.1f"},""" +
+      println(s"""{"metric":"queries_only","queries_total_sec":$totalJson,"host_cores":$hostCores,""" +
         s""""queries":$qs,"first_touch":$firstTouchJson,"sf":"$sfDir"}""")
       s1.stop(); rmrf(tmp); return
     }
 
     // ---- part 2: CDC scaling (same WAL, two pinned levels) ----
-    val hostCores = Runtime.getRuntime.availableProcessors()
     val lv = levels(hostCores)
     val canPin = new java.io.File("/usr/bin/taskset").exists()
     val runs: Seq[Rep] = lv match {
@@ -271,7 +282,7 @@ object Bench {
         val r = benchQueries.map { case (k, _) => "\"" + k + "\":" + f"${rev(k)}%.3f" }.mkString("{", ",", "}")
         s""""queries_fwd":$f,"queries_rev":$r,"""
       } else "") +
-      s""""queries_total_sec":${f"$totalQ%.1f"},"queries":$qs,"first_touch":$firstTouchJson,"sf":"$sfDir"}"""
+      s""""queries_total_sec":$totalJson,"queries":$qs,"first_touch":$firstTouchJson,"sf":"$sfDir"}"""
     val line = jsonLine(withReps = false) // tight: the driver tails stdout
     Files.createDirectories(Paths.get("BENCH"))
     Files.write(Paths.get("BENCH/BENCH.json"),
@@ -286,6 +297,8 @@ object Bench {
       else if (!canPin) "not computed: `taskset` is missing, so no level could be pinned"
       else "not computed: a level has no rep that was granted its cores"
     )(e => f"**$e%.3f** (target >= 0.8)")
+    val totalText =
+      total.fold(s"invalid ($cpus task threads on $hostCores granted cores)")(t => f"$t%.1f s")
     val md =
       s"""# BENCH — measured results (written by graft.Bench)
          |
@@ -314,7 +327,7 @@ object Bench {
          |
          |## Operator queries (${results.size} queries, $sfDir)
          |
-         |total ${f"$totalQ%.1f"} s. Per-query seconds = MIN of two passes
+         |total $totalText. Per-query seconds = MIN of two passes
          |(forward order, cache cleared, reversed order) so no query's
          |number carries a shared pipeline's first materialization;
          |queries whose cost depended on position are flagged

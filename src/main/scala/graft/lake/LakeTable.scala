@@ -133,9 +133,11 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     // REBUCKET, a pre-split base file spans several current buckets, and
     // if any of them is delta-bearing the whole coverage component must
     // resolve together — splitting it would hand a key's stale row to the
-    // no-resolve leg (duplicate/stale winners). With a single depth (no
-    // rebucket in history) this degenerates to exactly the old per-bucket
-    // partition.
+    // no-resolve leg (duplicate/stale winners). A merge's coarse delta
+    // also spans several buckets, but the merge writes one only for a
+    // batch that follows a dense one (CdcMerge.apply), so a sparse batch
+    // still dirties just the buckets it wrote to. With a single depth
+    // this degenerates to exactly the old per-bucket partition.
     val dirtySeed = files.iterator.filter(_.kind != FileEntry.BASE)
       .flatMap(m.coveredBuckets).toSet
     val dirtyBuckets = Manifest.closureOver(files, m.numBuckets, dirtySeed)
@@ -361,8 +363,10 @@ final class LakeTable private (val root: Path, spark: SparkSession) {
     * ([[FileEntry.writePids]], absent = current), and coverage arithmetic
     * (`bucket = hash mod depth`, depth | numBuckets) lets readers,
     * merges, and compactions treat an old-depth file as spanning its
-    * `factor` current-depth buckets. New writes route at the new depth
-    * immediately; old-depth files migrate lazily as ordinary compaction
+    * `factor` current-depth buckets. New writes route against the new
+    * bucket count immediately: a compaction at full depth, a merge at full
+    * depth or, when batches cover most buckets, at `CdcMerge.writeDepth`
+    * of it. Old-depth files migrate lazily as ordinary compaction
     * rewrites them (exactly [[BucketStore]]'s extendible-hash split,
     * lifted to the CDC table — the difference is the integer-factor
     * generality and that deltas are depth-stamped too).

@@ -30,10 +30,14 @@ final case class FileEntry(
     // hash splits grow the space lazily: a file written at depth P covers
     // partitions {bucket + j*P} of any later depth that is a MULTIPLE of
     // P, so carried files stay readable without a rewrite. Used by
-    // BucketStore compaction splits (power-of-two doubling) and by
+    // BucketStore compaction splits (power-of-two doubling), by
     // LakeTable REBUCKET (any integer factor — every historical depth
     // divides every later one by construction, which is all the coverage
-    // arithmetic needs). None = current depth.
+    // arithmetic needs), and by the CDC merge (CdcMerge.apply), which
+    // writes a micro-batch that follows a dense one (one that wrote to at
+    // least half of the buckets) at a divisor of the current depth, one
+    // file per writer task, so a delta may be COARSER than the files
+    // around it. None = current depth.
     writePids: Option[Int] = None,
     // base64 Spark-sketch bloom over xxhash64(conv_id), built by
     // LakeTable.buildBlooms (maintenance, never the write hot path):

@@ -1,6 +1,6 @@
 package graft.merge
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
@@ -10,8 +10,9 @@ import graft.model.Schemas._
 /** The CDC apply: one micro-batch of change events → MERGE INTO the lake
   * table, merge-on-read, LSN-gated and replay-idempotent: route the raw
   * batch by bucket in ONE exchange, dedup it by max LSN in a window whose
-  * sort is also the writer's sort, append it as per-bucket DELTA files,
-  * commit. O(batch) work per micro-batch, no join against the table.
+  * sort is also the writer's sort, append it as per-bucket DELTA files
+  * (one per writer task while batches cover most buckets), commit.
+  * O(batch) work per micro-batch, no join against the table.
   * Readers resolve per-key max LSN across base+deltas; [[Compactor]] folds
   * deltas back into base files when they pile up (amortized O(bucket)),
   * which leaves a bucket in the same base-only state a copy-on-write
@@ -38,7 +39,8 @@ object CdcMerge {
   /** `epoch` is the SOURCE epoch the caller presented; `effEpoch` the
     * internal epoch the files were actually recorded under (remapped to
     * stay monotone after fresh-checkpoint restarts) — manifest lookups by
-    * epoch must use `effEpoch`, not `epoch`.
+    * epoch must use `effEpoch`, not `epoch`. `affectedBuckets` counts the
+    * current-depth buckets the batch wrote rows to.
     */
   final case class Stats(
       epoch: Long, applied: Boolean, batchRows: Long,
@@ -64,6 +66,16 @@ object CdcMerge {
       .filter(col("_rn") === 1)
       .drop("_rn")
   }
+
+  /** The coarse bucket depth a dense micro-batch is routed at: the
+    * smallest divisor of `numBuckets` not below the session's shuffle
+    * `parallelism`, so that every writer task holds one bucket of that
+    * depth. `numBuckets` when the parallelism reaches it: one file per
+    * bucket. A divisor of `numBuckets` is all the coverage arithmetic
+    * ([[Manifest.covers]]) needs.
+    */
+  private[graft] def writeDepth(numBuckets: Int, parallelism: Int): Int =
+    (math.max(1, parallelism) until numBuckets).find(numBuckets % _ == 0).getOrElse(numBuckets)
 
   def apply(table: LakeTable, batch: DataFrame, epoch: Long,
             saltBuckets: Int = 8, mode: Mode = MergeOnRead,
@@ -111,45 +123,102 @@ object CdcMerge {
     val staging = table.core.stagingFor(s"epoch-$effEpoch")
 
     // O(batch): write deduped rows as per-bucket DELTA files, with ONE
-    // exchange. The RAW batch is routed by bucket; the max-LSN window
-    // runs after that exchange, partitioned by (bucket, key[, salt]) so
-    // the routing already satisfies it, and its sort (bucket, key, …)
-    // is also the writer's sort: one Exchange, one Sort. No map-side
-    // combine: at one WAL file per trigger a batch is one Parquet row
-    // group, so one split, and a combine would run on ONE task (~0.9 s
-    // of a 1.2 s stage at 256k events, 4 cores). At 4 files per trigger
-    // it would run on 4, yet shuffling raw rows still applied batches
-    // ~28% faster there (4 cores, 10 alternating pairs; CHANGES.md, "CDC
-    // apply in one exchange"). Writer tasks number the
-    // session's shuffle parallelism, not the buckets: each task costs
-    // ~34 ms fixed, against ~140 KB of output per bucket at 32 buckets.
-    // A cold bucket hashes to exactly one task, so it still gets one
-    // delta file per batch.
-    // ADAPTIVE salting: a bucket holding a hot conversation (Zipf head)
-    // would straggle in its one task — so buckets whose PREVIOUS batch
-    // share exceeded 2x fair share are split across `saltBuckets`
-    // routing keys on hash(turn_idx), each adding saltBuckets-1 writer
-    // tasks. Detection is free: per-bucket row counts of the last delta
-    // epoch live in the manifest (one-batch lag is fine for steady
-    // streams, and avoids a counting job + full-batch persist).
+    // exchange. Writer tasks number the session's shuffle parallelism,
+    // and each file costs a fixed writer set-up at write time and a fixed
+    // reader set-up in every later scan and compaction. So a DENSE batch,
+    // one that covers most buckets, is routed at the coarse depth
+    // d = [[writeDepth]]: partition id = hash(conv_id) mod d
+    // (`repartitionById`), each task holds exactly one depth-d bucket and
+    // writes exactly one file, stamped `writePids = Some(d)` when
+    // d < numBuckets. That is the coverage stamp REBUCKET writes: the file
+    // covers buckets {b + j*d} of the current depth, and readers, lookups,
+    // skipping, changelog reads and compaction resolve it through
+    // [[Manifest.covers]] as any older-depth file. At 32 buckets and 4
+    // shuffle partitions a 3,000-event batch writes 4 files instead of 32
+    // (CHANGES.md, "one delta file per writer task"). A SPARSE batch is
+    // routed at full depth, one file per bucket it touches: a coarse file
+    // of it would mark numBuckets/d buckets delta-bearing for each one it
+    // wrote to, so reads would resolve, and compaction rewrite, up to
+    // numBuckets/d times the buckets it changed. A batch counts as dense
+    // when the previous merge wrote rows to at least half of the buckets
+    // (its lineage entry, the first one at the current epoch, which each
+    // merge records exactly, below) and the optimizer's size estimate of
+    // this batch holds at least numBuckets/2 rows, so that a one-row SQL
+    // MERGE after a dense stream stays fine. The lag is one batch
+    // otherwise: a fresh table's first batch, the first after a REBUCKET
+    // by a factor above 2, and a large batch of a few conversations after
+    // a dense one take the other route once.
+    // A sparse batch takes the plan every batch took before coarse
+    // routing: hashed by bucket over the shuffle parallelism, each task
+    // writing one file per bucket it holds, so a cold bucket still gets
+    // exactly one delta file per batch. That is also the cheaper plan at
+    // full depth: a pass-through by bucket mod the parallelism needs a
+    // partition-id column in the shuffle and in the window's sort, which
+    // cost ~8% more CPU per drain of a 512k-event, 2-batch WAL into a
+    // 32-bucket table (4 cores, 14 interleaved drains a side).
+    // The max-LSN window runs after the exchange, partitioned by
+    // (bucket, key[, _salt or _pid]) so the routing already satisfies it,
+    // and its sort (bucket, key, …) is also the writer's sort: one
+    // Exchange, one Sort. No map-side combine: at one WAL file per trigger
+    // a batch is one Parquet row group, so one split, and a combine would
+    // run on ONE task (~0.9 s of a 1.2 s stage at 256k events, 4 cores).
+    // At 4 files per trigger it would run on 4, yet shuffling raw rows
+    // still applied batches ~28% faster there (4 cores, 10 alternating
+    // pairs; CHANGES.md, "CDC apply in one exchange").
+    // ADAPTIVE salting: a routed bucket holding a hot conversation (Zipf
+    // head) would straggle in its task, so a bucket whose PREVIOUS batch
+    // share exceeded 2x fair share (2/depth) is split across `saltBuckets`
+    // slots on hash(turn_idx), with saltBuckets-1 extra writer tasks. At
+    // full depth the slot joins the bucket in the hash key; at a coarse
+    // depth slot 0 stays on the bucket's own partition and slots 1.. get
+    // extra partition ids past d. Detection is free: per-bucket row counts
+    // of the last delta epoch live in the manifest (one-batch lag is fine
+    // for steady streams, and avoids a counting job + full-batch persist).
+    // Files whose depth the routing depth does not divide carry no
+    // per-bucket count at it and are left out.
+    val parallelism = spark.sessionState.conf.numShufflePartitions
+    val plannedRows =
+      batch.queryExecution.optimizedPlan.stats.sizeInBytes / math.max(1, batch.schema.defaultSize)
+    val dense = plannedRows * 2 >= m.numBuckets &&
+      m.lineage.find(_.epoch == m.lastEpoch).exists(_.upsertedBuckets.size * 2 >= m.numBuckets)
+    val depth = if (dense) writeDepth(m.numBuckets, parallelism) else m.numBuckets
     val lastDeltas = m.files.filter(f =>
-      f.kind == FileEntry.DELTA && f.epoch == m.lastEpoch)
-    val counts = lastDeltas.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum).toMap
-    val fair = math.max(1L, counts.values.sum / math.max(1, m.numBuckets))
-    val hot = if (saltBuckets <= 1) Nil else counts.filter(_._2 > 2 * fair).keys.toSeq
-    val keyed = batch.withColumn("bucket", table.bucketExpr(m.numBuckets))
-    // No hot bucket → route by bucket alone: a literal-0 salt would be
-    // folded out of the window partition, which the routing would then
-    // no longer satisfy (a second exchange).
+      f.kind == FileEntry.DELTA && f.epoch == m.lastEpoch && m.fileDepth(f) % depth == 0)
+    val counts = lastDeltas.groupBy(_.bucket % depth).view.mapValues(_.map(_.rows).sum).toMap
+    val fair = math.max(1L, counts.values.sum / depth)
+    val hot = if (saltBuckets <= 1) Nil else counts.filter(_._2 > 2 * fair).keys.toSeq.sorted
+    val keyed = batch.withColumn("bucket", table.bucketExpr(depth))
+    val salt = pmod(xxhash64(col("turn_idx")), lit(saltBuckets.toLong))
+    val extra = hot.size * (saltBuckets - 1)
+    // No hot bucket → route by bucket alone: a constant salt or partition
+    // id would be folded out of the window partition, which the routing
+    // would then no longer satisfy (a second exchange).
     val (routed, route) =
-      if (hot.isEmpty) (keyed, Seq("bucket"))
-      else (keyed.withColumn("_salt", when(col("bucket").isin(hot: _*),
-        pmod(xxhash64(col("turn_idx")), lit(saltBuckets.toLong))).otherwise(lit(0L))),
-        Seq("bucket", "_salt"))
-    val nParts = math.min(
-      spark.sessionState.conf.numShufflePartitions + hot.size * (saltBuckets - 1), 4096)
-    val deduped = dedupMaxLsn(routed.repartition(nParts, route.map(col): _*),
-      ("bucket" +: KEY_COLS) ++ route.tail)
+      if (depth == m.numBuckets) {
+        // full depth: hashed by bucket (and a hot bucket's salt) over the
+        // shuffle parallelism, several buckets per writer task
+        val n = math.min(parallelism + extra, 4096)
+        if (hot.isEmpty) (keyed.repartition(n, col("bucket")), None)
+        else (keyed.withColumn("_salt", when(col("bucket").isin(hot: _*), salt).otherwise(lit(0L)))
+          .repartition(n, col("bucket"), col("_salt")), Some("_salt"))
+      } else {
+        // coarse: the bucket is the partition id, one per writer task
+        if (hot.isEmpty) (keyed.repartitionById(depth, col("bucket")), None)
+        else {
+          // slot s > 0 of the i-th hot bucket → partition d + i*(saltBuckets-1) + s-1
+          val pid = hot.zipWithIndex.foldLeft(col("bucket")) { case (other, (b, i)) =>
+            when(col("bucket") === b && salt > 0,
+              (salt + (depth - 1 + i * (saltBuckets - 1))).cast(IntegerType)).otherwise(other)
+          }
+          (keyed.withColumn("_pid", pid).repartitionById(depth + extra, col("_pid")), Some("_pid"))
+        }
+      }
+    // the current-depth buckets a coarse write writes rows to, observed in
+    // the write's own tasks (no extra job); at full depth its files name them
+    val wroteTo = Option.when(depth < m.numBuckets)(Observation())
+    val deduped0 = dedupMaxLsn(routed, ("bucket" +: KEY_COLS) ++ route)
+    val deduped = wroteTo.fold(deduped0)(o =>
+      deduped0.observe(o, collect_set(table.bucketExpr(m.numBuckets)).as("buckets")))
     // aligned to a target that keeps the routed `bucket` column: a
     // recomputed one would be a new attribute, and the plan would sort
     // again for the writer. Sorted within writer tasks (the window's
@@ -163,7 +232,15 @@ object CdcMerge {
       .sortWithinPartitions("bucket", "conv_id", "turn_idx")
       .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
     val newFiles = table.adoptStaged(staging, effEpoch, schemaId2, FileEntry.DELTA, physTarget)
-    val affected = newFiles.map(_.bucket).toSet
+      .map(f => if (depth < m.numBuckets) f.copy(writePids = Some(depth)) else f)
+    // observed metrics arrive through the listener bus; should they miss
+    // a short wait, every bucket the files cover stands in
+    val upserted: Seq[Int] =
+      if (newFiles.isEmpty) Nil
+      else wroteTo.flatMap(o => scala.util.Try(scala.concurrent.Await.result(o.future,
+          scala.concurrent.duration.Duration(100, "ms"))).toOption)
+        .map(_.getSeq[Int](0))
+        .getOrElse(newFiles.flatMap(m.coveredBuckets)).distinct.sorted
 
     // Commit with REBASE-on-conflict: an async compaction may win the CAS
     // between our manifest read and commit. A delta append is always
@@ -173,14 +250,19 @@ object CdcMerge {
     var base = m
     var attempt = 0
     while (true) {
-      // rebasing over a concurrent REBUCKET: our files were routed at the
-      // OLD depth — stamp them so coverage reads them correctly in the
-      // new space (the rebucket stamped only the files in ITS manifest;
-      // ours were in flight)
+      // rebasing over a concurrent REBUCKET: files routed at the OLD full
+      // depth are stamped so coverage reads them correctly in the new
+      // space (the rebucket stamped only the files in ITS manifest; ours
+      // were in flight). Coarser files carry their depth already.
       val newFilesNow =
         if (base.numBuckets != m.numBuckets)
           newFiles.map(f => if (f.writePids.isEmpty) f.copy(writePids = Some(m.numBuckets)) else f)
         else newFiles
+      // re-indexed when a REBUCKET landed in between: an old bucket b
+      // spans {b + j*m.numBuckets} of the new space
+      val affected =
+        if (base.numBuckets == m.numBuckets) upserted
+        else upserted.flatMap(b => b until base.numBuckets by m.numBuckets).sorted
       require(base.schemas == m.schemas && base.currentSchemaId == m.currentSchemaId,
         "concurrent schema change during merge")
       // STRICT < on rebase: a concurrent commit that already recorded
@@ -205,7 +287,7 @@ object CdcMerge {
         totalRows = allFiles.map(_.rows).sum, // physical rows (deltas may shadow)
         maxLsn = batchMaxLsn,
         lineage = (base.lineage :+ CommitInfo(base.version + 1, effEpoch,
-          newFiles.map(_.rows).sum, affected.toSeq.sorted, batchMaxLsn, wallMs,
+          newFiles.map(_.rows).sum, affected, batchMaxLsn, wallMs,
           System.currentTimeMillis())).takeRight(1000))
       try {
         table.commit(m2, base.version)
@@ -307,12 +389,19 @@ object Compactor {
     if (due.isEmpty) None else compact(table, due.toSet, dropTombstones)
   }
 
-  /** Buckets whose deltas span >= `deltaThreshold` distinct epochs. */
-  def dueBuckets(table: LakeTable, deltaThreshold: Int): Seq[Int] =
-    table.manifest.files.groupBy(_.bucket).collect {
-      case (b, fs) if fs.filter(_.kind == FileEntry.DELTA)
-        .map(_.epoch).distinct.size >= deltaThreshold => b
-    }.toSeq.sorted
+  /** Current-depth buckets covered by deltas of >= `deltaThreshold`
+    * distinct epochs. Counted through coverage, not the file's own bucket
+    * id: a merge's delta of depth d < numBuckets, and any file older than
+    * a REBUCKET, covers several current buckets.
+    */
+  def dueBuckets(table: LakeTable, deltaThreshold: Int): Seq[Int] = {
+    val m = table.manifest
+    m.files.filter(_.kind == FileEntry.DELTA)
+      .flatMap(f => m.coveredBuckets(f).map(_ -> f.epoch))
+      .groupBy(_._1).collect {
+        case (b, es) if es.map(_._2).distinct.size >= deltaThreshold => b
+      }.toSeq.sorted
+  }
 
   /** Rewrite `buckets` from a PINNED manifest into per-key-resolved base
     * files in one Spark write with ONE exchange and ONE sort: the pinned
@@ -362,11 +451,15 @@ object Compactor {
     val t0 = System.nanoTime()
     val spark = table.sparkSession
     val m0 = table.manifest
-    // closure over shared-file coverage (identity without a REBUCKET in
-    // history): a pre-split file spans several current buckets, and its
+    // closure over shared-file coverage (identity when every file is at
+    // the current depth): a pre-split file, or a merge's delta routed at a
+    // coarser depth, spans several current buckets, and its
     // replacement-by-path below means its sibling buckets rewrite too. The
-    // rewrite region is fixed at the PIN's depth — post-pin files are
-    // never coarser, so the closed region cannot grow under us
+    // rewrite region is fixed at the PIN: a coarse delta that lands after
+    // the pin may cover buckets outside it, and it is carried WHOLE (never
+    // split or folded), which per-key max-LSN resolution keeps exact —
+    // inside the region it rides on the rewritten bases, outside it on the
+    // untouched files, as any post-pin delta does
     val closed = m0.bucketClosure(buckets)
     val pinned = m0.filesForBuckets(closed)
     val inputFiles = pinned.map(_.path).toSet
@@ -420,9 +513,10 @@ object Compactor {
       val cur = table.manifest
       // the rewrite region, re-indexed under `cur`: f (depth d, bucket b)
       // intersects {t : t mod m0.numBuckets ∈ closed} iff some closed
-      // bucket shares b's residue at gcd(d, m0.numBuckets) — depths form
-      // a divisibility chain, so the gcd is simply the coarser of the two
-      // (this stays correct across a concurrent REBUCKET)
+      // bucket shares b's residue at gcd(d, m0.numBuckets). The test holds
+      // for any depths that divide numBuckets, which need not divide one
+      // another (a merge's write depth follows its session's shuffle
+      // parallelism), and it stays correct across a concurrent REBUCKET
       def inRegion(f: FileEntry): Boolean = {
         val g = java.math.BigInteger.valueOf(cur.fileDepth(f))
           .gcd(java.math.BigInteger.valueOf(m0.numBuckets)).intValueExact()
@@ -481,7 +575,7 @@ object Compactor {
              maxRecordsPerFile: Long = 0L,
              dropTombstones: Boolean = false): Option[Result] = {
     val m = table.manifest
-    val bs = buckets.getOrElse(m.files.map(_.bucket).toSet)
+    val bs = buckets.getOrElse(m.files.flatMap(m.coveredBuckets).toSet)
     val mrf =
       if (maxRecordsPerFile > 0L) maxRecordsPerFile
       else math.max(1L, m.totalRows / math.max(1, bs.size) / 8L)

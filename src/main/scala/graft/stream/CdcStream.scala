@@ -162,7 +162,9 @@ object CdcStream {
         }
         // per-partition lineage feed (north-star: lineage via the
         // streaming loop): which buckets this epoch touched, with rows +
-        // max LSN per file, appended as JSON lines next to the checkpoint
+        // max LSN + write depth per file (a delta of depth d covers the
+        // current buckets {bucket + j*d}), appended as JSON lines next to
+        // the checkpoint
         if (stats.applied) {
           val m = table.manifest
           // files are recorded under the REMAPPED internal epoch (monotone
@@ -172,7 +174,8 @@ object CdcStream {
           val files = m.files.filter(f =>
             f.epoch == stats.effEpoch && f.kind == graft.lake.FileEntry.DELTA)
           val parts = files.map(f =>
-            s"""{"bucket":${f.bucket},"rows":${f.rows},"maxLsn":${f.maxLsn},"path":"${f.path}"}""")
+            s"""{"bucket":${f.bucket},"depth":${m.fileDepth(f)},"rows":${f.rows},""" +
+              s""""maxLsn":${f.maxLsn},"path":"${f.path}"}""")
             .mkString("[", ",", "]")
           val line = s"""{"epoch":$epoch,"effEpoch":${stats.effEpoch},"tableVersion":${m.version},""" +
             s""""batchRows":${stats.batchRows},"wallMs":${stats.wallMs},"partitions":$parts}""" + "\n"

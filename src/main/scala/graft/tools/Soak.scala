@@ -88,7 +88,7 @@ object Soak {
         try {
           val m = table.manifest
           val deltas = m.files.filter(_.kind == FileEntry.DELTA)
-          val perBucket = deltas.groupBy(_.bucket).view.mapValues(_.size)
+          val perBucket = deltas.flatMap(m.coveredBuckets).groupBy(identity).view.mapValues(_.size)
           val maxPb = if (perBucket.isEmpty) 0 else perBucket.values.max
           val meanPb = if (perBucket.isEmpty) 0.0
             else perBucket.values.sum.toDouble / m.numBuckets
@@ -143,7 +143,8 @@ object Soak {
       else 31 - Integer.numberOfLeadingZeros(endState.numBuckets / 32)
     val endDepths = endState.files.map(endState.fileDepth).distinct.sorted.mkString(",")
     val endDeltaEpochs = endState.files.filter(_.kind == FileEntry.DELTA)
-      .groupBy(_.bucket).view.mapValues(_.map(_.epoch).distinct.size)
+      .flatMap(f => endState.coveredBuckets(f).map(_ -> f.epoch))
+      .groupBy(_._1).view.mapValues(_.map(_._2).distinct.size)
     val endMaxDepth = if (endDeltaEpochs.isEmpty) 0 else endDeltaEpochs.values.max
 
     val seriesMd = active.grouped(math.max(1, active.size / 24)).map(_.head).map(s =>

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.Bench.Rep
 
-/** The bench's CDC level rule and invalid rule, with no Spark session:
+/** The bench's CDC level rule and its invalid rules, with no Spark session:
   * levels come from the cores the host grants, and no efficiency is
   * computed from a level that was not granted its cores.
   */
@@ -35,5 +35,12 @@ class BenchLevelsSpec extends AnyFunSuite {
     val failed = Rep(level = 4, cores = 0, eventsPerSec = 0, wallSec = 0, calibMops = 0)
     assert(Bench.best(Seq(lo, failed, hi), 4) == Some(hi))
     assert(Bench.best(Seq(lo, failed), 4).isEmpty)
+  }
+
+  test("part 1's total is invalid when the JVM was granted fewer cores than its local[cpus]") {
+    assert(Bench.queriesTotal(12.34, cpus = 4, granted = 2).isEmpty)
+    assert(Bench.queriesTotal(12.34, cpus = 4, granted = 3).isEmpty)
+    assert(Bench.queriesTotal(12.34, cpus = 4, granted = 4).contains(12.34))
+    assert(Bench.queriesTotal(12.34, cpus = 4, granted = 8).contains(12.34))
   }
 }

@@ -194,6 +194,16 @@ class CdcEngineSpec extends SparkSpec {
       val q1 = CdcStream.start(spark, s"$dir/wal", table, s"$dir/cp", maxFilesPerTrigger = 2)
       q1.awaitTermination()
       assertMatchesOracle(table, cfg)
+      // the lineage feed names each file's write depth: the first batch
+      // has no density history and is routed at the full depth of 8; it
+      // covers every bucket, so the next are routed at depth 4 in the
+      // 4-partition test session
+      val lineage = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/cp/lineage.jsonl")), "UTF-8").split("\n").filter(_.nonEmpty)
+      val depths = lineage.map(l => "\"depth\":(\\d+)".r.findAllMatchIn(l).map(_.group(1).toInt).toSeq)
+      assert(depths.size == 3 && depths.head == Seq.fill(8)(8) &&
+        depths.tail.forall(d => d.size >= 4 && d.forall(_ == 4)),
+        s"lineage depths per batch: ${depths.map(_.mkString(",")).mkString(" | ")}")
       // restart over same checkpoint: nothing new → no state change
       val check = table.contentChecksum()
       CdcStream.runToCompletion(spark, s"$dir/wal", table, s"$dir/cp")

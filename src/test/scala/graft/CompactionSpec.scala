@@ -139,6 +139,38 @@ class CompactionSpec extends SparkSpec {
     } finally rmrf(dir)
   }
 
+  test("a coarse delta landing while part of its coverage is compacted is carried whole") {
+    val dir = tmpDir("cc5")
+    val cfg = WalGen.Config(numEvents = 8000, numConvs = 100)
+    try {
+      // 32 buckets in the 4-partition test session: merges write depth-4
+      // deltas, each covering 8 current buckets
+      val table = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets = 32)
+      CdcMerge.apply(table, WalGen.events(spark, cfg, 0, 4000).toDF(), 0L)
+      Compactor.compact(table, (0 until 32).toSet)
+      assert(table.manifest.files.forall(f => f.kind == FileEntry.BASE && f.writePids.isEmpty))
+      // compact buckets {0, 1} (pinned: full-depth bases only) while the
+      // next batch commits, its depth-4 deltas covering {0, 4, ..} and
+      // {1, 5, ..} — part of them inside the rewrite region, part outside
+      var injected = Seq.empty[FileEntry]
+      val r = Compactor.compact(table, Set(0, 1), preCommit = () => {
+        assert(CdcMerge.apply(table, WalGen.events(spark, cfg, 4000, 8000).toDF(), 1L).applied)
+        injected = table.manifest.files.filter(_.kind == FileEntry.DELTA)
+        ()
+      })
+      assert(r.map(_.compactedBuckets).contains(Seq(0, 1)),
+        s"compaction must rebase over a coarse post-pin delta, got $r")
+      assert(injected.size == 4 && injected.forall(_.writePids.contains(4)))
+      val m = table.manifest
+      assert(injected.forall(m.files.contains), "the coarse delta must be carried whole")
+      oracleCheck(table, cfg)
+      // the next compaction folds it at full depth
+      assert(Compactor.compactIfNeeded(table, deltaThreshold = 1).isDefined)
+      assert(table.manifest.files.forall(f => f.kind == FileEntry.BASE && f.writePids.isEmpty))
+      oracleCheck(table, cfg)
+    } finally rmrf(dir)
+  }
+
   test("ZORDER-shaped compaction racing a live append carries it; an abandoned one leaves no orphan file") {
     val dir = tmpDir("cc4")
     val cfg = WalGen.Config(numEvents = 8000, numConvs = 100)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, ShufflePartitionIdPassThrough}
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -65,14 +66,48 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  /** The partitioning of the apply's exchange, asserting it is the only one. */
+  private def routingOf(plan: SparkPlan, shown: String): Partitioning = {
+    val exchanges = Aqe.collect(plan) { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1, s"expected exactly one exchange, $shown")
+    exchanges.head.outputPartitioning
+  }
+
+  /** The apply's only exchange is the partition-id pass-through into
+    * `parts` partitions, keyed by the column `by`.
+    */
+  private def assertPassThrough(plan: SparkPlan, parts: Int, by: String, shown: String): Unit =
+    routingOf(plan, shown) match {
+      case ShufflePartitionIdPassThrough(pid, n) =>
+        assert(n == parts, s"expected $parts writer partitions, $shown")
+        assert(pid.child.references.map(_.name).toSeq == Seq(by),
+          s"expected partition ids from `$by`, $shown")
+      case other => fail(s"expected the partition-id pass-through, got $other, $shown")
+    }
+
+  /** The apply's only exchange hashes the columns `by` into `parts`
+    * partitions.
+    */
+  private def assertHashed(plan: SparkPlan, parts: Int, by: Seq[String], shown: String): Unit =
+    routingOf(plan, shown) match {
+      case HashPartitioning(exprs, n) =>
+        assert(n == parts, s"expected $parts writer partitions, $shown")
+        assert(exprs.flatMap(_.references.map(_.name)) == by, s"expected hashing by $by, $shown")
+      case other => fail(s"expected hash partitioning, got $other, $shown")
+    }
+
   test("merge-on-read apply shuffles the raw batch once and dedups after the exchange") {
     val dir = tmpDir("planshape-mor")
     try {
+      // 8 buckets in the 4-partition test session: the first batch has no
+      // density history, so it is routed at full depth, hashed by bucket
+      // over 4 writer tasks; it covers every bucket, so the second is
+      // routed at depth 4
       val t = graft.lake.LakeTable.create(spark, s"$dir/t",
         graft.model.Schemas.transcript, numBuckets = 8)
       val ts = new java.sql.Timestamp(1700000000000L)
       // one conversation takes ~60% of the events, so the first batch's
-      // per-bucket stats flag its bucket as hot for the second batch
+      // per-bucket stats flag its depth-4 bucket as hot for the second batch
       def batch(lsnBase: Long) = spark.range(4000).select(
         lit("U").as("op"), (col("id") + lsnBase).as("lsn"),
         when(col("id") % 10 < 6, "conv-hot")
@@ -80,18 +115,110 @@ class PlanShapeSpec extends SparkSpec {
         pmod(col("id"), lit(1500)).cast("int").as("turn_idx"),
         lit("user").as("role"), lit("x").as("text"),
         lit(null).cast("string").as("tool"), lit(ts).as("ts"))
-      for ((epoch, salted) <- Seq(0L -> false, 1L -> true)) {
+      val hotBucket = t.bucketOf("conv-hot", 4)
+      val touched = ("conv-hot" +: (0 until 40).map(i => s"conv$i")).map(t.bucketOf(_, 8)).toSet
+      assert(touched.size * 2 >= 8)
+      // unsalted: hashed by bucket into 4 writer partitions; salted: one
+      // partition per depth-4 bucket, and the hot bucket's 3 extra salt
+      // slots get ids 4..6
+      for ((epoch, depth) <- Seq((0L, 8), (1L, 4))) {
         val plan = writePlanOf(CdcMerge.apply(t, batch(epoch * 100000), epoch, saltBuckets = 4))
-        val exchanges = Aqe.collect(plan) { case e: ShuffleExchangeLike => e }
         val aggs = Aqe.collect(plan) { case a: BaseAggregateExec => a }
         val sorts = Aqe.collect(plan) { case s: SortExec => s }
         val shown = s"epoch $epoch:\n${plan.treeString.take(4000)}"
-        assert(exchanges.size == 1, s"expected exactly one exchange, $shown")
+        if (epoch == 0L) assertHashed(plan, 4, Seq("bucket"), shown)
+        else assertPassThrough(plan, 7, "_pid", shown)
         assert(aggs.isEmpty, s"dedup must not aggregate, $shown")
         assert(sorts.size == 1, s"the window's sort must serve the writer, $shown")
-        assert(exchanges.head.outputPartitioning.toString.contains("_salt") == salted,
-          s"salted routing expected only once a bucket is hot, $shown")
+        // one file per bucket of the routing depth, the hot one split 4 ways
+        val m = t.manifest
+        val files = m.files.filter(_.epoch == epoch)
+        assert(files.forall(m.fileDepth(_) == depth), s"epoch $epoch: ${files.map(_.writePids)}")
+        val perBucket = files.groupBy(_.bucket).view.mapValues(_.size).toMap
+        val expected =
+          if (epoch == 0L) touched.map(_ -> 1).toMap
+          else (0 until 4).map(b => b -> (if (b == hotBucket) 4 else 1)).toMap
+        assert(perBucket == expected, s"epoch $epoch: files per depth-$depth bucket $perBucket")
       }
+    } finally rmrf(dir)
+  }
+
+  test("merge-on-read apply writes one delta file per writer task: 4, not 32, on a 32-bucket table") {
+    val dir = tmpDir("planshape-depth")
+    try {
+      val cfg = graft.gen.WalGen.Config(numEvents = 6000, numConvs = 300)
+      val t = graft.lake.LakeTable.create(spark, s"$dir/t",
+        graft.model.Schemas.transcript, numBuckets = 32)
+      def batch(k: Long) = graft.gen.WalGen.events(spark, cfg, k * 3000, (k + 1) * 3000).toDF()
+      // the first batch has no density history: one file per bucket
+      CdcMerge.apply(t, batch(0), 0L)
+      val first = t.manifest.files
+      assert(first.size == 32 && first.forall(_.writePids.isEmpty), first.map(f => (f.bucket, f.writePids)))
+      assert(t.manifest.lineage.last.upsertedBuckets == (0 until 32))
+      // it covered every bucket, so the next is routed at depth 4
+      val plan = writePlanOf(CdcMerge.apply(t, batch(1), 1L))
+      assertPassThrough(plan, 4, "bucket", plan.treeString.take(4000))
+      val m = t.manifest
+      val added = m.files.filter(_.epoch == 1L)
+      assert(added.size == 4, s"expected 4 delta files, got ${added.size}")
+      assert(added.forall(f => f.kind == graft.lake.FileEntry.DELTA && f.writePids.contains(4)))
+      // together they cover every current bucket exactly once
+      assert(added.flatMap(m.coveredBuckets).sorted == (0 until 32))
+    } finally rmrf(dir)
+  }
+
+  test("a sparse batch is routed at full depth, one file per bucket it writes to") {
+    val dir = tmpDir("planshape-sparse")
+    try {
+      val cfg = graft.gen.WalGen.Config(numEvents = 12000, numConvs = 300)
+      val t = graft.lake.LakeTable.create(spark, s"$dir/t",
+        graft.model.Schemas.transcript, numBuckets = 32)
+      def dense(k: Long) = graft.gen.WalGen.events(spark, cfg, k * 3000, (k + 1) * 3000).toDF()
+      val ts = new java.sql.Timestamp(1700000000000L)
+      // `turns` turns of one conversation, as a local relation (what a SQL
+      // MERGE ... USING (VALUES ...) gives): a literal key would be folded
+      // out of the window's partition
+      def solo(lsn: Long, turns: Int) = spark.createDataFrame(java.util.List.of(
+        (0 until turns).map(i => org.apache.spark.sql.Row("U", lsn + i, "conv-solo", i,
+          "user", "x", null, ts)): _*), graft.model.Schemas.changeEvent)
+      val soloBucket = t.bucketOf("conv-solo", 32)
+      def depthsOf(epoch: Long) = {
+        val m = t.manifest
+        m.files.filter(_.epoch == epoch).map(f => (f.bucket, m.fileDepth(f)))
+      }
+      CdcMerge.apply(t, dense(0), 0L)
+      CdcMerge.apply(t, dense(1), 1L)
+      assert(depthsOf(1L).map(_._2).distinct == Seq(4))
+      // epoch 2 follows a dense batch, but one row cannot cover half of
+      // the buckets: full depth, one file, which marks only its own bucket
+      // delta-bearing
+      val plan = writePlanOf(CdcMerge.apply(t, solo(100000L, 1), 2L))
+      assertHashed(plan, 4, Seq("bucket"), plan.treeString.take(4000))
+      assert(depthsOf(2L) == Seq((soloBucket, 32)))
+      assert(t.manifest.lineage.last.upsertedBuckets == Seq(soloBucket))
+      // epoch 3 follows a batch that wrote to 1 bucket of 32: full depth,
+      // though it covers every bucket; epoch 4 follows it at depth 4
+      CdcMerge.apply(t, dense(2), 3L)
+      assert(depthsOf(3L).map(_._1).sorted == (0 until 32) && depthsOf(3L).forall(_._2 == 32))
+      CdcMerge.apply(t, dense(3), 4L)
+      assert(depthsOf(4L).map(_._2).distinct == Seq(4))
+      // 40 rows of one conversation after a dense batch: the one-batch lag
+      // routes them at depth 4, and the lineage records the one bucket
+      // they wrote to, so the next such batch is routed at full depth
+      val s5 = CdcMerge.apply(t, solo(200000L, 40), 5L)
+      assert(s5.affectedBuckets == 1 && depthsOf(5L) == Seq((soloBucket % 4, 4)))
+      CdcMerge.apply(t, solo(300000L, 40), 6L)
+      assert(depthsOf(6L) == Seq((soloBucket, 32)))
+      // epoch 6's one file held all of its rows, so that bucket is hot for
+      // epoch 7, still at full depth: its salt joins the bucket in the
+      // hash key, over 7 extra writer partitions, and it splits into
+      // several full-depth files
+      val plan7 = writePlanOf(CdcMerge.apply(t, solo(400000L, 40), 7L))
+      val shown7 = plan7.treeString.take(4000)
+      assertHashed(plan7, 4 + 7, Seq("bucket", "_salt"), shown7)
+      assert(Aqe.collect(plan7) { case s: SortExec => s }.size == 1, shown7)
+      assert(depthsOf(7L).size > 1 && depthsOf(7L).forall(_ == (soloBucket, 32)), depthsOf(7L))
+      assert(t.snapshot().filter(col("conv_id") === "conv-solo").count() == 40)
     } finally rmrf(dir)
   }
 

@@ -71,8 +71,10 @@ class ResilienceSpec extends SparkSpec {
   }
 
   test("adaptive salting splits a hot conversation's bucket across writers") {
-    // 32 buckets: fewer writer tasks (the session's 4 shuffle partitions)
-    // than buckets, so each task writes several buckets
+    // 32 buckets: the batch's 21 conversations reach 13 of them, a sparse
+    // batch, so the second batch is routed at full depth over the
+    // session's 4 shuffle partitions and each writer task writes several
+    // buckets. 4 buckets: the depth the parallelism fills
     for (numBuckets <- Seq(4, 32)) saltingSplitsHotBucket(numBuckets)
   }
 
@@ -80,6 +82,10 @@ class ResilienceSpec extends SparkSpec {
     val dir = tmpDir("hot")
     try {
       val table = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets)
+      val convs = "conv-hot" +: (6 until 50 by 10).flatMap(t => t until t + 4).map(i => s"conv$i")
+      val touched = convs.map(table.bucketOf(_, numBuckets)).toSet
+      assert(convs.size == 21 && touched.size == Map(4 -> 4, 32 -> 13)(numBuckets))
+      val depth = numBuckets // the second batch's routing depth, as above
       val ts = new java.sql.Timestamp(1700000000000L)
       // one conversation takes ~60% of all events
       def batchDf(lsnBase: Long) = spark.range(10000).select(
@@ -90,24 +96,35 @@ class ResilienceSpec extends SparkSpec {
         pmod(col("id") * 7919, lit(100000)).cast("int").as("turn_idx"),
         lit("user").as("role"), lit("x").as("text"),
         lit(null).cast("string").as("tool"), lit(ts).as("ts"))
-      // batch 0: no prior stats -> no salting
+      // batch 0: no prior stats -> no salting, and no density history ->
+      // full depth
       CdcMerge.apply(table, batchDf(0), 0L, saltBuckets = 4)
+      // the hot conversation's bucket at the second batch's write depth
       val hotBucket = spark.range(1).select(
-        pmod(xxhash64(lit("conv-hot")), lit(numBuckets.toLong)).cast("int")).collect()(0).getInt(0)
-      def filesPerBucket(epoch: Long) = table.manifest.files.filter(_.epoch == epoch)
-        .groupBy(_.bucket).view.mapValues(_.size).toMap
-      val files0 = filesPerBucket(0)
-      assert(files0.values.forall(_ == 1),
+        pmod(xxhash64(lit("conv-hot")), lit(depth.toLong)).cast("int")).collect()(0).getInt(0)
+      def filesPerBucket(epoch: Long, depth: Int) = {
+        val m = table.manifest
+        val fs = m.files.filter(_.epoch == epoch)
+        assert(fs.forall(m.fileDepth(_) == depth),
+          s"[$numBuckets buckets] epoch $epoch files not at depth $depth: ${fs.map(_.writePids)}")
+        fs.groupBy(_.bucket).view.mapValues(_.size).toMap
+      }
+      val files0 = filesPerBucket(0, numBuckets)
+      assert(files0.keySet == touched && files0.values.forall(_ == 1),
         s"[$numBuckets buckets] first batch should be unsalted, one file per bucket: $files0")
       // batch 1: previous-batch stats flag the hot bucket -> salted writers
       CdcMerge.apply(table, batchDf(1000000), 1L, saltBuckets = 4)
-      val files1 = filesPerBucket(1)
+      val files1 = filesPerBucket(1, depth)
       assert(files1(hotBucket) > 1,
         s"[$numBuckets buckets] hot bucket should split across salted writers: $files1")
       // cold buckets stay single-file
       val cold1 = files1 - hotBucket
       assert(cold1.nonEmpty && cold1.values.forall(_ == 1),
         s"[$numBuckets buckets] cold buckets salted unnecessarily: $cold1")
+      // the salted files are the ones a lookup of the hot conversation reads
+      val m = table.manifest
+      val hotFiles = m.files.filter(f => f.epoch == 1L && f.bucket == hotBucket).map(_.path).toSet
+      assert(hotFiles.subsetOf(table.filesForConversation("conv-hot").map(_.path).toSet))
     } finally rmrf(dir)
   }
 }

@@ -75,9 +75,18 @@ class LakeRebucketSpec extends graft.SparkSpec {
         ("U", 10L, "conv-3", 0, "v2-conv-3"),
         ("D", 11L, "conv-7", 0, ""),
         ("I", 12L, "conv-99", 0, "v1-conv-99")), 1L)
+      // routed in the NEW space at its full depth of 8: the batch before
+      // wrote to 2 buckets, which reads as sparse against 8, and each delta
+      // holds exactly the conversations of its depth-8 bucket
       val newDeltas = table.manifest.files.filter(_.kind == FileEntry.DELTA)
       assert(newDeltas.nonEmpty && newDeltas.forall(_.writePids.isEmpty),
-        "post-rebucket deltas are current-depth files")
+        s"post-rebucket deltas are current-depth files, got ${newDeltas.map(_.writePids)}")
+      newDeltas.foreach { f =>
+        val held = spark.read.parquet(table.root.resolve(f.path).toString)
+          .select("conv_id").distinct().collect().map(_.getString(0))
+        assert(held.nonEmpty && held.forall(table.bucketOf(_, 8) == f.bucket),
+          s"${f.path} (depth-8 bucket ${f.bucket}) holds ${held.mkString(",")}")
+      }
 
       val got = state(table)
       assert(got(("conv-3", 0)) == "v2-conv-3", "new-depth delta must shadow old-depth base")
@@ -124,6 +133,33 @@ class LakeRebucketSpec extends graft.SparkSpec {
       assert(table.manifest.files.forall(f =>
         f.kind == FileEntry.BASE && f.writePids.isEmpty))
       assert(state(table) == before)
+    } finally rmrf(dir)
+  }
+
+  test("compaction is due per current bucket across write depths") {
+    val dir = tmpDir("rb-due")
+    try {
+      val table = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets = 2)
+      val convs = (0 until 24).map(i => s"conv-$i")
+      // epoch 0: depth-2 deltas, stamped by the rebucket to 4
+      CdcMerge.apply(table, batch(convs.map(c => ("I", 1L, c, 0, s"v1-$c")): _*), 0L)
+      table.rebucket(2)
+      // epoch 1: one conversation of current bucket 3, at depth 4
+      val c3 = convs.find(table.bucketOf(_, 4) == 3).get
+      CdcMerge.apply(table, batch(("U", 10L, c3, 0, s"v2-$c3")), 1L)
+      val m = table.manifest
+      // the depth-2 delta of bucket 1 and the depth-4 delta of bucket 3
+      // both cover bucket 3: two epochs there, one everywhere else
+      assert(m.files.exists(f => f.epoch == 0L && f.bucket == 1 && f.writePids.contains(2)))
+      assert(m.files.exists(f => f.epoch == 1L && f.bucket == 3 && m.fileDepth(f) == 4))
+      assert(Compactor.dueBuckets(table, 2) == Seq(3))
+      assert(Compactor.dueBuckets(table, 1) == (0 until 4))
+      val before = state(table)
+      val r = Compactor.compactIfNeeded(table, deltaThreshold = 2).get
+      assert(r.compactedBuckets.contains(3))
+      assert(Compactor.dueBuckets(table, 2).isEmpty)
+      assert(state(table) == before)
+      assert(before((c3, 0)) == s"v2-$c3")
     } finally rmrf(dir)
   }
 
